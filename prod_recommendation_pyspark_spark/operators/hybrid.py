@@ -55,6 +55,7 @@ from prod_recommendation_pyspark_spark.operators.similarity import (
     probe_dim,
     random_hyperplane_tables,
 )
+from prod_recommendation_pyspark_spark.sources.readers import published_manifest
 
 DEFAULT_W_HOPS = 0.399  # search_ranking_peers.py:608
 DEFAULT_W_HAVS = 0.001  # search_ranking_peers.py:609
@@ -1093,19 +1094,13 @@ def _window_fetch(
     window: int,
     left_id: str,
     right_id: str,
-    broadcast_probes: bool = False,
 ) -> DataFrame:
     """Fetch the clients in positions [ins−window+1, ins+window] via an
     equi-join on (lvl, blk, ⌊pos/window⌋), the prospect exploded to the
-    ≤3 covering position blocks.
-
-    ``broadcast_probes`` (the SERVING path — round 14): the probe
-    side is batch-sized BY CONTRACT there, so it broadcasts and the
-    corpus-sized index never shuffles for the fetch — the same
-    no-store-side-Exchange property the dedup band store pins.  The
-    BATCH candidate path leaves it False: there the prospect side is
-    the full left relation, and a shuffle join on the bounded
-    (lvl, blk, wb) key is the right plan at any |L|."""
+    ≤3 covering position blocks.  The batch candidate path's fetch:
+    the prospect side is the full left relation, and a shuffle join on
+    the bounded (lvl, blk, wb) key is the right plan at any |L| (the
+    serving probe fetches in :func:`_probe_fetch`)."""
     probes = pros_ins.select(
         "__tid",
         "__lvl",
@@ -1119,8 +1114,6 @@ def _window_fetch(
             )
         ).alias("__wb"),
     )
-    if broadcast_probes:
-        probes = F.broadcast(probes)
     return (
         probes.join(clis_pos, ["__lvl", "__blk", "__wb"])
         .filter(
@@ -1400,35 +1393,49 @@ def _index_rows(
     return ranked.select(*cols)
 
 
+def _meta_bounds(index: DataFrame, col: str) -> tuple:
+    """(min, max) of a build-metadata column (``__w`` / ``__dir``).  A
+    frame straight from ``read_published`` answers from its version
+    manifest — no job; the publish already checked that the column
+    holds one value.  Any other frame (in-memory builds, legacy
+    versions, transformed reads) pays one small agg job; (None, None)
+    when the index is empty."""
+    manifest = published_manifest(index)
+    if manifest is not None and col in manifest["meta"]:
+        v = manifest["meta"][col]
+        return v, v
+    row = index.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).first()
+    return (row["lo"], row["hi"]) if row is not None else (None, None)
+
+
 def _resolve_probe_window(index: DataFrame, window: int | None) -> int:
     """Window the probe MUST use = the window the index was built
-    with: ``ins = swb·window + cnt`` and the ``__wb`` equi-join are
+    with: the insertion count and the ``__wb`` equi-join are
     silently wrong on any other value (round-10 advice).  Indexes
-    carry it as the ``__w`` metadata column; this reads it (one
-    small agg job) and either returns it (``window=None`` — derive) or
-    asserts equality (explicit ``window`` — validate).  The agg checks
-    min == max, not an arbitrary first row: an index path holding
-    MIXED builds (a window-32 rebuild appended over a window-64
-    artifact, or two builds unioned) is exactly the silent-wrong-
-    neighborhood hazard this function exists to catch, so it raises
-    loudly.  Pre-round-11 indexes without ``__w`` require an explicit
-    window."""
+    carry it as the ``__w`` metadata column; this reads it (from the
+    version manifest of a published read, else one small agg job —
+    :func:`_meta_bounds`) and either returns it (``window=None`` —
+    derive) or asserts equality (explicit ``window`` — validate).  The
+    agg checks min == max, not an arbitrary first row: an index path
+    holding MIXED builds (a window-32 rebuild appended over a
+    window-64 artifact, or two builds unioned) is exactly the
+    silent-wrong-neighborhood hazard this function exists to catch,
+    so it raises loudly.  Pre-round-11 indexes without ``__w`` require
+    an explicit window."""
     if "__w" in index.columns:
-        row = index.agg(
-            F.min("__w").alias("lo"), F.max("__w").alias("hi")
-        ).first()
-        if row is None or row["lo"] is None:
+        lo, hi = _meta_bounds(index, "__w")
+        if lo is None:
             # empty index: every window yields the empty result
             return window if window is not None else 64
-        if int(row["lo"]) != int(row["hi"]):
+        if int(lo) != int(hi):
             raise ValueError(
                 f"rank_window_probe: index holds MIXED build windows "
-                f"__w ∈ [{int(row['lo'])}, {int(row['hi'])}] — e.g. a "
+                f"__w ∈ [{int(lo)}, {int(hi)}] — e.g. a "
                 "rebuild appended over an old artifact. Rebuild the "
                 "index path cleanly; probing mixed builds silently "
                 "fetches wrong neighborhoods."
             )
-        iw = int(row["lo"])
+        iw = int(lo)
         if window is None:
             return iw
         if int(window) != iw:
@@ -1469,22 +1476,25 @@ def rank_window_probe(
     splitting the prospect set across batches cannot change any
     prospect's candidates.
 
-    Insertion point from the index alone: window blocks are dense
-    (``base = wb·window`` clients strictly below block ``wb``), so
-    ``ins = swb·window + |{clients in block swb with key < k}|`` where
-    ``swb`` is the last block whose FIRST key ≤ k — found against a
-    broadcast ≤|R|/window-row block-summary, then one ≤window-row
-    partial count.  The strict-less comparator on (angle, id) is the
-    batch path's exactly.
+    Insertion point from the index alone (:func:`_probe_fetch`):
+    window blocks are dense (block ``wb`` holds positions
+    ``wb·window+1 ..``), so the straddling block ``swb`` — the last
+    block whose FIRST (key, id) ≤ the prospect's, read map-side off a
+    broadcast array of block starts — pins the insertion window inside
+    blocks swb−1..swb+1.  One fetch of those blocks then yields both
+    the insertion count (the position of the last fetched client
+    strictly below the prospect) and the ±window band.  The
+    strict-less comparator on (angle, id) is the batch path's exactly.
 
-    Scale: the block summary is |R|·(code_len+1)/window rows
-    (broadcast); each prospect touches ≤3 window blocks of the index
-    plus one straddling block — at serving batch sizes that is an
-    index lookup, not a corpus pass.
+    Scale: the block starts are |R|·(code_len+1)/window rows
+    (broadcast); each prospect touches 3 window blocks of the index —
+    at serving batch sizes that is an index lookup, not a corpus pass;
+    two index scans and one batch-sized exchange per probe.
 
     ``window=None`` (the default) reads the window off the index's
-    ``__w`` metadata column; an explicit ``window`` is VALIDATED
-    against it — a mismatch raises instead of silently fetching wrong
+    ``__w`` metadata column (the version manifest of a published read,
+    else one agg job); an explicit ``window`` is VALIDATED against it
+    — a mismatch raises instead of silently fetching wrong
     neighborhoods (round-10 advice).
 
     ``tombstones`` (a small frame carrying deleted client ids in a
@@ -1536,92 +1546,92 @@ def _probe_fetch(
     broadcast_probes: bool = True,
 ) -> DataFrame:
     """Key-agnostic probe body shared by :func:`rank_window_probe` and
-    :func:`projection_window_probe`: block-summary insertion
-    arithmetic + windowed fetch + tombstone anti-join, entirely in
-    terms of the stored ``__v1n`` sort keys — the probing family only
-    differs in HOW the prospect's ``__v1n`` is computed.
+    :func:`projection_window_probe`, entirely in terms of the stored
+    ``__v1n`` sort keys — the probing family only differs in HOW the
+    prospect's ``__v1n`` is computed.  Two index scans and one
+    batch-sized exchange:
 
-    ``broadcast_probes`` gates every probe-derived broadcast hint
-    (straddle, partial, and the fetch probes — NOT the ≤|R|/window-row
-    block summary, which is index-derived and bounded); False is for
-    corpus-sized probe relations where the (batch × arms) frames
-    outgrow the broadcast limit (round-15 advice)."""
-    blocks = index.groupBy("__lvl", "__blk", "__wb").agg(
-        F.min(F.struct("__v1n", F.col("__rid").alias("__id"))).alias("__lo")
-    )
+    1. BLOCK STARTS: the first row of every window block
+       (``(__cpos − 1) % window == 0``, dense positions) collected into
+       one array per arm — only |R|·arms/window rows reach this small
+       aggregate, and it broadcasts (index-derived, bounded).
+    2. STRADDLING BLOCK, map-side: ``swb`` = the last block whose first
+       (key, id) is ≤ the prospect's (−1 when the prospect precedes
+       every client).  The insertion window [ins−window+1, ins+window]
+       lies inside blocks swb−1..swb+1, so ONE equi-join on
+       (lvl, blk, wb) pulls exactly those blocks — broadcasting the
+       batch-sized probe side, so the corpus-sized index never
+       shuffles — and one ``repartition`` by prospect id follows.
+    3. After that exchange nothing shuffles again: the insertion count
+       is a window max over (prospect, arm) — ``ins`` = the position
+       of the last fetched client strictly below (key, id) on the batch
+       path's strict-less (angle, id) comparator (0 if none; blocks
+       below swb−1 lie wholly below it, so the fetched blocks always
+       contain that client) — then the position band, ``distinct``,
+       the tombstone anti-join, and the caller's feature joins and
+       top-K all reuse the prospect-id partitioning.
+
+    ``broadcast_probes`` gates the probe-side broadcast of the fetch
+    (NOT the block starts); False is for corpus-sized probe relations
+    whose (batch × arms) frame outgrows the broadcast limit (round-15
+    advice) — the fetch then shuffle-joins on the bounded
+    (lvl, blk, wb) key."""
+    from pyspark.sql import Window
+
     k_lt = lambda a_v, a_i, b_v, b_i: (a_v < b_v) | (  # noqa: E731
         (a_v == b_v) & (a_i < b_i)
     )
-    # straddling block: max wb whose first key <= prospect key
-    straddle = (
-        pro.join(
-            F.broadcast(blocks),
-            ["__lvl", "__blk"],
+    starts = (
+        index.filter((F.col("__cpos") - 1) % window == 0)
+        .groupBy("__lvl", "__blk")
+        .agg(
+            F.collect_list(
+                F.struct("__wb", "__v1n", F.col("__rid").alias("__id"))
+            ).alias("__starts")
         )
-        .filter(
-            ~k_lt(
-                F.col("__v1n"),
-                F.col("__id"),
-                F.col("__lo.__v1n"),
-                F.col("__lo.__id"),
-            )
-        )
-        .groupBy("__id", "__v1n", "__lvl", "__blk")
-        .agg(F.max("__wb").alias("__swb"))
     )
-    # partial count inside the straddling block (<= window rows/probe)
-    idx_s = index.select(
+    below = F.filter(
+        "__starts",
+        lambda b: ~k_lt(F.col("__v1n"), F.col("__id"), b["__v1n"], b["__id"]),
+    )
+    swb = F.coalesce(
+        F.array_max(F.transform(below, lambda b: b["__wb"])), F.lit(-1)
+    )
+    probes = pro.join(F.broadcast(starts), ["__lvl", "__blk"]).select(
+        F.col("__id").alias("__tid"),
+        F.col("__v1n").alias("__k"),
         "__lvl",
         "__blk",
-        F.col("__wb").alias("__swb"),
-        F.col("__v1n").alias("__cv"),
-        "__rid",
+        F.explode(F.array(swb - 1, swb, swb + 1)).alias("__wb"),
     )
-    # the straddle frame is (batch × arms)-sized — broadcast it so the
-    # partial count never shuffles the corpus-sized index (round 14;
-    # same contract as the fetch's broadcast_probes below)
-    maybe_b = F.broadcast if broadcast_probes else (lambda d: d)
-    partial = (
-        maybe_b(straddle).join(idx_s, ["__lvl", "__blk", "__swb"])
+    if broadcast_probes:
+        probes = F.broadcast(probes)
+    fetched = probes.join(
+        index.select(
+            "__lvl", "__blk", "__wb", "__cpos", "__rid",
+            F.col("__v1n").alias("__cv"),
+        ),
+        ["__lvl", "__blk", "__wb"],
+    ).repartition("__tid")
+    arm = Window.partitionBy("__tid", "__k", "__lvl", "__blk")
+    ins = F.coalesce(
+        F.max(
+            F.when(
+                k_lt(F.col("__cv"), F.col("__rid"), F.col("__k"), F.col("__tid")),
+                F.col("__cpos"),
+            )
+        ).over(arm),
+        F.lit(0),
+    )
+    fetched = (
+        fetched.withColumn("__ins", ins)
         .filter(
-            k_lt(
-                F.col("__cv"),
-                F.col("__rid"),
-                F.col("__v1n"),
-                F.col("__id"),
+            F.col("__cpos").between(
+                F.col("__ins") - window + 1, F.col("__ins") + window
             )
         )
-        .groupBy("__id", "__lvl", "__blk", "__swb")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-    )
-    # straddle and partial are (batch × arms)-sized like pro itself —
-    # broadcast them so the insertion assembly never sorts/shuffles at
-    # all: the whole probe is then broadcast-only up to the final
-    # window fetch (round 14; the last four SortMergeJoins in the
-    # probe plan were exactly these two left joins, once per probe)
-    pros_ins = (
-        pro.join(
-            maybe_b(straddle.select("__id", "__lvl", "__blk", "__swb")),
-            ["__id", "__lvl", "__blk"], "left")
-        .join(
-            maybe_b(partial.select("__id", "__lvl", "__blk", "__cnt")),
-            ["__id", "__lvl", "__blk"], "left")
-        .select(
-            F.col("__id").alias("__tid"),
-            "__lvl",
-            "__blk",
-            # no block with first key <= k -> the prospect precedes
-            # every client: ins = 0 (swb and cnt both null-coalesce)
-            (
-                F.coalesce(F.col("__swb"), F.lit(0)) * window
-                + F.coalesce("__cnt", F.lit(0))
-            ).alias("__ins"),
-        )
-    )
-    clis_pos = index.select("__rid", "__lvl", "__blk", "__cpos", "__wb")
-    fetched = _window_fetch(
-        pros_ins, clis_pos, window, left_id, right_id,
-        broadcast_probes=broadcast_probes,
+        .select(F.col("__tid").alias(left_id), F.col("__rid").alias(right_id))
+        .distinct()
     )
     if tombstones is not None:
         # re-select: a named-column join hoists the key to column 0,
@@ -2089,12 +2099,19 @@ def serve_batch(
     micro-batch would add a corpus job — the exact thing the probe
     route avoids).  When None, one count job runs.
 
+    Off an index straight from ``read_published`` the call launches NO
+    job before the action: ``__w``/``__dir`` come from the version
+    manifest.  Any other index pays one agg per metadata column.  The
+    probe route's re-rank checks vector dims inside its plan
+    (``raise_error`` on a row of another length) instead of with a
+    limit-1 job per side.
+
     Routes, both returning ``(left_id, right_id, score)`` top-K:
 
     - PROBE (wins on clustered windows / modest corpora): fetch
       candidate pairs from the artifact
       (:func:`rank_window_probe` / the projection twin), exact-score
-      them (:func:`hybrid_topk_pruned`) at the family's dim —
+      them (:func:`_score_topk`) at the family's dim —
       tombstones anti-joined at pair level, the probe contract.
     - KERNEL (wins when the derived window stops pruning): the exact
       blocked-GEMM :func:`hybrid_topk` of the batch against the LIVE
@@ -2108,42 +2125,25 @@ def serve_batch(
     — which is what lets ``peer_search_serve_batch_e2e`` pin either
     route under one value oracle.  Reference anchor: the blocked
     batching intent at search_ranking_peers.py:489-494."""
-    if "__dir" in index.columns:
-        direction = _resolve_probe_direction(index, None, who="serve_batch")
-        stripped = index.drop("__dir")
-        window = _resolve_probe_window(stripped, None)
-        dim: int | None = len(direction)
-
-        def _probe() -> DataFrame:
-            return _projection_probe_resolved(
-                batch, stripped, left_id, right_id, direction, window,
-                vec_col, naics_col, code_len, tombstones,
-                broadcast_probes=broadcast_probes,
-            )
-
-    else:
-        _require_dim2(batch, vec_col, "serve_batch(batch)")
-        window = _resolve_probe_window(index, None)
-        dim = 2
-
-        def _probe() -> DataFrame:
-            return rank_window_probe(
-                batch, index, left_id, right_id,
-                vec_col=vec_col, naics_col=naics_col, window=window,
-                code_len=code_len, tombstones=tombstones,
-                broadcast_probes=broadcast_probes,
-            )
-
+    window, direction, dim = _serving_route(index, who="serve_batch")
     if n_right is None:
         n_right = clients.count()
-    if serving_probe_wins(window, n_right, code_len=code_len):
-        return hybrid_topk_pruned(
-            batch, clients, left_id, right_id,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            candidates=_probe(), dim=dim,
-            broadcast_sides=broadcast_probes,
+    probe_wins = serving_probe_wins(window, n_right, code_len=code_len)
+    if direction is None and not probe_wins:
+        _require_dim2(batch, vec_col, "serve_batch(batch)")
+    scoring = dict(
+        vec_col=vec_col, naics_col=naics_col,
+        lat_col=lat_col, lon_col=lon_col,
+        k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
+    )
+    if probe_wins:
+        cand = _serving_candidates(
+            batch, index, left_id, right_id, window, direction,
+            vec_col, naics_col, code_len, tombstones, broadcast_probes,
+        )
+        return _serving_rerank(
+            batch, clients, cand, left_id, right_id, dim,
+            broadcast_probes, **scoring,
         )
     live = (
         clients.join(
@@ -2152,11 +2152,71 @@ def serve_batch(
         if tombstones is not None
         else clients
     )
-    return hybrid_topk(
-        batch, live, left_id, right_id,
-        vec_col=vec_col, naics_col=naics_col,
-        lat_col=lat_col, lon_col=lon_col,
-        k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
+    return hybrid_topk(batch, live, left_id, right_id, **scoring)
+
+
+def _serving_route(
+    index: DataFrame, window: int | None = None, who: str = "serve_batch"
+) -> tuple[int, list[float] | None, int]:
+    """A serving artifact's family and build metadata, resolved ONCE:
+    ``(window, direction, dim)``.  ``direction`` is None for the 2-D
+    rank family (scored at dim 2), the ``__dir`` projection otherwise
+    (scored at its length).  A frame straight from ``read_published``
+    answers from its version manifest without a job."""
+    if "__dir" in index.columns:
+        direction = _resolve_probe_direction(index, None, who=who)
+        window = _resolve_probe_window(index, window)
+        return window, direction, len(direction)
+    return _resolve_probe_window(index, window), None, 2
+
+
+def _serving_candidates(
+    batch: DataFrame,
+    index: DataFrame,
+    left_id: str,
+    right_id: str,
+    window: int,
+    direction: list[float] | None,
+    vec_col: str,
+    naics_col: str,
+    code_len: int,
+    tombstones: DataFrame | None,
+    broadcast_probes: bool = True,
+) -> DataFrame:
+    """The probe route's candidate pairs with metadata already resolved
+    (:func:`_serving_route`) — no guard job of its own."""
+    if direction is not None:
+        return _projection_probe_resolved(
+            batch, index, left_id, right_id, direction, window,
+            vec_col, naics_col, code_len, tombstones,
+            broadcast_probes=broadcast_probes,
+        )
+    pro = _arm_prospects(batch, left_id, vec_col, naics_col, code_len)
+    return _probe_fetch(
+        pro, index, window, left_id, right_id, tombstones,
+        broadcast_probes=broadcast_probes,
+    )
+
+
+def _serving_rerank(
+    batch: DataFrame,
+    clients: DataFrame,
+    candidates: DataFrame,
+    left_id: str,
+    right_id: str,
+    dim: int,
+    broadcast_sides: bool = True,
+    **scoring,
+) -> DataFrame:
+    """Exact top-K of the probed candidates at the artifact's ``dim``,
+    both sides' vectors checked inside the plan (:func:`_dim_guarded`)
+    rather than with :func:`hybrid_topk_pruned`'s limit-1 jobs."""
+    vec_col = scoring["vec_col"]
+    return _score_topk(
+        _dim_guarded(batch, vec_col, dim, "serving re-rank (batch)"),
+        _dim_guarded(clients, vec_col, dim, "serving re-rank (clients)"),
+        candidates, left_id, right_id,
+        dim=dim, broadcast_sides=broadcast_sides, **scoring,
     )
 
 
@@ -2237,7 +2297,8 @@ def _resolve_probe_direction(
 ) -> list[float] | None:
     """Direction the probe MUST use = the direction the index was
     ranked by — the ``__dir`` twin of :func:`_resolve_probe_window`:
-    reads the metadata (min == max or the artifact holds MIXED builds
+    reads the metadata (manifest or agg, :func:`_meta_bounds`;
+    min == max or the artifact holds MIXED builds
     → raise), returns the stored direction when ``direction=None``,
     validates equality when explicit (mismatch raises — probing with
     a different projection silently fetches wrong neighborhoods).
@@ -2255,10 +2316,8 @@ def _resolve_probe_direction(
             "— it is a 2-D rank-window artifact; probe it with "
             "rank_window_probe."
         )
-    row = index.agg(
-        F.min("__dir").alias("lo"), F.max("__dir").alias("hi")
-    ).first()
-    if row is None or row["lo"] is None:
+    lo, hi = _meta_bounds(index, "__dir")
+    if lo is None:
         # empty index: any direction yields the empty result
         if direction is not None:
             return [float(w) for w in direction]
@@ -2269,14 +2328,14 @@ def _resolve_probe_direction(
             "direction was passed — prospect/arrival keys cannot be "
             "computed; pass direction= explicitly."
         )
-    if row["lo"] != row["hi"]:
+    if lo != hi:
         raise ValueError(
             f"{who}: index holds MIXED projection "
-            f"directions ({row['lo']!r} vs {row['hi']!r}) — e.g. a "
+            f"directions ({lo!r} vs {hi!r}) — e.g. a "
             "rebuild under a new direction appended over an old "
             "artifact. Rebuild the index path cleanly."
         )
-    stored = _parse_direction(row["lo"])
+    stored = _parse_direction(lo)
     if direction is not None and [float(w) for w in direction] != stored:
         raise ValueError(
             f"{who}: direction={list(direction)} "
@@ -2303,12 +2362,12 @@ def projection_window_probe(
 ) -> DataFrame:
     """Probe a :func:`projection_window_index` with a prospect batch —
     the general-dim twin of :func:`rank_window_probe`, sharing its
-    entire fetch body (:func:`_probe_fetch`: broadcast block-summary
-    insertion arithmetic, ≤3 window blocks + one straddling partial
-    count per (prospect, arm), tombstone anti-join, per-row
-    independent so batch splitting and streaming micro-batches change
-    nothing).  Candidate parity with the batch
-    :func:`projection_window_candidates` at the build window is
+    entire fetch body (:func:`_probe_fetch`: broadcast block starts,
+    3 window blocks per (prospect, arm) behind one batch-sized
+    exchange, tombstone anti-join, per-row independent so batch
+    splitting and streaming micro-batches change nothing).  Candidate
+    parity with the batch :func:`projection_window_candidates` at the
+    build window is
     pytest-pinned; the registered ``peer_search_fulldim_probe_parity``
     query pins the probed serving result under the full value oracle.
 
@@ -2330,9 +2389,9 @@ def projection_window_probe(
     firmly in the artifact's domain — the streaming micro-batch
     regime it serves."""
     direction = _resolve_probe_direction(index, direction)
-    window = _resolve_probe_window(index.drop("__dir"), window)
+    window = _resolve_probe_window(index, window)
     return _projection_probe_resolved(
-        left, index.drop("__dir"), left_id, right_id, direction, window,
+        left, index, left_id, right_id, direction, window,
         vec_col, naics_col, code_len, tombstones,
         broadcast_probes=broadcast_probes,
     )
@@ -2351,11 +2410,10 @@ def _projection_probe_resolved(
     tombstones: DataFrame | None = None,
     broadcast_probes: bool = True,
 ) -> DataFrame:
-    """Probe body AFTER metadata resolution — for the streaming loops,
-    which validate ``__w``/``__dir`` ONCE at start (or per published
-    version) and must not re-run the metadata agg jobs every
-    micro-batch (the 2-D loop's ``__w``-strip pattern, extended to the
-    direction)."""
+    """Probe body AFTER metadata resolution — for ``serve_batch`` and
+    the streaming loops, which resolve ``__w``/``__dir`` ONCE (at start,
+    or per published version) and must not re-run the metadata agg
+    jobs every micro-batch."""
     pro = _arm_prospects(
         left, left_id, vec_col, naics_col, code_len,
         key_expr=_projection_key(direction, vec_col),
@@ -2689,6 +2747,77 @@ def hybrid_topk_pruned(
             tables=tables, naics_prefix_len=naics_prefix_len,
             quantile_buckets=quantile_buckets,
         )
+    if dim is not None:
+        # Validate dim against the ACTUAL vector length before taking
+        # the unrolled path: element_at beyond the array is NULL (a
+        # too-large dim would NULL every score) and a too-small dim
+        # would silently TRUNCATE the dot product — both diverging
+        # from the HOF fold this path claims bit-parity with.  One
+        # limit-1 probe per side at plan-build time, loud on mismatch.
+        # (A fused two-side union probe was tried in round 16 and
+        # REVERTED: limit(1).first() short-circuits via executeTake —
+        # one task, no shuffle — while the union form pays a
+        # single-partition exchange + AQE stage barrier per side;
+        # measured 0.14s vs 0.18s for the pair at sf0.1.)  The serving
+        # re-rank checks in the plan instead (:func:`_dim_guarded`).
+        for side, df_side in (("left", left), ("right", right)):
+            actual = probe_dim(df_side, vec_col)
+            if actual is not None and actual != dim:
+                raise ValueError(
+                    f"hybrid_topk_pruned: dim={dim} but the {side} "
+                    f"side's '{vec_col}' vectors have dim={actual} — "
+                    "the unrolled dot would "
+                    + (
+                        "silently truncate the product"
+                        if actual > dim
+                        else "NULL every score (element_at past end)"
+                    )
+                    + "; pass the true dim or dim=None for the HOF fold."
+                )
+    return _score_topk(
+        left, right, candidates, left_id, right_id,
+        vec_col=vec_col, naics_col=naics_col,
+        lat_col=lat_col, lon_col=lon_col,
+        k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
+        dim=dim, broadcast_sides=broadcast_sides,
+    )
+
+
+def _dim_guarded(df: DataFrame, vec_col: str, dim: int, who: str) -> DataFrame:
+    """``df`` with every non-null ``vec_col`` vector checked against
+    ``dim`` IN the plan: a row of any other length raises
+    (``raise_error``) when it is read, instead of a limit-1 probe job
+    per side before planning.  Used by the serving re-rank, whose
+    artifact metadata fixes the dim."""
+    v = F.col(vec_col)
+    msg = F.concat(
+        F.lit(f"{who}: a '{vec_col}' vector has dim="),
+        F.size(v).cast("string"),
+        F.lit(f", the artifact's dim is {dim}"),
+    )
+    bad = v.isNotNull() & (F.size(v) != dim)
+    return df.withColumn(vec_col, F.when(bad, F.raise_error(msg)).otherwise(v))
+
+
+def _score_topk(
+    left: DataFrame,
+    right: DataFrame,
+    candidates: DataFrame,
+    left_id: str,
+    right_id: str,
+    vec_col: str,
+    naics_col: str,
+    lat_col: str,
+    lon_col: str,
+    k: int,
+    threshold: float,
+    w_hops: float,
+    w_havs: float,
+    dim: int | None,
+    broadcast_sides: bool,
+) -> DataFrame:
+    """Exact hybrid score of the candidate pairs + per-left top-K — the
+    body of :func:`hybrid_topk_pruned` after its dim validation."""
     lhs = left.select(
         F.col(left_id),
         F.col(vec_col).alias("__lvec"),
@@ -2706,31 +2835,6 @@ def hybrid_topk_pruned(
     if broadcast_sides:
         lhs, rhs = F.broadcast(lhs), F.broadcast(rhs)
     if dim is not None:
-        # Validate dim against the ACTUAL vector length before taking
-        # the unrolled path: element_at beyond the array is NULL (a
-        # too-large dim would NULL every score) and a too-small dim
-        # would silently TRUNCATE the dot product — both diverging
-        # from the HOF fold this path claims bit-parity with.  One
-        # limit-1 probe per side at plan-build time, loud on mismatch.
-        # (A fused two-side union probe was tried in round 16 and
-        # REVERTED: limit(1).first() short-circuits via executeTake —
-        # one task, no shuffle — while the union form pays a
-        # single-partition exchange + AQE stage barrier per side;
-        # measured 0.14s vs 0.18s for the pair at sf0.1.)
-        for side, df_side in (("left", left), ("right", right)):
-            actual = probe_dim(df_side, vec_col)
-            if actual is not None and actual != dim:
-                raise ValueError(
-                    f"hybrid_topk_pruned: dim={dim} but the {side} "
-                    f"side's '{vec_col}' vectors have dim={actual} — "
-                    "the unrolled dot would "
-                    + (
-                        "silently truncate the product"
-                        if actual > dim
-                        else "NULL every score (element_at past end)"
-                    )
-                    + "; pass the true dim or dim=None for the HOF fold."
-                )
         # unrolled codegen dot: bit-identical to the HOF fold below
         # ((0.0 + x) == x in IEEE for products of reals, and both
         # accumulate strictly left-to-right) but stays inside

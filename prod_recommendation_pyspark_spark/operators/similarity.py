@@ -734,7 +734,13 @@ def ann_lsh_topk(
     # coalescing, which would otherwise fold the byte-tiny but
     # compute-heavy pair set onto ~1 core (the original reason this
     # repartition exists); pinning it below the distinct keeps that
-    # property for every downstream stage.
+    # property for every downstream stage.  SKEW CAVEAT: keying on
+    # __qid alone sends every raw pair of one query to one task.  A hot
+    # __qid (one query inside a large near-duplicate cluster, hitting
+    # thousands of corpus rows in every table) makes that task the
+    # straggler, and its duplicates are no longer pre-spread by a
+    # (__qid, __cid) exchange.  On such corpora re-key the dedup on
+    # (__qid, __cid) and pay the second shuffle.
     pairs = (
         q.join(c, ["__tbl", "__sig"])
         .filter(F.col("__qid") != F.col("__cid"))

@@ -4164,8 +4164,8 @@ def streaming_projection_serving_replay(
     streaming loops are artifact-FAMILY-driven: the same
     ``streaming/joins.py::streaming_peer_serving`` is handed a
     ``__dir`` artifact, detects the family from the metadata ONCE at
-    start (``_resolve_serving_probe`` — window + direction validated,
-    then stripped so no per-batch metadata jobs run), probes each of
+    start (``_serving_fn`` — window + direction validated once, so no
+    per-batch metadata jobs run), probes each of
     three real micro-batches with the projection key, and exact-scores
     at the direction's dim.  Prospects land in exactly one micro-batch
     and the probe is per-row independent, so the unioned per-batch

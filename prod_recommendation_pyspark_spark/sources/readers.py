@@ -22,10 +22,17 @@ dispatch on the real suffix.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+#: The version manifest ``publish_versioned`` writes into each version
+#: directory (underscore-prefixed: hidden from parquet listings).
+MANIFEST_NAME = "_manifest.json"
+_MANIFEST_ATTR = "_published_manifest"
 
 
 def read_pipe_csv(spark: SparkSession, path: str, header: bool = True) -> DataFrame:
@@ -154,7 +161,16 @@ def read_published(
     ONCE and pass it to both reads when fetching an artifact plus its
     companion: two latest-version resolutions could straddle a
     concurrent publish and pair an index with another build's
-    features."""
+    features.
+
+    A version published with a ``_manifest.json`` (see
+    ``publish_versioned``) is read with the schema stored there, so the
+    read launches no schema-inference job, and the artifact's build
+    ``meta``data (``__w``/``__dir``) is attached to the returned frame —
+    :func:`published_manifest` reads it back.  Only that exact frame
+    carries it: any transformation returns a new frame without one,
+    so downstream operators fall back to deriving the metadata from
+    the data.  Versions without a manifest are read as before."""
     n = (
         latest_published_version(spark, base)
         if version is None
@@ -168,9 +184,38 @@ def read_published(
             "before committing."
         )
     path = f"{base}/__v={n}"
+    entry = _read_manifest(spark, path)
     if companion is not None:
         path = f"{path}/__companion_{companion}"
-    return spark.read.parquet(path)
+        entry = (entry or {}).get("companions", {}).get(companion)
+    if entry is None:
+        return spark.read.parquet(path)
+    df = spark.read.schema(StructType.fromJson(entry["schema"])).parquet(path)
+    vars(df)[_MANIFEST_ATTR] = {"meta": entry.get("meta", {})}
+    return df
+
+
+def _read_manifest(spark: SparkSession, version_dir: str) -> dict | None:
+    """The version's ``_manifest.json``, or None for a version
+    published before manifests existed.  One driver-side FileSystem
+    read, no Spark job."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(f"{version_dir}/{MANIFEST_NAME}")
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
+    finally:
+        stream.close()
+
+
+def published_manifest(df: DataFrame) -> dict | None:
+    """The manifest entry :func:`read_published` attached to ``df``
+    (``{"meta": {...}}``, empty for a companion), or None for any
+    other frame."""
+    return vars(df).get(_MANIFEST_ATTR)
 
 
 def literal_rows(

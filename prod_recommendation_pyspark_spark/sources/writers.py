@@ -10,9 +10,20 @@ default is a parallel partitioned write.  Fixes defect B6
 
 from __future__ import annotations
 
+import json
 import uuid
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from prod_recommendation_pyspark_spark.sources.readers import MANIFEST_NAME
+
+#: Build-metadata columns the index builders stamp with one constant
+#: per build: the window (``__w``) and the projection direction
+#: (``__dir``).  ``publish_versioned`` records their single value in
+#: the version manifest.
+MANIFEST_META_COLUMNS = ("__w", "__dir")
 
 
 def write_csv(
@@ -164,6 +175,55 @@ def _try_claim(fs, hpath, staging, staging_name, marker_name, target) -> bool:
     return False
 
 
+def _staged_manifest(
+    df: DataFrame,
+    staged: str,
+    partition_by: list[str] | None,
+    companions: dict[str, DataFrame],
+) -> dict:
+    """The ``_manifest.json`` payload of a staged publish.  Schemas are
+    the staged files read back with the written frames' data columns
+    pinned (partition columns, if any, are discovered from the
+    directory names and appended last, every field nullable), i.e.
+    exactly what a plain read of the version would infer, without its
+    inference job.  One aggregate over the staged artifact gives its
+    row count and metadata bounds; raises when a metadata column holds
+    more than one value."""
+    spark = df.sparkSession
+    parts = set(partition_by or ())
+    data = StructType([f for f in df.schema.fields if f.name not in parts])
+    art = spark.read.schema(data).parquet(staged)
+    meta = [c for c in MANIFEST_META_COLUMNS if c in art.columns]
+    top = art.agg(
+        F.count(F.lit(1)).alias("rows"),
+        *[F.min(c).alias(f"lo{c}") for c in meta],
+        *[F.max(c).alias(f"hi{c}") for c in meta],
+    ).first()
+    for c in meta:
+        lo, hi = top[f"lo{c}"], top[f"hi{c}"]
+        if lo != hi:
+            raise ValueError(
+                f"publish_versioned: the frame holds MIXED builds — "
+                f"{c} ∈ [{lo!r}, {hi!r}] (e.g. a rebuild "
+                "unioned with an old artifact). Publish one build; "
+                "probing mixed builds silently fetches wrong "
+                "neighborhoods."
+            )
+    return {
+        "rows": top["rows"],
+        "schema": art.schema.jsonValue(),
+        "meta": {c: top[f"lo{c}"] for c in meta},
+        "companions": {
+            cname: {
+                "schema": spark.read.schema(cdf.schema)
+                .parquet(f"{staged}/__companion_{cname}")
+                .schema.jsonValue()
+            }
+            for cname, cdf in companions.items()
+        },
+    }
+
+
 def publish_versioned(
     df: DataFrame,
     base: str,
@@ -236,7 +296,22 @@ def publish_versioned(
     ``read_published`` parquet listing (Spark's hidden-path filter);
     read one back with ``read_published(..., companion=name)`` —
     version-pinned reads replay the artifact WITH its exact
-    features."""
+    features.
+
+    MANIFEST: before the claim, one aggregate over the staged
+    artifact writes ``_manifest.json`` into the staging directory, so
+    it publishes atomically with the data.  It records the artifact's
+    schema and row count, each companion's schema, and the single
+    value of every build-metadata column present
+    (:data:`MANIFEST_META_COLUMNS`: the window ``__w`` and the
+    projection ``__dir``).  A frame holding MIXED builds (two values
+    in one metadata column) raises here, before anything becomes
+    visible.  ``read_published`` reads with the stored schema (no
+    schema-inference job) and hands the manifest to the serving
+    operators, which then take the build metadata from it instead of
+    re-aggregating the index per probe.  The leading underscore hides
+    the file from parquet listings; versions published before the
+    manifest existed are still read (without one)."""
     spark = df.sparkSession
     from prod_recommendation_pyspark_spark.sources.readers import (
         latest_published_version,
@@ -267,6 +342,14 @@ def publish_versioned(
     # carries it to the target iff the rename truly replaced the path
     fs.create(hpath(staging, marker_name)).close()
     try:
+        manifest = _staged_manifest(
+            df, f"{base}/{staging_name}", partition_by, companions or {}
+        )
+        out = fs.create(hpath(staging, MANIFEST_NAME))
+        try:
+            out.write(bytearray(json.dumps(manifest).encode("utf-8")))
+        finally:
+            out.close()
         for _ in range(64):  # bounded: one loser retry per contender
             n = latest_published_version(spark, base) + 1
             target = hpath(f"{base}/__v={n}")

@@ -278,29 +278,30 @@ def streaming_peer_serving(
     same contract as the foreachBatch CDC maintenance sink in
     ``streaming/maintenance.py``).
 
-    Why foreachBatch and not a plain stream-static join:
-    ``rank_window_probe`` needs two groupBys (straddling-block max,
-    partial count) and the top-k needs a window function — streaming
-    aggregation restrictions (one agg, no windows in append mode)
-    rule the direct plan out, while per-batch the frames are static
-    and the full batch operators run unchanged.  CORRECTNESS under
-    batching is free: the probe is per-row independent and each
-    prospect arrives in exactly one micro-batch, so the union of
-    per-batch top-k IS the batch path's top-k (pytest-pinned
-    streamed≡batch parity).
+    Why foreachBatch and not a plain stream-static join: the probe
+    aggregates the index's block starts and computes each prospect's
+    insertion count as a window over its fetched blocks, and the top-k
+    needs a window function too — streaming restrictions (one agg, no
+    windows in append mode) rule the direct plan out, while per-batch
+    the frames are static and the full batch operators run unchanged.
+    CORRECTNESS under batching is free: the probe is per-row
+    independent and each prospect arrives in exactly one micro-batch,
+    so the union of per-batch top-k IS the batch path's top-k
+    (pytest-pinned streamed≡batch parity).
 
     ``window=None`` (the default) resolves the window FROM the
     index's ``__w`` metadata column at start; an explicit ``window``
-    is validated against it (round-10 advice: the probe's
-    ``ins = swb·window + cnt`` arithmetic is silently wrong on a
-    mismatched window — now it raises before the first batch).
+    is validated against it (round-10 advice: the probe's insertion
+    arithmetic is silently wrong on a mismatched window — now it
+    raises before the first batch).
 
-    Scale: each micro-batch touches a broadcast block summary
-    (|index|/window rows) plus ≤4 window blocks per (prospect, arm) —
-    index-lookup I/O, independent of corpus size; the probe's dim
-    guard costs one limit-1 job per batch (the window is resolved
-    ONCE, not per batch).  State: NONE (no streaming aggregation, no
-    watermark) — the index and client attributes are static sides,
+    Scale: each micro-batch touches a broadcast array of block starts
+    (|index|/window rows) plus 3 window blocks per (prospect, arm) —
+    index-lookup I/O, independent of corpus size; the re-rank's dim
+    guards cost one limit-1 job per side per batch (the window is
+    resolved ONCE, not per batch; off a published read the guards sit
+    inside the plan and cost no job).  State: NONE (no streaming
+    aggregation, no watermark) — the index and client attributes are static sides,
     re-read (or cached) per batch.  Returns the started
     ``StreamingQuery``.
 
@@ -321,34 +322,22 @@ def streaming_peer_serving(
     the tombstone table takes effect from the next batch on,
     without restarting the loop (streamed ≡ batch-with-tombstones,
     pytest-pinned)."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-    )
-
     # family + window + direction resolved and validated ONCE; per
-    # batch, probe a metadata-stripped view with the explicit values
-    # so the metadata agg jobs do not re-run every micro-batch (the
-    # index is static — its build params cannot change under a
-    # running query).  ROUND 14: the loop is artifact-family-driven —
-    # a __dir (projection) artifact serves the general-dim recipe
-    # through the same plumbing, scoring at the direction's dim.
-    probe, dim, probe_index = _resolve_serving_probe(index, window)
+    # batch the probe runs with those values, so the metadata agg jobs
+    # do not re-run every micro-batch (the index is static — its build
+    # params cannot change under a running query).  ROUND 14: the loop
+    # is artifact-family-driven — a __dir (projection) artifact serves
+    # the general-dim recipe through the same plumbing, scoring at the
+    # direction's dim.
+    serve = _serving_fn(
+        index, clients, left_id, right_id, vec_col, naics_col, lat_col,
+        lon_col, k, threshold, w_hops, w_havs, tombstones, window,
+    )
 
     def _serve(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        cand = probe(
-            batch_df, probe_index, left_id, right_id,
-            vec_col, naics_col, tombstones,
-        )
-        topk = hybrid_topk_pruned(
-            batch_df, clients, left_id, right_id,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            candidates=cand, dim=dim, broadcast_sides=True,
-        )
-        emit(topk, batch_id)
+        emit(serve(batch_df), batch_id)
 
     writer = prospects_stream.writeStream.foreachBatch(_serve).outputMode(
         "update"
@@ -358,45 +347,55 @@ def streaming_peer_serving(
     return writer.start()
 
 
-def _resolve_serving_probe(index: DataFrame, window: int | None):
+def _serving_fn(
+    index: DataFrame,
+    clients: DataFrame,
+    left_id: str,
+    right_id: str,
+    vec_col: str,
+    naics_col: str,
+    lat_col: str,
+    lon_col: str,
+    k: int,
+    threshold: float,
+    w_hops: float,
+    w_havs: float,
+    tombstones: DataFrame | None,
+    window: int | None = None,
+):
     """Resolve a serving artifact's FAMILY + build metadata once, for
-    the streaming loops: returns ``(probe_fn, score_dim,
-    metadata-stripped index)`` where ``probe_fn(batch, idx, lid, rid,
-    vec_col, naics_col, tombstones)`` runs the family's probe with the
-    pre-validated window/direction (no per-batch metadata agg jobs).
-    2-D rank-window artifacts score at dim=2; ``__dir`` (projection)
-    artifacts score at ``len(direction)``."""
+    the streaming loops, and return ``serve(batch) -> top-K frame``
+    running the probe and the exact re-rank with the pre-validated
+    window/direction (no per-batch metadata agg jobs).  2-D
+    rank-window artifacts score at dim=2; ``__dir`` (projection)
+    artifacts score at ``len(direction)``.  An index straight from
+    ``read_published`` takes its metadata from the version manifest,
+    and vector dims are checked inside each batch's plan, so a
+    micro-batch launches no guard job at all."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        _projection_probe_resolved,
-        _resolve_probe_direction,
-        _resolve_probe_window,
-        rank_window_probe,
+        CODE_LEN,
+        _serving_candidates,
+        _serving_rerank,
+        _serving_route,
     )
 
-    if "__dir" in index.columns:
-        direction = _resolve_probe_direction(index, None)
-        w = _resolve_probe_window(index.drop("__dir"), window)
-        stripped = index.drop("__w", "__dir")
+    w, direction, dim = _serving_route(
+        index, window, who="streaming_peer_serving"
+    )
 
-        def probe(batch, idx, lid, rid, vec_col, naics_col, tombstones):
-            return _projection_probe_resolved(
-                batch, idx, lid, rid, direction, w,
-                vec_col=vec_col, naics_col=naics_col, tombstones=tombstones,
-            )
-
-        return probe, len(direction), stripped
-
-    w = _resolve_probe_window(index, window)
-    stripped = index.drop("__w")
-
-    def probe(batch, idx, lid, rid, vec_col, naics_col, tombstones):
-        return rank_window_probe(
-            batch, idx, lid, rid,
-            vec_col=vec_col, naics_col=naics_col, window=w,
-            tombstones=tombstones,
+    def serve(batch: DataFrame) -> DataFrame:
+        cand = _serving_candidates(
+            batch, index, left_id, right_id, w, direction,
+            vec_col, naics_col, CODE_LEN, tombstones,
+        )
+        return _serving_rerank(
+            batch, clients, cand, left_id, right_id, dim,
+            vec_col=vec_col, naics_col=naics_col,
+            lat_col=lat_col, lon_col=lon_col,
+            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
         )
 
-    return probe, 2, stripped
+    return serve
 
 
 def streaming_peer_serving_published(
@@ -457,15 +456,12 @@ def streaming_peer_serving_published(
     with ``keep >= 2`` on a base under hot-swap serving — a slow
     in-flight batch may still be reading version N's files after N+1
     commits (see the prune docstring)."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-    )
     from prod_recommendation_pyspark_spark.sources.readers import (
         latest_published_version,
         read_published,
     )
 
-    state: dict = {"version": None, "index": None, "probe": None, "dim": 2}
+    state: dict = {"version": None, "serve": None}
 
     def _serve(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -511,26 +507,16 @@ def streaming_peer_serving_published(
             )
             return
         if v != state["version"]:
-            idx = read_published(spark, base, version=v)
-            # family + metadata validated once per resolved version
-            # (round 14: __dir projection artifacts hot-swap through
-            # the same loop, scored at the direction's dim)
-            state["probe"], state["dim"], state["index"] = (
-                _resolve_serving_probe(idx, None)
+            # family + metadata resolved once per version, from its
+            # manifest (round 14: __dir projection artifacts hot-swap
+            # through the same loop, scored at the direction's dim)
+            state["serve"] = _serving_fn(
+                read_published(spark, base, version=v), clients,
+                left_id, right_id, vec_col, naics_col, lat_col, lon_col,
+                k, threshold, w_hops, w_havs, tombstones,
             )
             state["version"] = v
-        cand = state["probe"](
-            batch_df, state["index"], left_id, right_id,
-            vec_col, naics_col, tombstones,
-        )
-        topk = hybrid_topk_pruned(
-            batch_df, clients, left_id, right_id,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            candidates=cand, dim=state["dim"], broadcast_sides=True,
-        )
-        emit(topk, batch_id)
+        emit(state["serve"](batch_df), batch_id)
 
     writer = prospects_stream.writeStream.foreachBatch(_serve).outputMode(
         "update"

@@ -13,8 +13,10 @@ Model-CHANGING knobs (rank, iters, reg, seed, num_blocks) are out of
 scope: ``als_recommend_topn`` is rows-only but its companion contract
 and the temporal-hitrate contract pin the trained model's behavior.
 
-Usage: python scripts/profile_als.py [sf_dir] [mode]
+Usage: python scripts/profile_als.py [sf_dir] [mode] [warmup_sf_dir]
   mode: breakdown (default) | storage | blocksize
+  warmup_sf_dir: the fixture warmed up on (default: the sf0.001
+  sibling of sf_dir)
 """
 
 from __future__ import annotations
@@ -42,10 +44,10 @@ from prod_recommendation_pyspark_spark.recommender.ratings import (
 from prod_recommendation_pyspark_spark.session import get_spark
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-# warmup fixture: third argument, defaulting to the sf0.001 sibling of SF
-WARMUP = (sys.argv[2] if len(sys.argv) > 2
-          else os.path.join(os.path.dirname(SF.rstrip("/")), "sf0.001"))
 MODE = sys.argv[2] if len(sys.argv) > 2 else "breakdown"
+# warmup fixture: third argument, defaulting to the sf0.001 sibling of SF
+WARMUP = (sys.argv[3] if len(sys.argv) > 3
+          else os.path.join(os.path.dirname(SF.rstrip("/")), "sf0.001"))
 
 
 def noop(df):
