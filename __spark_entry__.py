@@ -117,165 +117,38 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #    rotation cycle (als contract last driver-green r06, simhash
     #    banded r02) — pinned only while STALE (no driver pass within
     #    the last 2 rounds), so the slots free up once current;
-    # 2. queries whose code changed in round 9 (review fixes) get
-    #    driver re-verification that round instead of riding their
-    #    stale green — GATED on the history state so the pin expires:
-    #    once CORRECTNESS_r09 exists (latest_round >= 9) the slots
-    #    return to the rotation instead of being consumed forever.
-    changed_r9 = (
+    # 2. queries whose code changed this round get driver
+    #    re-verification the round the change lands instead of riding
+    #    their stale green — GATED on the history state so the pin
+    #    expires: once the next CORRECTNESS file exists the slots return
+    #    to the rotation instead of being consumed forever.  Pinned now:
+    #    the 2-D rank window and the projection window became one
+    #    window-index family (one derivation, candidate, index, probe
+    #    and metadata-resolver body, keyed by ``_window_key``), and the
+    #    projection key checks vector dims in its plan — every query
+    #    riding those cells re-verifies.
+    changed = (
         [
-            "pq_adc_recall_contract",
-            "ivfpq_recall_contract",
-            "negative_sampling_ratings",
-            "ndv_hll_contract_orders",
-        ]
-        if latest_round == 8
-        else []
-    )
-    # 3. same pattern for round 11: the production rank-window query
-    #    switched to the derived window (derive-then-floor-at-256) and
-    #    the probe-parity query now derives its window from the
-    #    index's __w metadata — both must be driver re-verified the
-    #    round the change lands, not ride their round-10 greens to the
-    #    back of the staleness rotation.
-    changed_r11 = (
-        [
-            "peer_search_rank_window_topk",
-            "peer_search_probe_parity",
-        ]
-        if latest_round == 10
-        else []
-    )
-    # 4. round 12: queries whose Spark path or oracle SQL changed —
-    #    the zero-norm filter entered every ivf_assign plan, the
-    #    salt-rung oracle gained the empty-input coalesce, the
-    #    rank-window production/parity queries now run through the
-    #    per-snapshot window memo, and the streaming dedup replay
-    #    reads its sink with an explicit schema.
-    changed_r12 = (
-        [
-            "auto_salted_agg_returnflag",
-            "peer_search_rank_window_topk",
-            "rank_window_derived_parity",
-            "streaming_dedup_serving_replay",
-            "ann_ivf_topk_embeddings",
-            "ann_ivf_derived_density",
-            "ann_ivf_nightly_e2e",
-            "ann_ivf_incremental_insert",
-            "streaming_ann_serving_replay",
-        ]
-        if latest_round == 11
-        else []
-    )
-    # 5. round 13: the versioned publish moved to staging-dir +
-    #    atomic-rename claiming, and rank_window_insert gained the
-    #    duplicate-arrival anti-join — the e2e queries riding those
-    #    paths get driver re-verification the round the change lands.
-    changed_r13 = (
-        [
-            "rank_window_versioned_publish_e2e",
-            "rank_window_insert_e2e",
-            "streaming_peer_serving_replay",
-        ]
-        if latest_round == 12
-        else []
-    )
-    # 6. round 14: the full-dim production query now DISPATCHES
-    #    kernel-vs-window (the kernel runs at oracle scales), the
-    #    rank-window probe/insert/compact paths moved through the
-    #    shared _probe_fetch/_index_rows cells with metadata-driven
-    #    family dispatch, and the versioned publish gained
-    #    marker-verified claims + wreck quarantine — every query on
-    #    those paths gets driver re-verification the round the change
-    #    lands.
-    changed_r14 = (
-        [
-            "peer_search_fulldim_topk",
-            "peer_search_fulldim_recall",
-            "peer_search_probe_parity",
-            "rank_window_delete_e2e",
-            "rank_window_insert_e2e",
-            "rank_window_nightly_e2e",
-            "rank_window_versioned_publish_e2e",
-            "streaming_peer_serving_replay",
-        ]
-        if latest_round == 13
-        else []
-    )
-    # 7. round 15: the probe fetch gained the broadcast_probes gate
-    #    (default-True plans unchanged, but the shared body changed),
-    #    compact/insert resolve direction through the renamed/extended
-    #    resolver, and the versioned publish's wreck quarantine is now
-    #    verified-after-rename — every e2e query riding those cells
-    #    gets driver re-verification the round the change lands.
-    # ... and the candidate-pruned re-rank moved its NaN/threshold
-    # guards above the top-K window (scores evaluate once; set
-    # equality pytest-pinned vs the crossjoin oracle) — every query
-    # riding hybrid_topk_pruned re-verifies too.
-    changed_r15 = (
-        [
-            "peer_search_probe_parity",
-            "peer_search_fulldim_probe_parity",
-            "rank_window_delete_e2e",
-            "rank_window_insert_e2e",
-            "projection_window_delete_e2e",
-            "projection_window_insert_e2e",
-            "rank_window_versioned_publish_e2e",
-            "streaming_peer_serving_replay",
-            "streaming_projection_serving_replay",
-            "peer_search_hybrid_topk_pruned",
-            "peer_search_pruned_recall",
-            "peer_search_rank_window_topk",
-            "rank_window_derived_parity",
-            "rank_window_nightly_e2e",
-            "peer_search_fulldim_topk",
-            "peer_search_fulldim_recall",
-            # session 2: ann_lsh re-rank norms moved below the pair
-            # join (bit-identical values; re-verified at 3 scales)
-            "ann_lsh_topk_embeddings",
-        ]
-        if latest_round == 14
-        else []
-    )
-    # 8. round 16 (optimization round 2): the serving-dispatch
-    #    throughput constants rotated to the round-15 re-measure IN
-    #    LOCKSTEP with their SQL twin (the oracle's literals are built
-    #    from the constants at registration) — the dispatch-evidence
-    #    query's computed cost_ratio changed and must be driver
-    #    re-verified against the rotated oracle the round it lands,
-    #    along with the e2e query that rides the routing decision.
-    #    ... the ANN sign-LSH pair chain now repartitions by __qid
-    #    BELOW the dedup so dedup + scoring + top-K share one exchange
-    #    (same distinct set, same values; re-verified at 3 scales);
-    #    the cold window derivation overlaps its calibration kernel
-    #    with the rank build on driver threads and materializes the
-    #    shared rank (same derived window, same candidates); the ALS
-    #    prep derives its dense-id maps concurrently and feeds the
-    #    auto-sizer a precomputed equal count (same block count, same
-    #    model).  Every query riding those cells re-verifies the round
-    #    the change lands.
-    changed_r16 = (
-        [
-            "peer_search_serving_dispatch",
-            "peer_search_serve_batch_e2e",
-            "ann_lsh_topk_embeddings",
             "peer_search_rank_window_topk",
             "rank_window_derived_parity",
             "rank_window_derivation_contract",
             "rank_window_nightly_e2e",
+            "rank_window_warm_nightly_e2e",
+            "rank_window_delete_e2e",
+            "rank_window_insert_e2e",
+            "rank_window_versioned_publish_e2e",
+            "peer_search_probe_parity",
+            "peer_search_serve_batch_e2e",
+            "streaming_peer_serving_replay",
             "peer_search_fulldim_topk",
             "peer_search_fulldim_recall",
             "peer_search_fulldim_dispatch",
             "peer_search_fulldim_probe_parity",
-            "peer_search_probe_parity",
-            "peer_search_hybrid_topk_pruned",
-            "peer_search_pruned_recall",
-            "streaming_peer_serving_replay",
+            "projection_window_delete_e2e",
+            "projection_window_insert_e2e",
             "streaming_projection_serving_replay",
-            "dense_id_ratings_maps",
-            "als_recommend_topn_contract",
         ]
-        if latest_round == 15
+        if latest_round == 16
         else []
     )
     stale_companions = [
@@ -285,14 +158,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     ]
     pinned = [
         n
-        for n in stale_companions
-        + changed_r9
-        + changed_r11
-        + changed_r12
-        + changed_r13
-        + changed_r14
-        + changed_r15
-        + changed_r16
+        for n in stale_companions + changed
         if n in QUERIES and n not in fresh
     ]
     pool = [

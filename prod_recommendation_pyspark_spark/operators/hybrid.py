@@ -6,7 +6,7 @@ w_havs·haversine`` blended over *all* pairs, then threshold + top-K per
 left row (driver constants th=0.0, topK=15, w_hops=0.399, w_havs=0.001
 at search_ranking_peers.py:606-613).
 
-Three implementations with identical semantics:
+Two exact scorers and one candidate family, with identical semantics:
 
 * ``hybrid_topk_crossjoin`` — fully declarative: crossJoin + native
   dot-product/when-ladder/trig expressions + windowed top-K.  Exact,
@@ -19,11 +19,16 @@ Three implementations with identical semantics:
   shuffles, zero driver transit — neither the reference's
   driver-collected closure lists (:538-549) nor a driver-relayed
   broadcast of the right side.
-* ``rank_window_candidates`` + ``hybrid_topk_pruned(candidates=...)``
-  — the LINEAR-candidate production path (round 9): per-NAICS-level
+* the WINDOW-INDEX family + ``hybrid_topk_pruned(candidates=...)`` —
+  the LINEAR-candidate production path (round 9): per-NAICS-level
   sorted-neighborhood candidates, exact scoring on candidates only.
-  9-23× faster than the exact kernel at sf1 with measured recall
-  1.0000 at window=256; the kernel stays as the oracle baseline.
+  One body per stage — derivation, candidates, index, probe, insert,
+  compact, ``serve_batch`` — parametrized by the within-arm sort key
+  (``_window_key``): the 2-D angle (``rank_window_*``; 9-23× faster
+  than the exact kernel at sf1 with measured recall 1.0000 at
+  window=256) or a fixed-direction projection at any dim (the
+  ``projection_window_*`` forwarders).  The kernel stays as the oracle
+  baseline.
 """
 
 from __future__ import annotations
@@ -593,49 +598,59 @@ def _derivation_sample(
     )
 
 
-def _calibration_exact_topk(
-    sample: DataFrame, right: DataFrame,
-    left_id: str, right_id: str, **score_kwargs,
-) -> DataFrame:
-    """Exact top-k of the calibration sample against the full corpus
-    — ALWAYS the blocked kernel, deliberately: ``hybrid_topk_crossjoin``
-    looks cheaper at tiny×big shape but broadcasts the CORPUS side and
-    shuffles every scored pair into its top-k window, both of which
-    break at real corpus sizes; the blocked kernel bounds worker
-    memory and map-side-reduces each block to k candidates per
-    prospect before the re-rank shuffle, so the calibration pass stays
-    |sample|·k-shaped on the wire at any |R|.
+def _calibrated_rank(
+    spark, u: DataFrame, sample, right: DataFrame,
+    left_id: str, right_id: str, **scoring,
+):
+    """Rank ``u`` and read the window need off it, with the distributed
+    rank and the calibration pass running as CONCURRENT driver jobs
+    (guide §2.6: actions are only sequential because the driver calls
+    them sequentially).  The two are independent by construction — the
+    rank shuffles the armed union, the calibration exact-scores the
+    sample against the corpus — and only ``_needed_window_stats`` needs
+    both, so the cold derivation's wall drops from rank + calibration
+    to ~max(rank, calibration).  Two driver threads, FIFO scheduling
+    (the later job back-fills the earlier one's task tail).
 
-    ``n_left_chunks=1`` is pinned (not auto-probed): the sample is
-    ≥8-to-~hundreds of rows by construction (``_derivation_sample``),
-    always one chunk — pinning it skips the left-side geometry probe's
-    two jobs on a path whose cost is pure fixed overhead at small SF."""
-    return hybrid_topk(
-        sample, right, left_id, right_id, n_left_chunks=1, **score_kwargs
-    )
+    ``sample`` is a thunk returning ``(sample frame, n_sampled)``; it
+    runs on the calibration thread.  Both sides are materialized: the
+    rank is consumed by the stats job and (on the candidate path) both
+    sides of the window fetch, the calibration pairs by the stats job.
+    Returns ``(clis, pros, n_pairs, max_needed)`` — the rank's two side
+    projections (:func:`_rank_sides`) and the need statistics
+    (``(0, None)`` on an empty sample).
 
-
-def _rank_overlapping_calibration(spark, u: DataFrame, calibrate):
-    """Run the distributed rank and the calibration pass as CONCURRENT
-    driver jobs (guide §2.6: actions are only sequential because the
-    driver calls them sequentially).  The two are independent by
-    construction — the rank shuffles the armed union, the calibration
-    exact-scores the sample against the corpus — and only
-    ``_needed_window_stats`` needs both, so the cold derivation's wall
-    drops from rank + calibration to ~max(rank, calibration).  Two
-    driver threads, FIFO scheduling (the later job back-fills the
-    earlier one's task tail).
-
-    ``calibrate`` is a thunk returning the MATERIALIZED calibration
-    id-pairs (or None when the sample is empty); the rank side is
-    materialized too (both are consumed more than once downstream).
-    Returns ``(ranked, pairs)``."""
+    The calibration's exact top-k is ALWAYS the blocked kernel,
+    deliberately: ``hybrid_topk_crossjoin`` looks cheaper at tiny×big
+    shape but broadcasts the CORPUS side and shuffles every scored
+    pair into its top-k window, both of which break at real corpus
+    sizes; the kernel bounds worker memory and map-side-reduces each
+    block to k candidates per prospect, so the pass stays
+    |sample|·k-shaped on the wire at any |R|.  ``n_left_chunks=1`` is
+    pinned: the sample is ≥8-to-~hundreds of rows by construction
+    (:func:`_derivation_sample`), always one chunk — pinning it skips
+    the left-side geometry probe's two jobs."""
     from concurrent.futures import ThreadPoolExecutor
+
+    def calibrate():
+        frame, n_sampled = sample()
+        if not n_sampled:
+            return None  # empty left: any window yields empty
+        exact = hybrid_topk(
+            frame, right, left_id, right_id, n_left_chunks=1, **scoring
+        )
+        return exact.select(
+            F.col(left_id).alias("__tid"), F.col(right_id).alias("__rid")
+        ).localCheckpoint()
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         fut_rank = pool.submit(_distributed_rank, u, spark, True)
         fut_pairs = pool.submit(calibrate)
-        return fut_rank.result(), fut_pairs.result()
+        ranked, pairs = fut_rank.result(), fut_pairs.result()
+    clis, pros = _rank_sides(ranked)
+    if pairs is None:
+        return clis, pros, 0, None
+    return (clis, pros, *_needed_window_stats(pairs, pros, clis))
 
 
 def _needed_window_stats(
@@ -694,6 +709,7 @@ def rank_window_candidates(
     min_window: int = 64,
     window_cache: dict | None = None,
     cache_key=None,
+    direction: list[float] | None = None,
 ) -> DataFrame:
     """LINEAR-candidate generation for the hybrid peer score — the
     asymptotic replacement for :func:`hybrid_candidates`, whose two
@@ -799,69 +815,48 @@ def rank_window_candidates(
     staleness is the caller's contract: key by snapshot identity
     (path + version/date), never by table NAME across reloads, and
     drop the entry when the corpus is rebuilt (the nightly rhythm
-    re-derives at index build instead — :func:`rank_window_index`)."""
+    re-derives at index build instead — :func:`rank_window_index`).
+
+    ``direction`` (fixed literals) swaps the 2-D angle key for the
+    vectors' projection onto it — the projection family at any dim
+    (:func:`projection_window_candidates`); everything else above
+    applies unchanged, except that exactness becomes measured recall."""
     spark = left.sparkSession
-    _require_dim2(right, vec_col, "rank_window_candidates(right)")
-    _require_dim2(left, vec_col, "rank_window_candidates(left)")
+    if direction is None:
+        _require_dim2(right, vec_col, "rank_window_candidates(right)")
+        _require_dim2(left, vec_col, "rank_window_candidates(left)")
     if (
         window is None
         and window_cache is not None
         and cache_key in window_cache
     ):
         window = int(window_cache[cache_key])
-    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len)
-    pro = _arm_prospects(left, left_id, vec_col, naics_col, code_len)
+    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len, direction)
+    pro = _arm_prospects(left, left_id, vec_col, naics_col, code_len, direction)
     u = cli.unionByName(pro)
     if window is None:
         # COLD derivation: the calibration pass (sample agg + exact
-        # |sample|·|R| kernel) is independent of the rank build, so
-        # both run as concurrent driver jobs (guide §2.6) and the rank
-        # is materialized — it is consumed by the derivation stats AND
+        # |sample|·|R| kernel) overlaps the rank build, and the rank is
+        # materialized — it is consumed by the derivation stats AND
         # both sides of the window-fetch join (guide §2.4).
-        def _calibrate():
-            sample, n_sampled, _ = _derivation_sample(
-                left, left_id, sample_mod
-            )
-            if not n_sampled:
-                return None  # empty left: any window yields empty
-            exact = _calibration_exact_topk(
-                sample, right, left_id, right_id,
-                vec_col=vec_col, naics_col=naics_col,
-                lat_col=lat_col, lon_col=lon_col,
-                k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            )
-            return exact.select(
-                F.col(left_id).alias("__tid"), F.col(right_id).alias("__rid")
-            ).localCheckpoint()
-
-        ranked, pairs = _rank_overlapping_calibration(spark, u, _calibrate)
+        clis_base, pros_ins, _, mx = _calibrated_rank(
+            spark, u,
+            lambda: _derivation_sample(left, left_id, sample_mod)[:2],
+            right, left_id, right_id,
+            vec_col=vec_col, naics_col=naics_col,
+            lat_col=lat_col, lon_col=lon_col,
+            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
+        )
+        window = _ladder_window(max(min_window, 2 * (mx or 0)))
+        if window_cache is not None:
+            window_cache[cache_key] = int(window)
     else:
         # warm path (window known): the rank's two consumers sit in ONE
         # job (both sides of the window-fetch), whose subtrees execute
         # as parallel stages off the checkpointed layout — an eager
         # materialization pass here would SERIALIZE that (measured
         # +0.3-0.5s at sf0.1), so only the cold path materializes
-        ranked, pairs = _distributed_rank(u, spark), None
-    clis_base = ranked.filter(F.col("__isc") == 1).select(
-        F.col("__id").alias("__rid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__cpos"),
-    )
-    pros_ins = ranked.filter(F.col("__isc") == 0).select(
-        F.col("__id").alias("__tid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__ins"),
-    )
-    if window is None:
-        if pairs is not None:
-            _, mx = _needed_window_stats(pairs, pros_ins, clis_base)
-        else:
-            mx = None
-        window = _ladder_window(max(min_window, 2 * (mx or 0)))
-        if window_cache is not None:
-            window_cache[cache_key] = int(window)
+        clis_base, pros_ins = _rank_sides(_distributed_rank(u, spark))
     clis_pos = clis_base.withColumn(
         "__wb", F.floor((F.col("__cpos") - 1) / window)
     )
@@ -870,7 +865,7 @@ def rank_window_candidates(
 
 def _require_dim2(df: DataFrame, vec_col: str, who: str) -> None:
     """Fail LOUDLY when the rank-window path is handed vectors it
-    cannot order correctly.  ``_v1n_expr`` uses component 2 of the
+    cannot order correctly.  ``_window_key`` uses component 2 of the
     normalized vector as the angle proxy — a total order that matches
     the dot product ONLY for 2-D non-negative vectors.  Before this
     guard, a caller passing 64-dim embeddings got silently wrong
@@ -889,7 +884,41 @@ def _require_dim2(df: DataFrame, vec_col: str, who: str) -> None:
         )
 
 
-def _v1n_expr(vec_col: str):
+def _projection_key(direction: list[float], vec_col: str):
+    """The projection-window sort key: the vector's dot product with a
+    FIXED ``direction``, folded strictly left-to-right so every caller
+    (candidate generator, index build, probe, insert) and the SQL
+    oracle compute the bit-identical key.  Aliased ``__v1n`` to ride
+    the shared arm/rank machinery.
+
+    A non-null vector whose length is not ``len(direction)`` raises
+    inside the plan (``raise_error``, like :func:`_dim_guarded`; no
+    extra job): ``element_at`` past the end is NULL with ANSI off, so a
+    too-long direction would key every row NULL and a too-short one by
+    a partial projection — both silently wrong artifacts."""
+    v = F.col(vec_col)
+    proj = F.element_at(v, 1).cast("double") * float(direction[0])
+    for i, w in enumerate(direction[1:], start=2):
+        proj = proj + F.element_at(v, i).cast("double") * float(w)
+    msg = F.concat(
+        F.lit(f"projection window key: a '{vec_col}' vector has dim="),
+        F.size(v).cast("string"),
+        F.lit(f", the direction has {len(direction)} components"),
+    )
+    bad = v.isNotNull() & (F.size(v) != len(direction))
+    return F.when(bad, F.raise_error(msg)).otherwise(proj).alias("__v1n")
+
+
+def _window_key(vec_col: str, direction: list[float] | None = None):
+    """The within-arm sort key (``__v1n``) — the ONLY thing the two
+    window-index families differ in.  ``direction=None``: the 2-D
+    angle proxy, component 2 of the normalized vector (exact for 2-D
+    non-negative vectors, guarded by the eager :func:`_require_dim2`);
+    a list: the fixed-direction projection at any dim
+    (:func:`_projection_key`).  Every arm, rank, derivation, candidate,
+    index, probe and insert path keys through here."""
+    if direction is not None:
+        return _projection_key(direction, vec_col)
     nrm = F.sqrt(
         F.aggregate(
             F.col(vec_col).cast("array<double>"),
@@ -900,18 +929,6 @@ def _v1n_expr(vec_col: str):
     return (F.element_at(F.col(vec_col), 2).cast("double") / nrm).alias(
         "__v1n"
     )
-
-
-def _projection_key(direction: list[float], vec_col: str):
-    """The projection-window sort key: the vector's dot product with a
-    FIXED ``direction``, folded strictly left-to-right so every caller
-    (candidate generator, index build, probe, insert) and the SQL
-    oracle compute the bit-identical key.  Aliased ``__v1n`` to ride
-    the shared arm/rank machinery."""
-    proj = F.element_at(F.col(vec_col), 1).cast("double") * float(direction[0])
-    for i, w in enumerate(direction[1:], start=2):
-        proj = proj + F.element_at(F.col(vec_col), i).cast("double") * float(w)
-    return proj.alias("__v1n")
 
 
 def _direction_str(direction: list[float]) -> str:
@@ -949,20 +966,18 @@ def _arm_clients(
     vec_col: str,
     naics_col: str,
     code_len: int,
-    key_expr=None,
+    direction: list[float] | None = None,
 ) -> DataFrame:
     """Clients exploded to their arms: malformed codes go ONLY to the
     lvl −1 sentinel arm; well-formed codes to lvl 0 (global) + every
-    p-prefix arm.  ``key_expr`` (a Column aliased ``__v1n``) overrides
-    the 2-D angle proxy as the within-arm sort key — the
-    projection-window generalization (round 13)."""
+    p-prefix arm, keyed by :func:`_window_key`."""
     wf_lvls = F.array(*[F.lit(i) for i in range(code_len + 1)])
     mal_lvls = F.array(F.lit(-1))
     malformed = _malformed_expr(naics_col, code_len)
     return (
         right.select(
             F.col(right_id).alias("__id"),
-            key_expr if key_expr is not None else _v1n_expr(vec_col),
+            _window_key(vec_col, direction),
             F.col(naics_col),
         )
         .select(
@@ -989,7 +1004,7 @@ def _arm_prospects(
     vec_col: str,
     naics_col: str,
     code_len: int,
-    key_expr=None,
+    direction: list[float] | None = None,
 ) -> DataFrame:
     """Prospects probe EVERY arm (a malformed prospect's lvl>=1 probes
     carry junk/NULL prefixes — NULL keys drop from the equi-join, junk
@@ -999,7 +1014,7 @@ def _arm_prospects(
     return (
         left.select(
             F.col(left_id).alias("__id"),
-            key_expr if key_expr is not None else _v1n_expr(vec_col),
+            _window_key(vec_col, direction),
             F.col(naics_col),
         )
         .select(
@@ -1088,6 +1103,25 @@ def _distributed_rank(
     return ranked.localCheckpoint() if materialize else ranked
 
 
+def _rank_sides(ranked: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two side projections of a :func:`_distributed_rank` output:
+    clients ``(__rid, __lvl, __blk, __cpos)`` and prospects
+    ``(__tid, __lvl, __blk, __ins)``."""
+    clis = ranked.filter(F.col("__isc") == 1).select(
+        F.col("__id").alias("__rid"),
+        "__lvl",
+        "__blk",
+        F.col("__pos").alias("__cpos"),
+    )
+    pros = ranked.filter(F.col("__isc") == 0).select(
+        F.col("__id").alias("__tid"),
+        "__lvl",
+        "__blk",
+        F.col("__pos").alias("__ins"),
+    )
+    return clis, pros
+
+
 def _window_fetch(
     pros_ins: DataFrame,
     clis_pos: DataFrame,
@@ -1100,7 +1134,7 @@ def _window_fetch(
     ≤3 covering position blocks.  The batch candidate path's fetch:
     the prospect side is the full left relation, and a shuffle join on
     the bounded (lvl, blk, wb) key is the right plan at any |L| (the
-    serving probe fetches in :func:`_probe_fetch`)."""
+    serving probe fetches in :func:`_projection_probe_resolved`)."""
     probes = pros_ins.select(
         "__tid",
         "__lvl",
@@ -1146,6 +1180,7 @@ def derive_rank_window_stats(
     min_window: int = 64,
     prev_window: int | None = None,
     warm_sample_mod: int | None = None,
+    direction: list[float] | None = None,
 ) -> dict:
     """STANDALONE window derivation — for :func:`rank_window_index`
     builds (derive once at index time; probes must reuse the index's
@@ -1202,16 +1237,24 @@ def derive_rank_window_stats(
     sample nothing, the floor is ≥ the measured exact-recall need by
     a wide margin).  With ``prev_window``, two extra keys:
     ``warm_start`` (True = previous window kept) and ``warm_window``
-    (what the small-sample pass derived)."""
+    (what the small-sample pass derived).
+
+    ``direction`` derives for the projection family
+    (:func:`derive_projection_window_stats`)."""
     spark = left.sparkSession
+    scoring = dict(
+        vec_col=vec_col, naics_col=naics_col,
+        lat_col=lat_col, lon_col=lon_col,
+        k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
+    )
     if prev_window is not None:
+        same = dict(
+            scoring, code_len=code_len, min_window=min_window,
+            direction=direction,
+        )
         warm = derive_rank_window_stats(
             left, right, left_id, right_id,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            sample_mod=warm_sample_mod or sample_mod * 8,
-            code_len=code_len, min_window=min_window,
+            sample_mod=warm_sample_mod or sample_mod * 8, **same,
         )
         if warm["window"] <= prev_window:
             return {
@@ -1221,56 +1264,25 @@ def derive_rank_window_stats(
                 "warm_window": warm["window"],
             }
         full = derive_rank_window_stats(
-            left, right, left_id, right_id,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            sample_mod=sample_mod, code_len=code_len,
-            min_window=min_window,
+            left, right, left_id, right_id, sample_mod=sample_mod, **same
         )
         return {
             **full,
             "warm_start": False,
             "warm_window": warm["window"],
         }
-    _require_dim2(right, vec_col, "derive_rank_window_stats(right)")
-    _require_dim2(left, vec_col, "derive_rank_window_stats(left)")
+    if direction is None:
+        _require_dim2(right, vec_col, "derive_rank_window_stats(right)")
+        _require_dim2(left, vec_col, "derive_rank_window_stats(left)")
     sample, n_sampled, used_mod = _derivation_sample(
         left, left_id, sample_mod
     )
-    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len)
-    pro = _arm_prospects(sample, left_id, vec_col, naics_col, code_len)
-
-    # rank build and calibration kernel overlap as concurrent driver
-    # jobs (guide §2.6); the rank is materialized because the stats
-    # job consumes both of its side projections (guide §2.4)
-    def _calibrate():
-        exact = _calibration_exact_topk(
-            sample, right, left_id, right_id,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-        )
-        return exact.select(
-            F.col(left_id).alias("__tid"), F.col(right_id).alias("__rid")
-        ).localCheckpoint()
-
-    ranked, pairs = _rank_overlapping_calibration(
-        spark, cli.unionByName(pro), _calibrate
+    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len, direction)
+    pro = _arm_prospects(sample, left_id, vec_col, naics_col, code_len, direction)
+    _, _, n_pairs, mx = _calibrated_rank(
+        spark, cli.unionByName(pro), lambda: (sample, n_sampled),
+        right, left_id, right_id, **scoring,
     )
-    clis_base = ranked.filter(F.col("__isc") == 1).select(
-        F.col("__id").alias("__rid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__cpos"),
-    )
-    pros_ins = ranked.filter(F.col("__isc") == 0).select(
-        F.col("__id").alias("__tid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__ins"),
-    )
-    n_pairs, mx = _needed_window_stats(pairs, pros_ins, clis_base)
     return {
         "n_sampled": n_sampled,
         "n_pairs": n_pairs,
@@ -1278,19 +1290,6 @@ def derive_rank_window_stats(
         "window": _ladder_window(max(min_window, 2 * (mx or 0))),
         "sample_mod": used_mod,
     }
-
-
-def derive_rank_window(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    **kwargs,
-) -> int:
-    """The derived window alone — see :func:`derive_rank_window_stats`."""
-    return derive_rank_window_stats(left, right, left_id, right_id, **kwargs)[
-        "window"
-    ]
 
 
 def rank_window_index(
@@ -1311,6 +1310,7 @@ def rank_window_index(
     sample_mod: int = 500,
     min_window: int = 64,
     prev_window: int | None = None,
+    direction: list[float] | None = None,
 ) -> DataFrame:
     """Build the PERSISTABLE client-side index of the rank-window peer
     search — the serving-path split (same pattern as the incremental
@@ -1347,9 +1347,13 @@ def rank_window_index(
     ``__w`` off the previous artifact) warm-starts that derivation —
     the nightly amortization: the calibration kernel re-runs in full
     only when the corpus drifted past the previous window (see
-    :func:`derive_rank_window_stats`)."""
+    :func:`derive_rank_window_stats`).
+
+    ``direction`` builds the projection family's artifact
+    (:func:`projection_window_index`), stamped with ``__dir`` too."""
     spark = right.sparkSession
-    _require_dim2(right, vec_col, "rank_window_index(right)")
+    if direction is None:
+        _require_dim2(right, vec_col, "rank_window_index(right)")
     if window is None:
         if calibration is None or calibration_id is None:
             raise ValueError(
@@ -1365,18 +1369,20 @@ def rank_window_index(
             k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
             sample_mod=sample_mod, code_len=code_len,
             min_window=min_window, prev_window=prev_window,
+            direction=direction,
         )["window"]
-    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len)
+    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len, direction)
     ranked = _distributed_rank(cli, spark)
-    return _index_rows(ranked, window)
+    return _index_rows(ranked, window, direction)
 
 
 def _index_rows(
-    ranked: DataFrame, window: int, dir_str: str | None = None
+    ranked: DataFrame, window: int, direction: list[float] | None = None
 ) -> DataFrame:
     """Artifact rows from a ``_distributed_rank`` output: dense per-arm
     positions, window blocks, and the build metadata (``__w``; plus
-    ``__dir`` for the projection family) — shared by the nightly
+    ``__dir`` for the projection family — ``[]`` stamps the empty form
+    an emptied projection artifact keeps) — shared by the nightly
     builds, compaction, and insert so every producer stamps the same
     schema."""
     cols = [
@@ -1388,8 +1394,8 @@ def _index_rows(
         F.floor((F.col("__pos") - 1) / window).alias("__wb"),
         F.lit(int(window)).alias("__w"),
     ]
-    if dir_str is not None:
-        cols.append(F.lit(dir_str).alias("__dir"))
+    if direction is not None:
+        cols.append(F.lit(_direction_str(direction)).alias("__dir"))
     return ranked.select(*cols)
 
 
@@ -1408,51 +1414,95 @@ def _meta_bounds(index: DataFrame, col: str) -> tuple:
     return (row["lo"], row["hi"]) if row is not None else (None, None)
 
 
-def _resolve_probe_window(index: DataFrame, window: int | None) -> int:
-    """Window the probe MUST use = the window the index was built
-    with: the insertion count and the ``__wb`` equi-join are
-    silently wrong on any other value (round-10 advice).  Indexes
-    carry it as the ``__w`` metadata column; this reads it (from the
-    version manifest of a published read, else one small agg job —
-    :func:`_meta_bounds`) and either returns it (``window=None`` —
-    derive) or asserts equality (explicit ``window`` — validate).  The
-    agg checks min == max, not an arbitrary first row: an index path
-    holding MIXED builds (a window-32 rebuild appended over a
-    window-64 artifact, or two builds unioned) is exactly the
-    silent-wrong-neighborhood hazard this function exists to catch,
-    so it raises loudly.  Pre-round-11 indexes without ``__w`` require
-    an explicit window."""
-    if "__w" in index.columns:
-        lo, hi = _meta_bounds(index, "__w")
+def _resolve_window_meta(
+    index: DataFrame,
+    window: int | None = None,
+    direction: list[float] | None = None,
+    who: str = "rank_window_probe",
+    empty_ok: bool = False,
+) -> tuple[int, list[float] | None]:
+    """The build metadata every consumer of a window artifact MUST use
+    — ``(window, direction)``, direction None for the 2-D family (no
+    ``__dir`` column): the insertion count, the ``__wb`` equi-join and
+    the prospect keys are silently wrong on any other value (round-10
+    advice).  Read from the version manifest of a published read, else
+    one small agg job per column (:func:`_meta_bounds`).  Shared by
+    both probes, ``serve_batch``, insert, compact and the streaming
+    loops; ``who`` names the calling operator in every error.
+
+    Each column is checked min == max, not an arbitrary first row: an
+    index path holding MIXED builds (a rebuild appended over an old
+    artifact, or two builds unioned) is exactly the
+    silent-wrong-neighborhood hazard this exists to catch, so it
+    raises loudly.  ``window=None``/``direction=None`` take the stored
+    value; explicit values are validated (a mismatch raises).
+    Pre-round-11 indexes without ``__w`` require an explicit window.
+    An EMPTY index (e.g. fully tombstoned) resolves to the caller's
+    window (default 64) and direction; a projection artifact with no
+    direction to fall back on raises, or with ``empty_ok`` resolves to
+    ``[]`` — compaction keeps the emptied artifact in its family."""
+    if "__dir" in index.columns:
+        lo, hi = _meta_bounds(index, "__dir")
         if lo is None:
-            # empty index: every window yields the empty result
-            return window if window is not None else 64
-        if int(lo) != int(hi):
+            # empty index: any direction yields the empty result
+            if direction is not None:
+                direction = [float(w) for w in direction]
+            elif empty_ok:
+                direction = []
+            else:
+                raise ValueError(
+                    f"{who}: the index is EMPTY and no "
+                    "direction was passed — prospect/arrival keys cannot "
+                    "be computed; pass direction= explicitly."
+                )
+        elif lo != hi:
             raise ValueError(
-                f"rank_window_probe: index holds MIXED build windows "
-                f"__w ∈ [{int(lo)}, {int(hi)}] — e.g. a "
-                "rebuild appended over an old artifact. Rebuild the "
-                "index path cleanly; probing mixed builds silently "
-                "fetches wrong neighborhoods."
+                f"{who}: index holds MIXED projection "
+                f"directions ({lo!r} vs {hi!r}) — e.g. a "
+                "rebuild under a new direction appended over an old "
+                "artifact. Rebuild the index path cleanly."
             )
-        iw = int(lo)
+        else:
+            stored = _parse_direction(lo)
+            if direction is not None and [float(w) for w in direction] != stored:
+                raise ValueError(
+                    f"{who}: direction={list(direction)} "
+                    f"does not match the index's build direction {stored} — "
+                    "probing with a mismatched projection silently fetches "
+                    "wrong neighborhoods. Pass direction=None to use the "
+                    "index's."
+                )
+            direction = stored
+    else:
+        direction = None
+    if "__w" not in index.columns:
         if window is None:
-            return iw
-        if int(window) != iw:
             raise ValueError(
-                f"rank_window_probe: window={window} does not match "
-                f"the index's build window __w={iw} — probing with a "
-                "mismatched window silently fetches wrong "
-                "neighborhoods. Pass window=None to use the index's."
+                f"{who}: window=None but the index carries no "
+                "__w metadata column (pre-round-11 artifact) — pass the "
+                "window the index was built with explicitly."
             )
-        return iw
-    if window is None:
+        return int(window), direction
+    lo, hi = _meta_bounds(index, "__w")
+    if lo is None:
+        # empty index: every window yields the empty result
+        return (window if window is not None else 64), direction
+    if int(lo) != int(hi):
         raise ValueError(
-            "rank_window_probe: window=None but the index carries no "
-            "__w metadata column (pre-round-11 artifact) — pass the "
-            "window the index was built with explicitly."
+            f"{who}: index holds MIXED build windows "
+            f"__w ∈ [{int(lo)}, {int(hi)}] — e.g. a "
+            "rebuild appended over an old artifact. Rebuild the "
+            "index path cleanly; probing mixed builds silently "
+            "fetches wrong neighborhoods."
         )
-    return int(window)
+    if window is not None and int(window) != int(lo):
+        raise ValueError(
+            f"{who}: window={window} does not match "
+            f"the index's build window __w={int(lo)} — probing with a "
+            "mismatched window silently fetches wrong "
+            "neighborhoods. Pass window=None to use the index's."
+        )
+    return int(lo), direction
 
 
 def rank_window_probe(
@@ -1476,7 +1526,8 @@ def rank_window_probe(
     splitting the prospect set across batches cannot change any
     prospect's candidates.
 
-    Insertion point from the index alone (:func:`_probe_fetch`):
+    Insertion point from the index alone
+    (:func:`_projection_probe_resolved`):
     window blocks are dense (block ``wb`` holds positions
     ``wb·window+1 ..``), so the straddling block ``swb`` — the last
     block whose FIRST (key, id) ≤ the prospect's, read map-side off a
@@ -1528,28 +1579,35 @@ def rank_window_probe(
             "wrong neighborhoods)."
         )
     _require_dim2(left, vec_col, "rank_window_probe(left)")
-    window = _resolve_probe_window(index, window)
-    pro = _arm_prospects(left, left_id, vec_col, naics_col, code_len)
-    return _probe_fetch(
-        pro, index, window, left_id, right_id, tombstones,
+    window, _ = _resolve_window_meta(index, window)
+    return _projection_probe_resolved(
+        left, index, left_id, right_id, None, window,
+        vec_col, naics_col, code_len, tombstones,
         broadcast_probes=broadcast_probes,
     )
 
 
-def _probe_fetch(
-    pro: DataFrame,
+def _projection_probe_resolved(
+    left: DataFrame,
     index: DataFrame,
-    window: int,
     left_id: str,
     right_id: str,
-    tombstones: DataFrame | None,
+    direction: list[float] | None,
+    window: int,
+    vec_col: str = "vec",
+    naics_col: str = "naics",
+    code_len: int = CODE_LEN,
+    tombstones: DataFrame | None = None,
     broadcast_probes: bool = True,
 ) -> DataFrame:
-    """Key-agnostic probe body shared by :func:`rank_window_probe` and
-    :func:`projection_window_probe`, entirely in terms of the stored
-    ``__v1n`` sort keys — the probing family only differs in HOW the
-    prospect's ``__v1n`` is computed.  Two index scans and one
-    batch-sized exchange:
+    """THE probe body of both families, AFTER metadata resolution
+    (:func:`_resolve_window_meta`) — called by both public probes, and
+    directly by ``serve_batch`` and the streaming loops, which resolve
+    ``__w``/``__dir`` ONCE and must not re-run the metadata agg jobs
+    every micro-batch.  ``direction`` picks the prospect key
+    (:func:`_window_key`: None = the 2-D angle); everything after that
+    is in terms of the stored ``__v1n`` sort keys.  Two index scans
+    and one batch-sized exchange:
 
     1. BLOCK STARTS: the first row of every window block
        (``(__cpos − 1) % window == 0``, dense positions) collected into
@@ -1577,6 +1635,8 @@ def _probe_fetch(
     advice) — the fetch then shuffle-joins on the bounded
     (lvl, blk, wb) key."""
     from pyspark.sql import Window
+
+    pro = _arm_prospects(left, left_id, vec_col, naics_col, code_len, direction)
 
     k_lt = lambda a_v, a_i, b_v, b_i: (a_v < b_v) | (  # noqa: E731
         (a_v == b_v) & (a_i < b_i)
@@ -1673,19 +1733,15 @@ def rank_window_compact(
     re-rank runs over the STORED ``__v1n`` keys, which already carry
     the projection, and the ``__dir`` metadata is validated
     (mixed-direction artifacts raise) and re-stamped."""
-    w = _resolve_probe_window(index, None)
-    dir_str = None
-    if "__dir" in index.columns:
-        stored = _resolve_probe_direction(
-            index, None, who="rank_window_compact", empty_ok=True
-        )
-        # an EMPTIED (fully-tombstoned) artifact has no resolvable
-        # direction (round-15 advice: degrade gracefully, like
-        # _resolve_probe_window's empty-index default) — stamp the
-        # empty canonical form: values in an empty frame are
-        # irrelevant, but the column keeps the artifact in the
-        # projection family for a later direction-supplied insert
-        dir_str = _direction_str(stored) if stored is not None else ""
+    # an EMPTIED (fully-tombstoned) projection artifact has no stored
+    # direction (round-15 advice: degrade gracefully, like the
+    # empty-index window default) — it resolves to [] and re-stamps
+    # the empty canonical form: values in an empty frame are
+    # irrelevant, but the column keeps the artifact in the
+    # projection family for a later direction-supplied insert
+    w, direction = _resolve_window_meta(
+        index, who="rank_window_compact", empty_ok=True
+    )
     kept = index.join(
         F.broadcast(tombstones.selectExpr(
             f"{tombstones.columns[0]} AS __rid"
@@ -1698,7 +1754,7 @@ def rank_window_compact(
         F.lit(1).alias("__isc"),
     )
     ranked = _distributed_rank(u, index.sparkSession)
-    return _index_rows(ranked, w, dir_str)
+    return _index_rows(ranked, w, direction)
 
 
 def rank_window_insert(
@@ -1731,7 +1787,7 @@ def rank_window_insert(
     need trajectory 15 → 16 → 78 → 364 across four decades — density
     grows with scale); intraday arrival volumes ride the ×2
     derivation pad.  Mixed-window unions still raise at probe time
-    (``_resolve_probe_window``).
+    (``_resolve_window_meta``).
 
     PRECONDITION — new ids only (round-13 advice): an arrival whose
     id already exists in the index would union a SECOND ``__rid`` row
@@ -1755,32 +1811,25 @@ def rank_window_insert(
     computed with THAT stored projection (validated, re-stamped) —
     the direction travels with the artifact, so an insert can never
     rank arrivals by a different key than the corpus was built on."""
-    w = _resolve_probe_window(index, None)
     # ``direction`` is a FALLBACK for an EMPTIED __dir artifact only
     # (round-15 advice): a non-empty index resolves — and VALIDATES
     # the caller's value against — its own stored metadata, so an
     # insert can never key arrivals differently than the corpus; an
     # emptied artifact has nothing stored, and re-seeding it requires
-    # the caller to say which projection the family rides.
-    direction = (
-        _resolve_probe_direction(
-            index, direction, who="rank_window_insert"
-        )
-        if "__dir" in index.columns
-        else None
+    # the caller to say which projection the family rides.  A 2-D
+    # artifact ignores it.
+    w, direction = _resolve_window_meta(
+        index, direction=direction, who="rank_window_insert"
     )
     if direction is None:
         _require_dim2(arrivals, vec_col, "rank_window_insert(arrivals)")
-        key = None
-    else:
-        key = _projection_key(direction, vec_col)
     arrivals = arrivals.dropDuplicates([right_id]).join(
         index.select(F.col("__rid").alias(right_id)).distinct(),
         right_id,
         "left_anti",
     )
     new = _arm_clients(
-        arrivals, right_id, vec_col, naics_col, code_len, key_expr=key
+        arrivals, right_id, vec_col, naics_col, code_len, direction
     )
     old = index.select(
         F.col("__rid").alias("__id"), "__v1n", "__lvl", "__blk",
@@ -1789,9 +1838,7 @@ def rank_window_insert(
     ranked = _distributed_rank(
         old.unionByName(new), index.sparkSession
     )
-    return _index_rows(
-        ranked, w, None if direction is None else _direction_str(direction)
-    )
+    return _index_rows(ranked, w, direction)
 
 
 def derive_projection_window_stats(
@@ -1800,117 +1847,17 @@ def derive_projection_window_stats(
     left_id: str,
     right_id: str,
     direction: list[float],
-    vec_col: str = "vec",
-    naics_col: str = "naics",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    k: int = 15,
-    threshold: float = 0.0,
-    w_hops: float = DEFAULT_W_HOPS,
-    w_havs: float = DEFAULT_W_HAVS,
-    sample_mod: int = 500,
-    code_len: int = CODE_LEN,
-    min_window: int = 64,
-    prev_window: int | None = None,
-    warm_sample_mod: int | None = None,
+    **kwargs,
 ) -> dict:
-    """STANDALONE window derivation for the PROJECTION family — the
-    general-dim twin of :func:`derive_rank_window_stats`, with the
-    within-arm sort key swapped for the fixed-``direction`` projection
-    (:func:`_projection_key`).  Same estimator: exact-score a
-    deterministic prospect sample against the corpus (one linear
-    |sample|·|R| blocked-kernel pass), read each true top-k pair's
-    minimum required window off a shared rank of the client corpus +
-    sampled prospects, pad ×2, round up the power-of-two ladder, floor
-    ``min_window``.  Consumers: :func:`projection_window_index` builds
-    (derive once at index time, stamp ``__w`` + ``__dir``) and the
-    kernel-vs-window DISPATCH (round-13 verdict #1), which compares
-    the derived window's predicted candidate volume against the exact
-    kernel's — see :func:`projection_window_wins`.
-
-    ``prev_window``/``warm_sample_mod`` warm-start the derivation from
-    the previous snapshot's window exactly like
-    :func:`derive_rank_window_stats` (see its docstring): a ~8×
-    smaller-sample pass first, keep ``prev_window`` when it suffices,
-    escalate to the full pass when the corpus drifted past it."""
-    spark = left.sparkSession
-    if prev_window is not None:
-        warm = derive_projection_window_stats(
-            left, right, left_id, right_id, direction,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            sample_mod=warm_sample_mod or sample_mod * 8,
-            code_len=code_len, min_window=min_window,
-        )
-        if warm["window"] <= prev_window:
-            return {
-                **warm,
-                "window": int(prev_window),
-                "warm_start": True,
-                "warm_window": warm["window"],
-            }
-        full = derive_projection_window_stats(
-            left, right, left_id, right_id, direction,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            sample_mod=sample_mod, code_len=code_len,
-            min_window=min_window,
-        )
-        return {
-            **full,
-            "warm_start": False,
-            "warm_window": warm["window"],
-        }
-    sample, n_sampled, used_mod = _derivation_sample(
-        left, left_id, sample_mod
+    """:func:`derive_rank_window_stats` keyed by the fixed-``direction``
+    projection — the projection family's window derivation (same
+    estimator and warm start).  Consumers: :func:`projection_window_index`
+    builds and the kernel-vs-window DISPATCH (round-13 verdict #1),
+    which compares the derived window's predicted candidate volume
+    against the exact kernel's — see :func:`projection_window_wins`."""
+    return derive_rank_window_stats(
+        left, right, left_id, right_id, direction=direction, **kwargs
     )
-    key = _projection_key(direction, vec_col)
-    cli = _arm_clients(
-        right, right_id, vec_col, naics_col, code_len, key_expr=key
-    )
-    pro = _arm_prospects(
-        sample, left_id, vec_col, naics_col, code_len, key_expr=key
-    )
-
-    # rank build and calibration kernel overlap as concurrent driver
-    # jobs (guide §2.6); rank materialized for the stats job's two
-    # side projections (guide §2.4) — same shape as the rank twin
-    def _calibrate():
-        exact = _calibration_exact_topk(
-            sample, right, left_id, right_id,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-        )
-        return exact.select(
-            F.col(left_id).alias("__tid"), F.col(right_id).alias("__rid")
-        ).localCheckpoint()
-
-    ranked, pairs = _rank_overlapping_calibration(
-        spark, cli.unionByName(pro), _calibrate
-    )
-    clis_base = ranked.filter(F.col("__isc") == 1).select(
-        F.col("__id").alias("__rid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__cpos"),
-    )
-    pros_ins = ranked.filter(F.col("__isc") == 0).select(
-        F.col("__id").alias("__tid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__ins"),
-    )
-    n_pairs, mx = _needed_window_stats(pairs, pros_ins, clis_base)
-    return {
-        "n_sampled": n_sampled,
-        "n_pairs": n_pairs,
-        "max_needed": mx,
-        "window": _ladder_window(max(min_window, 2 * (mx or 0))),
-        "sample_mod": used_mod,
-    }
 
 
 #: Measured per-candidate cost ratio of the projection-window path vs
@@ -2088,7 +2035,8 @@ def serve_batch(
     the crossover as deployment prose — the serving twin of the batch
     query's :func:`projection_window_wins` dispatch (round-14 verdict
     #1).  Family (2-D rank window vs ``__dir`` projection) and build
-    metadata are resolved off the artifact exactly like the probes do;
+    metadata are resolved off the artifact by the probes' resolver
+    (:func:`_resolve_window_meta`);
     ``clients`` is the feature relation the artifact was built from
     (ideally the PUBLISHED feature snapshot — see
     ``publish_versioned(companions=...)``), used by the probe route's
@@ -2110,7 +2058,7 @@ def serve_batch(
 
     - PROBE (wins on clustered windows / modest corpora): fetch
       candidate pairs from the artifact
-      (:func:`rank_window_probe` / the projection twin), exact-score
+      (the shared probe body, :func:`_projection_probe_resolved`), exact-score
       them (:func:`_score_topk`) at the family's dim —
       tombstones anti-joined at pair level, the probe contract.
     - KERNEL (wins when the derived window stops pruning): the exact
@@ -2125,7 +2073,7 @@ def serve_batch(
     — which is what lets ``peer_search_serve_batch_e2e`` pin either
     route under one value oracle.  Reference anchor: the blocked
     batching intent at search_ranking_peers.py:489-494."""
-    window, direction, dim = _serving_route(index, who="serve_batch")
+    window, direction = _resolve_window_meta(index, who="serve_batch")
     if n_right is None:
         n_right = clients.count()
     probe_wins = serving_probe_wins(window, n_right, code_len=code_len)
@@ -2137,13 +2085,9 @@ def serve_batch(
         k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
     )
     if probe_wins:
-        cand = _serving_candidates(
-            batch, index, left_id, right_id, window, direction,
-            vec_col, naics_col, code_len, tombstones, broadcast_probes,
-        )
-        return _serving_rerank(
-            batch, clients, cand, left_id, right_id, dim,
-            broadcast_probes, **scoring,
+        return _serve_probed(
+            batch, index, clients, left_id, right_id, window, direction,
+            code_len, tombstones, broadcast_probes, **scoring,
         )
     live = (
         clients.join(
@@ -2155,68 +2099,38 @@ def serve_batch(
     return hybrid_topk(batch, live, left_id, right_id, **scoring)
 
 
-def _serving_route(
-    index: DataFrame, window: int | None = None, who: str = "serve_batch"
-) -> tuple[int, list[float] | None, int]:
-    """A serving artifact's family and build metadata, resolved ONCE:
-    ``(window, direction, dim)``.  ``direction`` is None for the 2-D
-    rank family (scored at dim 2), the ``__dir`` projection otherwise
-    (scored at its length).  A frame straight from ``read_published``
-    answers from its version manifest without a job."""
-    if "__dir" in index.columns:
-        direction = _resolve_probe_direction(index, None, who=who)
-        window = _resolve_probe_window(index, window)
-        return window, direction, len(direction)
-    return _resolve_probe_window(index, window), None, 2
-
-
-def _serving_candidates(
+def _serve_probed(
     batch: DataFrame,
     index: DataFrame,
+    clients: DataFrame,
     left_id: str,
     right_id: str,
     window: int,
     direction: list[float] | None,
-    vec_col: str,
-    naics_col: str,
     code_len: int,
     tombstones: DataFrame | None,
     broadcast_probes: bool = True,
-) -> DataFrame:
-    """The probe route's candidate pairs with metadata already resolved
-    (:func:`_serving_route`) — no guard job of its own."""
-    if direction is not None:
-        return _projection_probe_resolved(
-            batch, index, left_id, right_id, direction, window,
-            vec_col, naics_col, code_len, tombstones,
-            broadcast_probes=broadcast_probes,
-        )
-    pro = _arm_prospects(batch, left_id, vec_col, naics_col, code_len)
-    return _probe_fetch(
-        pro, index, window, left_id, right_id, tombstones,
-        broadcast_probes=broadcast_probes,
-    )
-
-
-def _serving_rerank(
-    batch: DataFrame,
-    clients: DataFrame,
-    candidates: DataFrame,
-    left_id: str,
-    right_id: str,
-    dim: int,
-    broadcast_sides: bool = True,
     **scoring,
 ) -> DataFrame:
-    """Exact top-K of the probed candidates at the artifact's ``dim``,
-    both sides' vectors checked inside the plan (:func:`_dim_guarded`)
-    rather than with :func:`hybrid_topk_pruned`'s limit-1 jobs."""
+    """The PROBE route of ``serve_batch`` and the streaming loops, with
+    the metadata already resolved (:func:`_resolve_window_meta`): the
+    shared probe body's candidates exact-scored at the artifact's dim
+    (2 for the 2-D family, ``len(direction)`` for a projection
+    artifact), both sides' vectors checked inside the plan
+    (:func:`_dim_guarded`) rather than with
+    :func:`hybrid_topk_pruned`'s limit-1 jobs."""
     vec_col = scoring["vec_col"]
+    cand = _projection_probe_resolved(
+        batch, index, left_id, right_id, direction, window,
+        vec_col, scoring["naics_col"], code_len, tombstones,
+        broadcast_probes=broadcast_probes,
+    )
+    dim = 2 if direction is None else len(direction)
     return _score_topk(
         _dim_guarded(batch, vec_col, dim, "serving re-rank (batch)"),
         _dim_guarded(clients, vec_col, dim, "serving re-rank (clients)"),
-        candidates, left_id, right_id,
-        dim=dim, broadcast_sides=broadcast_sides, **scoring,
+        cand, left_id, right_id,
+        dim=dim, broadcast_sides=broadcast_probes, **scoring,
     )
 
 
@@ -2224,127 +2138,21 @@ def projection_window_index(
     right: DataFrame,
     right_id: str,
     direction: list[float],
-    vec_col: str = "vec",
-    naics_col: str = "naics",
     window: int | None = None,
-    code_len: int = CODE_LEN,
-    calibration: DataFrame | None = None,
-    calibration_id: str | None = None,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    k: int = 15,
-    threshold: float = 0.0,
-    w_hops: float = DEFAULT_W_HOPS,
-    w_havs: float = DEFAULT_W_HAVS,
-    sample_mod: int = 500,
-    min_window: int = 64,
-    prev_window: int | None = None,
+    **kwargs,
 ) -> DataFrame:
     """Nightly-buildable serving artifact for the GENERAL-DIM
-    projection-window peer search (round-13 verdict #2) — the
-    :func:`rank_window_index` twin with the 2-D angle key swapped for
-    the fixed-``direction`` projection: one distributed rank of the
-    client corpus per arm, positions dense per (lvl, blk), ``__wb``
-    window blocks, and BOTH build parameters stamped as metadata
-    columns — ``__w`` (the window, as in the 2-D artifact) and
-    ``__dir`` (the projection direction, canonical string form).  A
-    probe with a mismatched window OR direction raises instead of
-    silently fetching wrong neighborhoods; compaction and insert read
-    both off the artifact, so the full CRUD lifecycle
-    (:func:`rank_window_compact` / :func:`rank_window_insert` — they
-    dispatch on the metadata) and the versioned-publish / hot-swap
-    machinery apply unchanged.
-
-    ``window=None`` derives the build window at index time from a
-    ``calibration`` prospect frame
-    (:func:`derive_projection_window_stats`) — same nightly story as
-    the 2-D artifact; ``prev_window`` (yesterday's ``__w``)
-    warm-starts it, re-paying the full calibration kernel only when
-    the corpus drifted past the previous window.  Scale:
-    (code_len+1)·|R| slim rows; write
-    partitioned by ``__lvl`` like the 2-D artifact (NOT by ``__blk``
-    — the global arm's empty-string block id round-trips as NULL in
-    Hive-style paths)."""
-    spark = right.sparkSession
-    if window is None:
-        if calibration is None or calibration_id is None:
-            raise ValueError(
-                "projection_window_index: window=None derives the "
-                "build window from the data — pass calibration= and "
-                "calibration_id=, or an explicit window."
-            )
-        window = derive_projection_window_stats(
-            calibration, right, calibration_id, right_id, direction,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            sample_mod=sample_mod, code_len=code_len,
-            min_window=min_window, prev_window=prev_window,
-        )["window"]
-    key = _projection_key(direction, vec_col)
-    cli = _arm_clients(
-        right, right_id, vec_col, naics_col, code_len, key_expr=key
+    projection-window peer search (round-13 verdict #2):
+    :func:`rank_window_index` keyed by the fixed-``direction``
+    projection, stamping BOTH build parameters — ``__w`` and ``__dir``
+    (canonical string form).  A probe with a mismatched window OR
+    direction raises; compaction, insert, versioned publish and
+    hot-swap read both off the artifact.  ``window=None`` (the default
+    here) derives the build window from ``calibration=`` /
+    ``calibration_id=`` (:func:`derive_projection_window_stats`)."""
+    return rank_window_index(
+        right, right_id, window=window, direction=direction, **kwargs
     )
-    ranked = _distributed_rank(cli, spark)
-    return _index_rows(ranked, window, _direction_str(direction))
-
-
-def _resolve_probe_direction(
-    index: DataFrame,
-    direction: list[float] | None,
-    who: str = "projection_window_probe",
-    empty_ok: bool = False,
-) -> list[float] | None:
-    """Direction the probe MUST use = the direction the index was
-    ranked by — the ``__dir`` twin of :func:`_resolve_probe_window`:
-    reads the metadata (manifest or agg, :func:`_meta_bounds`;
-    min == max or the artifact holds MIXED builds
-    → raise), returns the stored direction when ``direction=None``,
-    validates equality when explicit (mismatch raises — probing with
-    a different projection silently fetches wrong neighborhoods).
-
-    ``who`` names the calling operator in every error (round-15
-    advice — compact/insert raised errors blaming the probe).  An
-    EMPTY ``__dir`` index (e.g. fully tombstoned) resolves to the
-    caller's ``direction`` when one was passed; with ``empty_ok=True``
-    it degrades to ``None`` instead of raising — compaction uses this
-    to stay graceful on an emptied artifact, mirroring
-    :func:`_resolve_probe_window`'s empty-index default."""
-    if "__dir" not in index.columns:
-        raise ValueError(
-            f"{who}: index carries no __dir metadata "
-            "— it is a 2-D rank-window artifact; probe it with "
-            "rank_window_probe."
-        )
-    lo, hi = _meta_bounds(index, "__dir")
-    if lo is None:
-        # empty index: any direction yields the empty result
-        if direction is not None:
-            return [float(w) for w in direction]
-        if empty_ok:
-            return None
-        raise ValueError(
-            f"{who}: the index is EMPTY and no "
-            "direction was passed — prospect/arrival keys cannot be "
-            "computed; pass direction= explicitly."
-        )
-    if lo != hi:
-        raise ValueError(
-            f"{who}: index holds MIXED projection "
-            f"directions ({lo!r} vs {hi!r}) — e.g. a "
-            "rebuild under a new direction appended over an old "
-            "artifact. Rebuild the index path cleanly."
-        )
-    stored = _parse_direction(lo)
-    if direction is not None and [float(w) for w in direction] != stored:
-        raise ValueError(
-            f"{who}: direction={list(direction)} "
-            f"does not match the index's build direction {stored} — "
-            "probing with a mismatched projection silently fetches "
-            "wrong neighborhoods. Pass direction=None to use the "
-            "index's."
-        )
-    return stored
 
 
 def projection_window_probe(
@@ -2361,65 +2169,31 @@ def projection_window_probe(
     broadcast_probes: bool = True,
 ) -> DataFrame:
     """Probe a :func:`projection_window_index` with a prospect batch —
-    the general-dim twin of :func:`rank_window_probe`, sharing its
-    entire fetch body (:func:`_probe_fetch`: broadcast block starts,
-    3 window blocks per (prospect, arm) behind one batch-sized
-    exchange, tombstone anti-join, per-row independent so batch
-    splitting and streaming micro-batches change nothing).  Candidate
-    parity with the batch :func:`projection_window_candidates` at the
-    build window is
-    pytest-pinned; the registered ``peer_search_fulldim_probe_parity``
-    query pins the probed serving result under the full value oracle.
+    :func:`rank_window_probe` keyed by the artifact's projection, on the
+    same body (:func:`_projection_probe_resolved`).  Candidate parity
+    with the batch :func:`projection_window_candidates` at the build
+    window is pytest-pinned; the registered
+    ``peer_search_fulldim_probe_parity`` query pins the probed serving
+    result under the full value oracle.
 
     BOTH build parameters are read off the artifact by default
     (``window=None`` → ``__w``, ``direction=None`` → ``__dir``);
     explicit values are VALIDATED against the metadata and a mismatch
     raises — the round-13 verdict's 'mismatched-direction probes
-    raise' contract.
-
-    WHEN to serve through this artifact is a measured cost rule, not
-    a hope (SCALE.md round-14 appendices, sf1 + sf10): at sf1 a
-    1k-prospect probe beats the exact kernel on the same batch ~2.3×
-    (55s vs ~127s); at sf10 the derived window has grown to 16384 and
-    the kernel edges ahead (382s vs ~330s).  On uniform geometry at
-    decade scale, compare fetched-pair volume (levels·2·__w·|batch|)
-    against kernel pairs (|batch|·|corpus|) at the two measured
-    throughputs before choosing the serving path; clustered
-    geometries (small derived windows) and small trickle batches stay
-    firmly in the artifact's domain — the streaming micro-batch
-    regime it serves."""
-    direction = _resolve_probe_direction(index, direction)
-    window = _resolve_probe_window(index, window)
+    raise' contract.  Whether a batch should be served through the
+    artifact at all is :func:`serve_batch`'s measured cost rule."""
+    if "__dir" not in index.columns:
+        raise ValueError(
+            "projection_window_probe: index carries no __dir metadata "
+            "— it is a 2-D rank-window artifact; probe it with "
+            "rank_window_probe."
+        )
+    window, direction = _resolve_window_meta(
+        index, window, direction, who="projection_window_probe"
+    )
     return _projection_probe_resolved(
         left, index, left_id, right_id, direction, window,
         vec_col, naics_col, code_len, tombstones,
-        broadcast_probes=broadcast_probes,
-    )
-
-
-def _projection_probe_resolved(
-    left: DataFrame,
-    index: DataFrame,
-    left_id: str,
-    right_id: str,
-    direction: list[float],
-    window: int,
-    vec_col: str = "vec",
-    naics_col: str = "naics",
-    code_len: int = CODE_LEN,
-    tombstones: DataFrame | None = None,
-    broadcast_probes: bool = True,
-) -> DataFrame:
-    """Probe body AFTER metadata resolution — for ``serve_batch`` and
-    the streaming loops, which resolve ``__w``/``__dir`` ONCE (at start,
-    or per published version) and must not re-run the metadata agg
-    jobs every micro-batch."""
-    pro = _arm_prospects(
-        left, left_id, vec_col, naics_col, code_len,
-        key_expr=_projection_key(direction, vec_col),
-    )
-    return _probe_fetch(
-        pro, index, window, left_id, right_id, tombstones,
         broadcast_probes=broadcast_probes,
     )
 
@@ -2430,124 +2204,38 @@ def projection_window_candidates(
     left_id: str,
     right_id: str,
     direction: list[float],
-    vec_col: str = "vec",
-    naics_col: str = "naics",
     window: int | None = 256,
-    code_len: int = CODE_LEN,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    k: int = 15,
-    threshold: float = 0.0,
-    w_hops: float = DEFAULT_W_HOPS,
-    w_havs: float = DEFAULT_W_HAVS,
-    sample_mod: int = 500,
-    min_window: int = 64,
-    window_cache: dict | None = None,
-    cache_key=None,
+    **kwargs,
 ) -> DataFrame:
-    """The rank-window candidate generator at ANY dimension: sort
-    each NAICS-level arm by the vectors' PROJECTION onto a fixed
-    ``direction`` instead of the 2-D angle proxy, and fetch each
-    prospect's ±window sorted neighborhood — same distributed-rank /
-    window-fetch machinery (``_distributed_rank``, ``_window_fetch``),
-    same linear O(|L|·levels·2·window) candidate volume.
+    """The rank-window candidate generator at ANY dimension:
+    :func:`rank_window_candidates` with each arm sorted by the vectors'
+    PROJECTION onto a fixed ``direction`` — same machinery, same linear
+    O(|L|·levels·2·window) candidate volume, same ``window=None``
+    derivation and ``window_cache``.
 
-    In 2-D non-negative space the angle order makes this EXACT; at
-    higher dims a single projection is lossy (two vectors can share a
-    projection while differing in the complement), so this arm is an
+    At higher dims a single projection is LOSSY (two vectors can share
+    a projection while differing in the complement), so this arm is an
     APPROXIMATE candidate source whose recall is measured, and the
     production full-dim query UNIONS it with ``ivf_block_candidates``
     — complementary failure modes: the projection window owns the
     along-manifold neighbors that sampled-centroid IVF mis-buckets on
-    concentrated all-positive geometries (measured round 13: IVF
-    alone plateaued at ~0.998 recall at sf0.1 — boundary clients'
-    lists rank ~29/33 in the prospect's centroid order — while the
-    union reaches 1.0), and IVF owns pairs split across the
-    projection's level sets.
+    concentrated all-positive geometries (measured round 13: IVF alone
+    plateaued at ~0.998 recall at sf0.1 while the union reaches 1.0),
+    and IVF owns pairs split across the projection's level sets.
 
     ``direction`` must be FIXED LITERALS (e.g. the reference's
-    feature-weight profile, search_ranking_peers.py:442,608-611) so
-    the projection is per-row deterministic and the SQL oracle
-    replays it bit-for-bit — a data-derived direction (corpus mean /
-    top principal axis) would ride a nondeterministically-ordered
-    aggregation and flip ULP ties across engines.
-
-    ``window=None`` DERIVES the window from the data with the same
-    estimator as ``rank_window_candidates`` (deterministic prospect
-    sample exact-scored against the corpus, per-pair min-need read
-    off the shared rank, ×2 pad, power-of-two ladder, floor
-    ``min_window``; ``window_cache``/``cache_key`` memoize per
-    snapshot).  Measured 9-D need (SCALE.md round-13): max-need
-    96 → 133 → 1305 at sf0.01/0.1/1 — the window GROWS roughly with
-    the corpus' projection-shadow density, so on near-uniform
-    high-dim data this path is a measured-knob approximation whose
-    candidate volume must be re-derived per corpus, not a fixed
-    linear bound; the exact blocked GEMM kernel (``hybrid_topk``)
-    remains the general-dim exact fallback, and clustered real-world
-    corpora are where the window (and the IVF arm) pay off."""
-    key = _projection_key(direction, vec_col)
-    if (
-        window is None
-        and window_cache is not None
-        and cache_key in window_cache
-    ):
-        window = int(window_cache[cache_key])
-    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len, key_expr=key)
-    pro = _arm_prospects(left, left_id, vec_col, naics_col, code_len, key_expr=key)
-    u = cli.unionByName(pro)
-    spark = left.sparkSession
-    if window is None:
-        # COLD derivation: rank and calibration overlap as concurrent
-        # driver jobs, rank materialized for its 3 consumers — same
-        # shape as rank_window_candidates (guide §2.6 / §2.4).
-        def _calibrate():
-            sample, n_sampled, _ = _derivation_sample(
-                left, left_id, sample_mod
-            )
-            if not n_sampled:
-                return None  # empty left: any window yields empty
-            exact = _calibration_exact_topk(
-                sample, right, left_id, right_id,
-                vec_col=vec_col, naics_col=naics_col,
-                lat_col=lat_col, lon_col=lon_col,
-                k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            )
-            return exact.select(
-                F.col(left_id).alias("__tid"), F.col(right_id).alias("__rid")
-            ).localCheckpoint()
-
-        ranked, pairs = _rank_overlapping_calibration(spark, u, _calibrate)
-    else:
-        # warm path (window known): the rank's two consumers sit in ONE
-        # job (both sides of the window-fetch), whose subtrees execute
-        # as parallel stages off the checkpointed layout — an eager
-        # materialization pass here would SERIALIZE that (measured
-        # +0.3-0.5s at sf0.1), so only the cold path materializes
-        ranked, pairs = _distributed_rank(u, spark), None
-    clis_base = ranked.filter(F.col("__isc") == 1).select(
-        F.col("__id").alias("__rid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__cpos"),
+    feature-weight profile, search_ranking_peers.py:442,608-611) so the
+    projection is per-row deterministic and the SQL oracle replays it
+    bit-for-bit.  Measured 9-D need (SCALE.md round-13): max-need
+    96 → 133 → 1305 at sf0.01/0.1/1 — the window grows with the
+    corpus' projection-shadow density, so on near-uniform high-dim data
+    the candidate volume must be re-derived per corpus; the exact
+    blocked kernel (``hybrid_topk``) stays the general-dim exact
+    fallback."""
+    return rank_window_candidates(
+        left, right, left_id, right_id,
+        window=window, direction=direction, **kwargs,
     )
-    pros_ins = ranked.filter(F.col("__isc") == 0).select(
-        F.col("__id").alias("__tid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__ins"),
-    )
-    if window is None:
-        if pairs is not None:
-            _, mx = _needed_window_stats(pairs, pros_ins, clis_base)
-        else:
-            mx = None
-        window = _ladder_window(max(min_window, 2 * (mx or 0)))
-        if window_cache is not None:
-            window_cache[cache_key] = int(window)
-    clis_pos = clis_base.withColumn(
-        "__wb", F.floor((F.col("__cpos") - 1) / window)
-    )
-    return _window_fetch(pros_ins, clis_pos, window, left_id, right_id)
 
 
 def ivf_block_candidates(

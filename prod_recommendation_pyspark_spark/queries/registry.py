@@ -10,17 +10,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-#: Documented NEGATIVE RESULTS (round-12 verdict #3): queries kept
-#: runnable + value-oracled for replay, but EXCLUDED from the driver
-#: registry and the per-round sweeps — each is a measured dead end
-#: whose lesson is recorded (docstring + SCALE.md), not a production
-#: path, and re-verifying it every round buys nothing at real sweep
-#: cost.  Replay manually:
-#:   from prod_recommendation_pyspark_spark.queries.registry import (
-#:       NEGATIVE_RESULTS, NEGATIVE_ORACLES)
-NEGATIVE_RESULTS: dict[str, QueryFn] = {}
-NEGATIVE_ORACLES: dict[str, str] = {}
-
 #: Sweep-economics tier (round-13 verdict #7): the registry's full
 #: sf0.1 sweep grows linearly with every round's additions (r13:
 #: 230 queries, 888s).  Queries here are the measured long tail
@@ -29,9 +18,9 @@ NEGATIVE_ORACLES: dict[str, str] = {}
 #: QUERIES — the driver's own sample is untouched); the per-round
 #: sf0.1 sweep skips them via ``SPARK_GRAFT_SKIP_SLOW=1`` UNLESS
 #: their code/oracle changed that round, in which case they are
-#: swept explicitly by name (the same changed_r{N} discipline the
-#: driver pins use).  Policy note + per-round skip list recorded in
-#: each ORACLE_r{N}_sf01.md.
+#: swept explicitly by name (the same changed-this-round discipline
+#: as the driver pins in ``__spark_entry__.queries``).  Policy note +
+#: per-round skip list recorded in each ORACLE_r{N}_sf01.md.
 SLOW_SWEEP: set[str] = {
     "peer_search_fulldim_recall",            # 36.1s @ sf0.1 (r13)
     "peer_search_fulldim_probe_parity",      # 47.4s @ sf0.1 (r14 debut sweep)
@@ -64,12 +53,10 @@ def release_session_caches(spark: SparkSession) -> None:
     spark.catalog.clearCache()
 
 
-def register(name: str, sql: str | None = None, negative_result: bool = False):
+def register(name: str, sql: str | None = None):
     """Register a query; ``sql`` is the DuckDB oracle (omit for
     non-SQL-expressible operators — the driver then records a weaker
-    rows-only check).  ``negative_result=True`` files the query under
-    ``NEGATIVE_RESULTS`` instead of the driver registry — see that
-    dict's docstring.
+    rows-only check).
 
     The registered callable is wrapped to call
     ``release_session_caches`` on entry — see that function's
@@ -84,14 +71,9 @@ def register(name: str, sql: str | None = None, negative_result: bool = False):
             release_session_caches(spark)
             return fn(spark, sf_dir)
 
-        q, o = (
-            (NEGATIVE_RESULTS, NEGATIVE_ORACLES)
-            if negative_result
-            else (QUERIES, ORACLES)
-        )
-        q[name] = wrapped
+        QUERIES[name] = wrapped
         if sql is not None:
-            o[name] = sql
+            ORACLES[name] = sql
         # return the UNwrapped fn: direct imports (tests, composition)
         # keep plain semantics; only registry-dispatched runs clear
         return fn

@@ -1051,47 +1051,6 @@ def _pruned_spark(spark: SparkSession, sf_dir: str):
     )
 
 
-@register(
-    "peer_search_hybrid_topk_pruned",
-    sql=f"""
-    WITH {_FIRMO_SQL},
-    {_pruned_cte()}
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM pruned_ranked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
-    negative_result=True,
-)
-def peer_search_hybrid_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage-1 peer search via the round-7 block/bucket prune:
-    candidate pairs from a 4-digit industry-prefix block join ∪
-    equi-depth quantile blocking on the normalized angle proxy (64
-    exact-percentile buckets, prospects probing bucket ±1), exact
-    hybrid scoring on candidates only, per-prospect top-15.  Measured
-    at sf0.1: 2.87M candidates of 20.25M possible (7× prune) at
-    recall 1.0000.
-
-    A DOCUMENTED NEGATIVE RESULT for scale (round 9), DEREGISTERED
-    from the driver registry in round 13 (verdict #3): both arms are
-    constant-factor prunes (the full 4-digit block product is
-    pairs/10 on this data; fixed 64 buckets are 3·pairs/64), so
-    candidate volume stays QUADRATIC — measured at sf1 it ran 672s
-    vs the exact kernel's ~170-205s, and re-sweeping it every round
-    cost 6.6s for a lesson already on file.  The production path is
-    ``peer_search_rank_window_topk`` (linear candidates; 22.7s at sf1
-    at recall 1.0000 — SCALE.md round-9 appendix).  Still
-    value-oracled end-to-end for manual replay via
-    ``registry.NEGATIVE_RESULTS`` (the SQL replicates splits,
-    bucketing, and scoring bit-for-bit, driver-green r10-r12);
-    ``peer_search_pruned_recall`` remains registered and quantifies
-    the prune's recall vs the exact kernel every sweep."""
-    return (
-        _pruned_spark(spark, sf_dir)
-        .select("tgt_custkey", "src_custkey", F.round("score", 4).alias("score"))
-        .orderBy("tgt_custkey", "src_custkey")
-    )
-
-
 _EXACT_PAIRS_CTE = f"""
     exact_scored AS (
         SELECT l.c_custkey AS tgt_custkey, r.c_custkey AS src_custkey,
@@ -1357,7 +1316,8 @@ def peer_search_rank_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix block, exact-scores only those candidates, and keeps the
     top-15.  Candidate volume is O(prospects · levels · window) —
     INDEPENDENT of client count, unlike the block/bucket prune
-    (`peer_search_hybrid_topk_pruned`), whose constant-factor arms
+    (``hybrid_candidates``, recall-pinned by
+    ``peer_search_pruned_recall``), whose constant-factor arms
     stay quadratic and measured SLOWER than the exact kernel at sf1
     (672s vs ~170-205s; this path: 22.7s — see SCALE.md round-9 row).
 
@@ -1603,7 +1563,7 @@ def rank_window_warm_nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     drifted past prev) is pytest-pinned on the tie-heavy fixture
     (tests/test_projection_artifact.py warm-start cases)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        _resolve_probe_window,
+        _resolve_window_meta,
         rank_window_index,
         rank_window_probe,
     )
@@ -1614,7 +1574,7 @@ def rank_window_warm_nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         calibration=prospects, calibration_id="tgt_custkey",
         k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
     ).localCheckpoint()
-    prev_w = _resolve_probe_window(night1, None)  # yesterday's __w
+    prev_w, _ = _resolve_window_meta(night1)  # yesterday's __w
     night2 = rank_window_index(
         clients, "src_custkey", window=None,
         calibration=prospects, calibration_id="tgt_custkey",
@@ -3085,15 +3045,6 @@ def ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _FD_SEGS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 _FD_DIM = 4 + len(_FD_SEGS)  # 9 — w_rev + 3 numerics + OHE(mktsegment)
-#: probes per (prospect, level) for the IVF arm.  Measured recall vs
-#: the exact kernel (SCALE.md round-13): n_probe 8 → 0.9387, 12 →
-#: 0.9991, 16 → 1.0000 at sf0.01; at sf0.1 the IVF arm PLATEAUS
-#: (16 → 0.9977, 32 → 0.9989, 16 w/ assign_probe=2 → 0.9977) — the
-#: concentrated all-positive geometry mis-buckets boundary clients —
-#: which is why the PRODUCTION full-dim query rides the projection
-#: window (recall 1.0000 at 13× prune); the IVF query ships as the
-#: approximate-serving variant, like the ANN ivf queries.
-_FD_NPROBE = 16
 _FD_W_REV = 0.80  # search_ranking_peers.py:608-611
 _FD_W_JPMC = 0.05
 _FD_W_NUM = (1.0 - _FD_W_REV - _FD_W_JPMC) / 3.0  # :442
@@ -3220,66 +3171,6 @@ def _fd_sumsq(a: str, pfx: str = "v") -> str:
     return " + ".join(
         f"{a}.{pfx}{i} * {a}.{pfx}{i}" for i in range(1, _FD_DIM + 1)
     )
-
-
-def _fd_cand_cte() -> str:
-    """Candidate CTEs replaying ``hybrid.ivf_block_candidates`` +
-    ``ivf_auto_centroids`` on the full-dim sides: derived centroid
-    modulus, client argmax-cosine assignment, per-(prospect, level)
-    probing of the block-occupied lists, arm equi-join."""
-    cent_cols = ", ".join(f"v{i} AS c{i}" for i in range(1, _FD_DIM + 1))
-    ccsim = (
-        f"({_fd_vdot('x', 'ct', 'c')})"
-        f" / (sqrt({_fd_sumsq('x')}) * sqrt({_fd_sumsq('ct', 'c')}))"
-    )
-    return f"""
-    fpros AS (SELECT * FROM fnormed WHERE c_custkey % 10 = 0),
-    fclis AS (SELECT * FROM fnormed WHERE c_custkey % 10 <> 0),
-    fmod AS (SELECT greatest(1, count(*) // greatest(1,
-                 CAST(ceil(sqrt(count(*))) AS BIGINT))) AS m FROM fclis),
-    fcent AS (SELECT c_custkey AS list, {cent_cols} FROM fclis
-              WHERE c_custkey % (SELECT m FROM fmod) = 0),
-    fcassign AS (
-        SELECT cid, list FROM (
-            SELECT x.c_custkey AS cid, ct.list,
-                   row_number() OVER (
-                       PARTITION BY x.c_custkey
-                       ORDER BY {ccsim} DESC, ct.list) AS rn
-            FROM fclis x CROSS JOIN fcent ct)
-        WHERE rn <= 1),
-    flvls AS (SELECT unnest(range(0, 7)) AS lvl),
-    fcarm AS (
-        SELECT a.cid, l.lvl,
-               CASE WHEN l.lvl = 0 THEN ''
-                    ELSE substring(c.naics, 1, CAST(l.lvl AS INT)) END AS blk,
-               a.list
-        FROM fclis c JOIN fcassign a ON c.c_custkey = a.cid
-        CROSS JOIN flvls l),
-    fblists AS (SELECT DISTINCT lvl, blk, list FROM fcarm),
-    fqscore AS (
-        SELECT x.c_custkey AS pid, ct.list, {ccsim} AS csim
-        FROM fpros x CROSS JOIN fcent ct),
-    fparm AS (
-        SELECT p.c_custkey AS pid, l.lvl,
-               CASE WHEN l.lvl = 0 THEN ''
-                    ELSE substring(p.naics, 1, CAST(l.lvl AS INT)) END AS blk
-        FROM fpros p CROSS JOIN flvls l),
-    fprobed AS (
-        SELECT pid, lvl, blk, list FROM (
-            SELECT pa.pid, pa.lvl, pa.blk, bl.list, qs.csim,
-                   row_number() OVER (
-                       PARTITION BY pa.pid, pa.lvl
-                       ORDER BY qs.csim DESC, bl.list) AS rn
-            FROM fparm pa
-            JOIN fblists bl ON pa.lvl = bl.lvl AND pa.blk = bl.blk
-            JOIN fqscore qs ON qs.pid = pa.pid AND qs.list = bl.list)
-        WHERE rn <= {_FD_NPROBE}),
-    fcand AS (
-        SELECT DISTINCT pr.pid AS tgt, ca.cid AS src
-        FROM fprobed pr
-        JOIN fcarm ca ON pr.lvl = ca.lvl AND pr.blk = ca.blk
-                     AND pr.list = ca.list)
-"""
 
 
 def _fd_hybrid_score(l: str = "l", r: str = "r") -> str:
@@ -3499,92 +3390,6 @@ def _fd_win_cte(cli_filter: str = "", pro_filter: str = "") -> str:
 """
 
 
-def _fd_ivf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-        ivf_block_candidates,
-    )
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_auto_centroids,
-    )
-
-    prospects, clients = _fd_sides(spark, sf_dir)
-    # the candidate pass touches the client frame three times
-    # (assignment, arms, centroid sample) and the re-rank once more —
-    # persist the slim feature frame instead of re-deriving the
-    # scaled/normalized plan per branch
-    clients = clients.persist()
-    centroids = ivf_auto_centroids(clients, "src_custkey", "vec")
-    cand = ivf_block_candidates(
-        prospects, clients, "tgt_custkey", "src_custkey",
-        centroids, vec_col="vec", naics_col="naics",
-        n_probe=_FD_NPROBE,
-    )
-    return hybrid_topk_pruned(
-        prospects, clients, "tgt_custkey", "src_custkey",
-        vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-        candidates=cand, dim=_FD_DIM,
-    )
-
-
-@register(
-    "peer_search_fulldim_ivf_topk",
-    sql=f"""
-    WITH {_fd_firmo_sql()},
-    {_fd_cand_cte()},
-    fscored AS (
-        SELECT fcand.tgt AS tgt_custkey, fcand.src AS src_custkey,
-               {_fd_hybrid_score()} AS score
-        FROM fcand JOIN fnormed l ON fcand.tgt = l.c_custkey
-                   JOIN fnormed r ON fcand.src = r.c_custkey),
-    franked AS (
-        SELECT tgt_custkey, src_custkey, score,
-               row_number() OVER (PARTITION BY tgt_custkey
-                                  ORDER BY score DESC, src_custkey) AS rn
-        FROM fscored WHERE score >= 0.0)
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM franked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
-    negative_result=True,
-)
-def peer_search_fulldim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """General-dim peer search, IVF ARM — DEMOTED to
-    ``registry.NEGATIVE_RESULTS`` for the firmographics recipe in
-    round 14 (r13 verdict #3 option (b), same discipline as the r7
-    quadratic prune): still runnable and fully value-oracled for
-    replay (the DuckDB twin re-derives centroid modulus, argmax
-    assignment, per-(prospect, level) block probing, candidate set,
-    and the 9-term score bit for bit; driver-green r13 on file), but
-    no longer a production path or a sweep line for THIS geometry.
-
-    Why demoted, measured: on the all-positive, w_rev-dominated
-    recipe, recall vs the exact kernel plateaus at 0.9977 (sf0.1) /
-    0.7962 (sf1) — cosine concentrates and sampled-centroid cells
-    interleave along a ~1-D manifold, so the prospect's
-    centroid-cosine order is a weak proxy for where its neighbors
-    live.  Round 14 also tested the obvious better-signal candidate
-    (rank lists by |proj(centroid) − proj(prospect)| on the feature-
-    weight profile — the informative coordinate): candidate coverage
-    of the true top-15 pairs at sf1 measured **0.1605** vs
-    centroid-cosine's 0.7962 (scripts/measure_fulldim_r14.py, SCALE.md
-    round-14) — the centroid projections are so concentrated that
-    projection distance is noise at list granularity; the failed
-    experiment is recorded rather than iterated past its evidence.
-    The production path is ``peer_search_fulldim_topk`` (kernel-vs-
-    window dispatch); ``ivf_block_candidates`` itself stays first-
-    class for clustered/multi-modal geometries, where the ANN suite
-    measures IVF winning."""
-    return (
-        _fd_ivf_spark(spark, sf_dir)
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
-
-
 @register(
     "peer_search_fulldim_topk",
     sql=f"""
@@ -3634,10 +3439,10 @@ def peer_search_fulldim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     concentrates and sampled-centroid cells interleave — the IVF arm
     plateaus at 0.9977 (sf0.1) / 0.7962 (sf1), and the round-14
     better-signal experiment (projection-distance list ranking) made
-    it WORSE (coverage 0.1605 at sf1), so
-    ``peer_search_fulldim_ivf_topk`` is demoted to
-    ``registry.NEGATIVE_RESULTS`` for this recipe (value-oracled for
-    replay; the operator stays first-class for clustered geometries).
+    it WORSE (coverage 0.1605 at sf1), so the IVF-arm query was
+    retired for this recipe (SCALE.md round 14; its code and oracle
+    are in git history); the operator stays first-class for clustered
+    geometries.
 
     Serving lifecycle (round 14): the window arm's nightly artifact is
     ``projection_window_index`` / ``probe`` (__w + __dir stamped;

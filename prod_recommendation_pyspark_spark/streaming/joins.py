@@ -374,22 +374,18 @@ def _serving_fn(
     micro-batch launches no guard job at all."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
         CODE_LEN,
-        _serving_candidates,
-        _serving_rerank,
-        _serving_route,
+        _resolve_window_meta,
+        _serve_probed,
     )
 
-    w, direction, dim = _serving_route(
+    w, direction = _resolve_window_meta(
         index, window, who="streaming_peer_serving"
     )
 
     def serve(batch: DataFrame) -> DataFrame:
-        cand = _serving_candidates(
-            batch, index, left_id, right_id, w, direction,
-            vec_col, naics_col, CODE_LEN, tombstones,
-        )
-        return _serving_rerank(
-            batch, clients, cand, left_id, right_id, dim,
+        return _serve_probed(
+            batch, index, clients, left_id, right_id, w, direction,
+            CODE_LEN, tombstones,
             vec_col=vec_col, naics_col=naics_col,
             lat_col=lat_col, lon_col=lon_col,
             k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,

@@ -47,7 +47,6 @@ from prod_recommendation_pyspark_spark.operators.hybrid import (
 )
 from prod_recommendation_pyspark_spark.queries.similarity import (
     _FD_DIRECTION,
-    _FD_NPROBE,
     THRESHOLD,
     TOPK_PEERS,
     W_HAVS,
@@ -56,6 +55,8 @@ from prod_recommendation_pyspark_spark.queries.similarity import (
 )
 from prod_recommendation_pyspark_spark.session import get_spark
 
+#: probes per (prospect, level) of the IVF arm (recall 1.0000 at sf0.01)
+_FD_NPROBE = 16
 KW = dict(k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS)
 
 
