@@ -56,7 +56,6 @@ from prod_recommendation_pyspark_spark.operators.similarity import (
     _probe_geometry,
     _replicate_grid,
     hyperplane_signature,
-    ivf_assign,
     probe_dim,
     random_hyperplane_tables,
 )
@@ -1880,12 +1879,12 @@ def derive_projection_window_stats(
 #: BATCH-path constant: both sides of the batch dispatch run the same
 #: scoring over different candidate volumes, so the ratio captures
 #: the candidate-generation machinery (rank shuffle + fetch join +
-#: distinct) per emitted pair.  Re-measure via
-#: scripts/measure_fulldim_r14.py if the candidate fetch plan, the
-#: re-rank path, or the kernel blocking changes; the serving-side
-#: twin (which has DIFFERENT overhead shape) is the separate
-#: interpolated rule in :func:`serving_cost_ratio` below.  The flip
-#: boundary is pytest-pinned at this documented value
+#: distinct) per emitted pair.  Re-measure (SCALE.md round-14
+#: appendix; its script is retired, ``git show 1ee4bd4:scripts/``) if
+#: the candidate fetch plan, the re-rank path, or the kernel blocking
+#: changes; the serving-side twin (which has DIFFERENT overhead shape)
+#: is the separate interpolated rule in :func:`serving_cost_ratio`.
+#: The flip boundary is pytest-pinned at this documented value
 #: (tests/test_projection_artifact.py::
 #: test_projection_window_dispatch_rule).
 PROJECTION_WINDOW_COST_RATIO = 32
@@ -1933,13 +1932,13 @@ def projection_window_wins(
 #: re-rank removed the probe's memory-pressure collapse, the probe now
 #: wins 1k-batches at BOTH measured decades (sf10: probe 172.5s vs
 #: kernel ≈239s = 10× the 23.9s subsample); the crossover moved past
-#: the measured range for this geometry.  Re-measure
-#: (measure_projection_artifact.py stages) whenever the recipe's dim,
-#: the re-rank path, or the kernel blocking changes; the rule below
-#: interpolates BETWEEN these decades and clamps outside them — it is
-#: calibrated for the decade-scale regime where the choice carries
-#: real wall, and below it both paths are cheap enough that either
-#: verdict is fine.
+#: the measured range for this geometry.  Re-measure (SCALE.md
+#: round-15 re-measure appendix; its script is retired, ``git show
+#: 1ee4bd4:scripts/``) whenever the recipe's dim, the re-rank path, or
+#: the kernel blocking changes; the rule below interpolates BETWEEN
+#: these decades and clamps outside them — it is calibrated for the
+#: decade-scale regime where the choice carries real wall, and below
+#: it both paths are cheap enough that either verdict is fine.
 #:
 #: ROTATED round 16 (optimization round 2, VERDICT r15 top task #1):
 #: the round-14 values (probe 1.042e6/0.599e6, kernel 1.063e6/4.104e6)
@@ -2215,13 +2214,12 @@ def projection_window_candidates(
 
     At higher dims a single projection is LOSSY (two vectors can share
     a projection while differing in the complement), so this arm is an
-    APPROXIMATE candidate source whose recall is measured, and the
-    production full-dim query UNIONS it with ``ivf_block_candidates``
-    — complementary failure modes: the projection window owns the
-    along-manifold neighbors that sampled-centroid IVF mis-buckets on
-    concentrated all-positive geometries (measured round 13: IVF alone
-    plateaued at ~0.998 recall at sf0.1 while the union reaches 1.0),
-    and IVF owns pairs split across the projection's level sets.
+    APPROXIMATE candidate source whose recall is measured
+    (``peer_search_fulldim_recall``); the production full-dim query
+    routes between it and the exact blocked kernel by
+    :func:`projection_window_wins`.  The round-13 IVF arm that once
+    unioned with it (IVF alone plateaued at ~0.998 recall at sf0.1) is
+    retired; SCALE.md's round-13 appendix keeps its measurements.
 
     ``direction`` must be FIXED LITERALS (e.g. the reference's
     feature-weight profile, search_ranking_peers.py:442,608-611) so the
@@ -2238,143 +2236,6 @@ def projection_window_candidates(
     )
 
 
-def ivf_block_candidates(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    centroids: DataFrame,
-    vec_col: str = "vec",
-    naics_col: str = "naics",
-    n_probe: int = 8,
-    assign_probe: int = 1,
-    code_len: int = CODE_LEN,
-) -> DataFrame:
-    """BLOCK-AWARE multi-probe IVF candidates for the hybrid peer
-    search at ANY vector dimension — the round-13 generalization of
-    the 2-D ``rank_window_candidates`` (which is exact but relies on
-    the angle order that only exists in 2-D; hybrid.py raises on
-    dim≠2 there).  Returns candidate ``(left_id, right_id)`` pairs
-    for ``hybrid_topk_pruned(candidates=...)`` exact re-ranking.
-
-    Why per-LEVEL probing: the hybrid score
-    ``w_cos·cos + w_hops·hops + w_havs·havs``
-    (search_ranking_peers.py:310-312) is cosine-monotone WITHIN a
-    NAICS prefix level (hops constant there, w_havs ≈ 0), so the true
-    top-k decomposes into per-level cosine top-k's — the same
-    decomposition the rank-window index uses.  A purely global probe
-    would miss high-hops pairs whose cosine rank is deep; per level,
-    each prospect probes its ``n_probe`` nearest lists AMONG THE
-    LISTS ITS BLOCK OCCUPIES, so small deep blocks are probed as
-    densely as the global arm.
-
-    Plan shape (fully declarative, SQL-replayable):
-    1. clients → single nearest list (``ivf_assign`` n_probe=1 — the
-       nightly IVF artifact's assignment) and 7 slim arm rows
-       (level, prefix, list, id);
-    2. prospects → cosine vs the BROADCAST centroid table (|L|·nlist
-       slim rows — the assignment pass every IVF build already pays);
-    3. per (prospect, level): rank the block-occupied lists by the
-       prospect's centroid cosine, keep ``n_probe``;
-    4. equi-join arms on (level, prefix, list) → distinct pairs.
-
-    Scale: candidates ≈ |L|·levels·n_probe·(N/nlist) ≈
-    |L|·levels·n_probe·√N at the ``ivf_auto_centroids`` density —
-    SUB-quadratic (the exact kernel is |L|·N) with n_probe the
-    recall knob; every join is a bounded-key equi-join, the only
-    broadcast is the √N-row centroid table, and the arm/score frames
-    are slim (no vectors travel past step 2).  MEASURED recall on
-    the reference's 9-dim recipe (SCALE.md round-13): 1.0000 at
-    sf0.01 (n_probe 16) but a plateau at 0.9977 (sf0.1) / 0.7962
-    (sf1) — on that all-positive, one-dominant-dimension geometry,
-    cosine concentrates and sampled-centroid cells interleave, so
-    the prospect's centroid order is a weak proxy for where its
-    neighbors live (missed pairs had cos ≥ 0.989 with their list
-    ranked 29/33 for the prospect; ``assign_probe=2`` does not move
-    it).  The production full-dim query therefore rides
-    ``projection_window_candidates``; this arm serves clustered
-    multi-modal geometries (where IVF shines — see the ANN suite)
-    and unions with the window arm when either is insufficient
-    (union recall 1.0000 at sf0.1)."""
-    arms = lambda df, id_col: df.select(  # noqa: E731
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(lv).alias("__lvl"),
-                        (
-                            F.lit("")
-                            if lv == 0
-                            else F.substring(F.col(naics_col), 1, lv)
-                        ).alias("__blk"),
-                    )
-                    for lv in range(0, code_len + 1)
-                ]
-            )
-        ).alias("__a"),
-    ).select(
-        id_col,
-        F.col("__a.__lvl").alias("__lvl"),
-        F.col("__a.__blk").alias("__blk"),
-    )
-    # ``assign_probe`` > 1 = client MULTI-ASSIGNMENT (each client rides
-    # its k nearest lists): the standard boundary fix — a client on a
-    # Voronoi edge is reachable from either side's probes — at
-    # < assign_probe× candidate volume (only boundary fetches
-    # duplicate, and the pair set dedups).  NOT monotone at fixed
-    # n_probe (pytest-pinned): the extra copies also enrich each
-    # block's occupied-list pool, so a newly-occupied list can
-    # DISPLACE a previously-probed one from the prospect's top-n_probe
-    # ranking; supersetting is guaranteed only when n_probe covers the
-    # occupied pool.  Net recall effect is empirical — measured flat
-    # (0.9977 → 0.9977) on the fulldim recipe at sf0.1.
-    r_assign = ivf_assign(
-        right.select(F.col(right_id), F.col(vec_col).alias("__v")),
-        right_id,
-        "__v",
-        centroids,
-        n_probe=assign_probe,
-        list_col="__list",
-    )
-    carm = arms(right, right_id).join(r_assign, right_id)
-    block_lists = carm.select("__lvl", "__blk", "__list").distinct()
-    # prospect × centroid cosine — same formulation as ivf_assign's
-    # HOF path (dot / (|q|·|c|)), so the oracle replays it term for
-    # term with the identical left-assoc folds
-    q = left.select(
-        F.col(left_id), F.col(vec_col).cast("array<double>").alias("__qv")
-    )
-    c = centroids.select(
-        F.col("centroid_id").alias("__list"),
-        F.col("vec").cast("array<double>").alias("__cv"),
-    )
-    qn = F.sqrt(F.aggregate("__qv", F.lit(0.0), lambda a, x: a + x * x))
-    cn = F.sqrt(F.aggregate("__cv", F.lit(0.0), lambda a, x: a + x * x))
-    dot = F.aggregate(
-        F.zip_with("__qv", "__cv", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scores = q.crossJoin(F.broadcast(c)).select(
-        left_id, "__list", (dot / (qn * cn)).alias("__csim")
-    )
-    probe_pool = arms(left, left_id).join(block_lists, ["__lvl", "__blk"]).join(
-        scores, [left_id, "__list"]
-    )
-    probed = windowed_topk(
-        probe_pool,
-        [left_id, "__lvl"],
-        [F.col("__csim").desc(), F.col("__list")],
-        n_probe,
-    ).select(left_id, "__lvl", "__blk", "__list")
-    return (
-        probed.join(carm, ["__lvl", "__blk", "__list"])
-        .select(left_id, right_id)
-        .distinct()
-    )
-
-
 def hybrid_topk_pruned(
     left: DataFrame,
     right: DataFrame,
@@ -2388,10 +2249,8 @@ def hybrid_topk_pruned(
     threshold: float = 0.0,
     w_hops: float = DEFAULT_W_HOPS,
     w_havs: float = DEFAULT_W_HAVS,
-    tables: list[list[list[float]]] | None = None,
-    naics_prefix_len: int = 4,
-    candidates: DataFrame | None = None,
-    quantile_buckets: int | None = None,
+    *,
+    candidates: DataFrame,
     dim: int | None = None,
     broadcast_sides: bool = False,
 ) -> DataFrame:
@@ -2418,23 +2277,17 @@ def hybrid_topk_pruned(
     where the left relation is corpus-sized and the shuffle join is
     the right plan.
 
-    Candidate source matters at scale: the default
-    ``hybrid_candidates`` (NAICS-block ∪ quantile-bucket arms) is a
-    CONSTANT-FACTOR prune — measured at sf1 it was slower than the
-    exact kernel (672s vs ~170-205s; SCALE.md round-9 appendix).  The
-    production path passes ``candidates=rank_window_candidates(...)``
+    The caller supplies ``candidates`` — the candidate source is what
+    matters at scale: ``hybrid_candidates`` (NAICS-block ∪
+    quantile-bucket arms) is a CONSTANT-FACTOR prune, measured at sf1
+    slower than the exact kernel (672s vs ~170-205s; SCALE.md round-9
+    appendix), and survives only in the recall query's replay.  The
+    production path passes the window-index family's candidates
     (linear in the left side) and ``dim=`` for the unrolled codegen
-    dot; the default is kept as the documented negative result and
-    for the recall query's replay.
+    dot.
 
     Fully declarative scoring (dot + when-ladder hops + native-trig
     haversine) — whole-stage codegen, SQL-oracle-able."""
-    if candidates is None:
-        candidates = hybrid_candidates(
-            left, right, left_id, right_id, vec_col, naics_col,
-            tables=tables, naics_prefix_len=naics_prefix_len,
-            quantile_buckets=quantile_buckets,
-        )
     if dim is not None:
         # Validate dim against the ACTUAL vector length before taking
         # the unrolled path: element_at beyond the array is NULL (a

@@ -588,24 +588,14 @@ def cosine_topk(
 # ---------------------------------------------------------------------------
 
 
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
-    """Deterministic random hyperplanes for sign-LSH, rounded to 6
-    decimals so the identical literals can be embedded in both the
-    Spark plan and an ANSI-SQL oracle (shortest-repr round-trip makes
-    the doubles bit-identical on both sides)."""
-    rng = np.random.RandomState(seed)
-    return [
-        [round(float(x), 6) for x in row]
-        for row in rng.standard_normal((n_planes, dim))
-    ]
-
-
 def random_hyperplane_tables(
     dim: int, n_planes: int, n_tables: int, seed: int = 7
 ) -> list[list[list[float]]]:
     """``n_tables`` independent sign-LSH tables drawn from one seeded
     stream (standard multi-table LSH: a neighbour is found if ANY table
-    buckets it with the query)."""
+    buckets it with the query), rounded to 6 decimals so the identical
+    literals can be embedded in both the Spark plan and an ANSI-SQL
+    oracle (shortest-repr round-trip makes the doubles bit-identical)."""
     rng = np.random.RandomState(seed)
     flat = rng.standard_normal((n_tables * n_planes, dim))
     return [

@@ -966,6 +966,7 @@ def ann_ivf_update_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from prod_recommendation_pyspark_spark.operators.hybrid import (  # noqa: E402
+    hybrid_candidates,
     hybrid_topk_pruned,
 )
 
@@ -1045,9 +1046,11 @@ def _pruned_spark(spark: SparkSession, sf_dir: str):
         threshold=THRESHOLD,
         w_hops=W_HOPS,
         w_havs=W_HAVS,
-        tables=[],
-        naics_prefix_len=_PRUNE_PREFIX,
-        quantile_buckets=_PRUNE_QBUCKETS,
+        candidates=hybrid_candidates(
+            prospects, clients, "tgt_custkey", "src_custkey",
+            tables=[], naics_prefix_len=_PRUNE_PREFIX,
+            quantile_buckets=_PRUNE_QBUCKETS,
+        ),
     )
 
 
@@ -3167,12 +3170,6 @@ def _fd_vdot(a: str, b: str, bpfx: str = "v") -> str:
     )
 
 
-def _fd_sumsq(a: str, pfx: str = "v") -> str:
-    return " + ".join(
-        f"{a}.{pfx}{i} * {a}.{pfx}{i}" for i in range(1, _FD_DIM + 1)
-    )
-
-
 def _fd_hybrid_score(l: str = "l", r: str = "r") -> str:
     return (
         f"CAST(0.6 AS DOUBLE) * ({_fd_vdot(l, r)})\n"
@@ -3439,10 +3436,9 @@ def peer_search_fulldim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     concentrates and sampled-centroid cells interleave — the IVF arm
     plateaus at 0.9977 (sf0.1) / 0.7962 (sf1), and the round-14
     better-signal experiment (projection-distance list ranking) made
-    it WORSE (coverage 0.1605 at sf1), so the IVF-arm query was
-    retired for this recipe (SCALE.md round 14; its code and oracle
-    are in git history); the operator stays first-class for clustered
-    geometries.
+    it WORSE (coverage 0.1605 at sf1), so the IVF arm — its query,
+    oracle and operator — is retired (SCALE.md round 14; the code is
+    in git history).
 
     Serving lifecycle (round 14): the window arm's nightly artifact is
     ``projection_window_index`` / ``probe`` (__w + __dir stamped;

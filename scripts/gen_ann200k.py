@@ -1,6 +1,7 @@
 """Generate the 200k ANN corpus under /tmp/ann200k — the
 second-decade input for the vector-artifact measurements
-(scripts/measure_ann_artifact.py with SPARK_GRAFT_ANN_QMOD=170).
+(SCALE.md round-11/12 ANN appendices; their measurement script is
+retired, in git history at commit 1ee4bd4).
 
 Construction (same shape as round 11's ad-hoc corpus, now committed):
 200,000 × 64-d vectors in 10 Gaussian clusters — unit-norm cluster

@@ -1,5 +1,6 @@
 """Generate a LARGE ANN corpus (default 10M × 64-d) for the round-13
-artifact-lifecycle measurement (scripts/measure_artifact_large.py) —
+artifact-lifecycle measurement (SCALE.md round-13 large-artifact
+appendix; its script is retired, in git history at commit 1ee4bd4) —
 the same Gaussian-cluster construction as gen_ann200k.py pushed two
 decades up, chunked so generation stays in bounded memory and the
 output is a multi-file parquet directory a distributed scan can split.

@@ -1,5 +1,6 @@
 """Generate a LARGE synthetic documents corpus (default 2M rows) for
-the round-13 dedup-store measurement (scripts/measure_artifact_large.py):
+the round-13 dedup-store measurement (SCALE.md round-13 large-artifact
+appendix; its script is retired, in git history at commit 1ee4bd4):
 ~40-token documents over a 50k-word vocabulary, with a controlled 10%
 near-duplicate tail (a mutated copy of an earlier doc — 2 token edits)
 so the MinHash store has real candidate mass.  Band-key store rows =

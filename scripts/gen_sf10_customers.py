@@ -1,6 +1,7 @@
 """Generate the sf10 customer table (1.5M rows) under /tmp/sf10 —
 the fourth-decade input for the rank-window measurements
-(scripts/measure_rank_window_sf10.py, scripts/measure_nightly_sf10.py).
+(SCALE.md round-11 third-decade and round-12 fourth-decade appendices;
+their scripts are retired, in git history at commit 1ee4bd4).
 
 Construction (same as round 11's): 100 key-shifted replicas of the
 sf0.1 customer table — every replica shifts ``c_custkey`` by

@@ -99,7 +99,8 @@ def test_pruned_default_keeps_cross_industry_cosine_arm(spark):
     left = df.select(F.col("id").alias("lid"), "naics", "vec", "lat", "lon")
     right = df.select(F.col("id").alias("rid"), "naics", "vec", "lat", "lon")
     out = hybrid_topk_pruned(
-        left, right, "lid", "rid", vec_col="vec", k=15, threshold=0.0
+        left, right, "lid", "rid", vec_col="vec", k=15, threshold=0.0,
+        candidates=hybrid_candidates(left, right, "lid", "rid", vec_col="vec"),
     )
     cross = [
         r for r in out.collect() if (r.lid < 10) != (r.rid < 10)
@@ -793,62 +794,6 @@ def test_rank_window_cache_hit_and_miss(spark, sf_dir):
     assert seeded == {"snapB": 16}  # hit neither re-derives nor mutates
 
 
-def test_ivf_block_candidates_generous_probe_equals_exact(spark):
-    """Round-13 general-dim candidate generator: with probing wide
-    enough to cover every list, the candidate set contains every
-    pair (the level-0 arm degenerates to the full product), so the
-    exact re-rank over candidates must equal the exact BLAS kernel
-    pair-for-pair on the FULL 9-dim reference feature vector; a
-    narrow probe must stay a strict subset of the pair universe
-    (it actually prunes) while remaining top-k-complete at the
-    measured n_probe."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk,
-        hybrid_topk_pruned,
-        ivf_block_candidates,
-    )
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_auto_centroids,
-    )
-    from prod_recommendation_pyspark_spark.queries.similarity import (
-        _FD_DIM,
-        _fd_sides,
-    )
-
-    pros, clis = _fd_sides(spark, "/root/testdata/sf0.001")
-    pros, clis = pros.persist(), clis.persist()
-    cents = ivf_auto_centroids(clis, "src_custkey", "vec")
-    n_lists = cents.count()
-    wide = ivf_block_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", cents,
-        n_probe=n_lists,
-    )
-    assert wide.count() == pros.count() * clis.count()
-    pairs = lambda df: {  # noqa: E731
-        (r["tgt_custkey"], r["src_custkey"]) for r in df.collect()
-    }
-    via_cand = hybrid_topk_pruned(
-        pros, clis, "tgt_custkey", "src_custkey",
-        candidates=wide, dim=_FD_DIM, k=15,
-    )
-    exact = hybrid_topk(
-        pros, clis, "tgt_custkey", "src_custkey", k=15
-    )
-    assert pairs(via_cand) == pairs(exact) and len(pairs(exact)) > 0
-
-    # a genuinely narrow probe (2 of the ~12 lists at this sf) must
-    # actually PRUNE — strict subset of the pair universe — while
-    # still containing every same-full-naics pair its deep arms probe
-    # nearly fully; top-k completeness at the REGISTERED pin is
-    # carried by peer_search_fulldim_recall (measured 1.0), not here
-    narrow = ivf_block_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", cents, n_probe=2,
-    )
-    n_narrow = narrow.count()
-    assert 0 < n_narrow < pros.count() * clis.count()
-    assert pairs(narrow) < pairs(wide)
-
-
 def test_projection_window_derivation_and_memo(spark):
     """9-D projection window (round 13): (a) a window covering the
     whole corpus makes the candidate-pruned result equal the exact
@@ -904,61 +849,11 @@ def test_projection_window_derivation_and_memo(spark):
     assert seeded == {"s2": 32}
 
 
-def test_ivf_block_candidates_multi_assign_contract(spark):
-    """Client multi-assignment's REAL contract (discovered by this
-    test's first draft, now pinned): at fixed small n_probe it is NOT
-    monotone — extra client copies enrich each block's occupied-list
-    pool, and a newly-occupied list can displace a previously-probed
-    one from the prospect's top-n_probe — but once n_probe covers the
-    occupied pool, assign_probe=2 is a strict superset (every client
-    is fetchable through BOTH of its lists)."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        ivf_block_candidates,
-    )
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_auto_centroids,
-    )
-    from prod_recommendation_pyspark_spark.queries.similarity import (
-        _fd_sides,
-    )
-
-    pros, clis = _fd_sides(spark, "/root/testdata/sf0.001")
-    pros, clis = pros.persist(), clis.persist()
-    cents = ivf_auto_centroids(clis, "src_custkey", "vec")
-    n_lists = cents.count()
-    pairs = lambda df: {  # noqa: E731
-        (r["tgt_custkey"], r["src_custkey"]) for r in df.collect()
-    }
-    # generous probing: multi-assignment can only add pairs
-    one_full = pairs(ivf_block_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", cents,
-        n_probe=n_lists, assign_probe=1,
-    ))
-    two_full = pairs(ivf_block_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", cents,
-        n_probe=n_lists, assign_probe=2,
-    ))
-    assert one_full and one_full <= two_full
-    # narrow probing: displacement is REAL — the sets may differ in
-    # both directions, but volume stays bounded by ~assign_probe x
-    one = pairs(ivf_block_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", cents,
-        n_probe=2, assign_probe=1,
-    ))
-    two = pairs(ivf_block_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", cents,
-        n_probe=2, assign_probe=2,
-    ))
-    assert one and two
-    assert len(two) <= 2 * len(one)
-
-
 def test_fulldim_candidate_operators_handle_empty_sides(spark):
-    """Empty prospect/client relations must flow through both
-    general-dim candidate generators as empty outputs — no dim-probe
+    """Empty prospect/client relations must flow through the
+    general-dim candidate generator as empty outputs — no dim-probe
     crashes, no degenerate windows (same contract the 2-D paths pin)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        ivf_block_candidates,
         projection_window_candidates,
     )
 
@@ -975,7 +870,6 @@ def test_fulldim_candidate_operators_handle_empty_sides(spark):
           f"52{i:04d}", 1.0, 2.0) for i in range(1, 8)],
         schema.replace("tgt_custkey", "src_custkey"),
     )
-    cents = full_r.selectExpr("src_custkey AS centroid_id", "vec")
     direction = [0.8] + [0.05] * 8
     assert projection_window_candidates(
         empty_l, full_r, "tgt_custkey", "src_custkey", direction
@@ -984,9 +878,6 @@ def test_fulldim_candidate_operators_handle_empty_sides(spark):
         empty_l, full_r, "tgt_custkey", "src_custkey", direction,
         window=None,  # empty-left derivation: floor window, no crash
     ).count() == 0
-    assert ivf_block_candidates(
-        empty_l, full_r, "tgt_custkey", "src_custkey", cents
-    ).count() == 0
     full_l = spark.createDataFrame(
         [(10, [0.7, 0.1, 0.1, 0.1, 0.05, 0.0, 0.0, 0.0, 0.0],
           "520001", 1.0, 2.0)],
@@ -994,12 +885,6 @@ def test_fulldim_candidate_operators_handle_empty_sides(spark):
     )
     assert projection_window_candidates(
         full_l, empty_r, "tgt_custkey", "src_custkey", direction
-    ).count() == 0
-    empty_c = spark.createDataFrame(
-        [], "centroid_id long, vec array<double>"
-    )
-    assert ivf_block_candidates(
-        full_l, empty_r, "tgt_custkey", "src_custkey", empty_c
     ).count() == 0
 
 

@@ -1,8 +1,8 @@
 """Projection-window SERVING artifact (round-13 verdict #2): the
 general-dim peer search gets the same nightly index / intraday probe /
 CRUD lifecycle the 2-D rank-window artifact has — same machinery
-(`_arm_clients(key_expr=...)`, `_distributed_rank`, `_probe_fetch`),
-with the projection DIRECTION stamped as ``__dir`` metadata next to the
+(`_window_key(vec_col, direction)`, `_distributed_rank`,
+`_projection_probe_resolved`), with the projection DIRECTION stamped as ``__dir`` metadata next to the
 ``__w`` window so a probe/insert/compact can never silently use a
 different key than the corpus was ranked by.
 
