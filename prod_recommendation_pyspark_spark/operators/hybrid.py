@@ -143,6 +143,11 @@ def hybrid_topk_crossjoin(
     return windowed_topk(scored, left_id, [F.col("score").desc(), F.col(right_id)], k)
 
 
+#: Left rows the blocked kernel scores at once: bounds the per-chunk
+#: (chunk × m) grids (cosine, prefix depth, haversine) a worker holds.
+LEFT_CHUNK = 512
+
+
 def hybrid_topk(
     left: DataFrame,
     right: DataFrame,
@@ -156,15 +161,14 @@ def hybrid_topk(
     threshold: float = 0.0,
     w_hops: float = DEFAULT_W_HOPS,
     w_havs: float = DEFAULT_W_HAVS,
-    left_chunk: int = 512,
     n_blocks: int | None = None,
     block_mod_col: str | None = None,
     max_block_bytes: int = DEFAULT_MAX_BLOCK_BYTES,
     n_left_chunks: int | None = None,
 ) -> DataFrame:
-    """Blocked-broadcast hybrid top-K.  ``left_chunk`` bounds the
-    (chunk × m × 6) prefix-comparison tensor so worker memory stays
-    flat regardless of Arrow batch size.
+    """Blocked-broadcast hybrid top-K.  :data:`LEFT_CHUNK` bounds the
+    per-chunk (chunk × m) score grids so worker memory stays flat
+    regardless of Arrow batch size.
 
     ``n_blocks=None`` / ``n_left_chunks=None`` (default) pick the grid
     shape from both sides' memory geometry + cluster parallelism
@@ -262,11 +266,11 @@ def hybrid_topk(
         r_bad = rnlen != 6
         lids_all = l["__lid"].to_numpy()
         outs = []
-        for s in range(0, len(l), left_chunk):
-            chunk = l.iloc[s : s + left_chunk]
-            lids = lids_all[s : s + left_chunk]
+        for s in range(0, len(l), LEFT_CHUNK):
+            chunk = l.iloc[s : s + LEFT_CHUNK]
+            lids = lids_all[s : s + LEFT_CHUNK]
             # densify per chunk, not whole-group: peak extra memory is
-            # one (left_chunk × d) float64 block + the prefix tensor
+            # one (LEFT_CHUNK × d) float64 block + the prefix tensor
             lvec = np.array(chunk["__lvec"].tolist(), dtype=np.float64)
             cos = lvec @ mat_t  # (b, m)
 
@@ -665,9 +669,9 @@ def _needed_window_stats(
     The small side is broadcast at BOTH joins (hints don't propagate
     through a join, so each gets its own): ``pairs`` is ≤ |sample|·k
     rows BY CONSTRUCTION (the calibration sample's top-k) and the
-    first join's output ≤ |pairs|·(code_len+2) arm hits — both
+    first join's output ≤ |pairs|·(CODE_LEN+2) arm hits — both
     bounded at any corpus size, while the rank frames are
-    (code_len+2)·(|L|+|R|) rows — without the hints Catalyst sees
+    (CODE_LEN+2)·(|L|+|R|) rows — without the hints Catalyst sees
     only an applyInPandas output of unknown size and
     sort-merge-shuffles the big rank frames instead."""
     need = (
@@ -697,7 +701,6 @@ def rank_window_candidates(
     vec_col: str = "vec",
     naics_col: str = "naics",
     window: int | None = 64,
-    code_len: int = CODE_LEN,
     lat_col: str = "lat",
     lon_col: str = "lon",
     k: int = 15,
@@ -754,7 +757,7 @@ def rank_window_candidates(
 
     Mechanics: clients explode to their arms (lvl −1 = malformed
     sentinel, else lvl 0 = global + lvl p = p-prefix block);
-    prospects probe every arm (−1, 0, 1..code_len).  Positions and
+    prospects probe every arm (−1, 0, 1..CODE_LEN).  Positions and
     insertion points come from a DISTRIBUTED rank — the
     ``dense_ids`` construction, not a per-(lvl, blk) window (whose
     corpus-sized blocks would sort on a single task): range-partition
@@ -768,10 +771,10 @@ def rank_window_candidates(
     equi-join on (lvl, blk, ⌊pos/window⌋) with the prospect exploded
     to the ≤3 covering position blocks.
 
-    Scale: candidates ≤ (code_len+2)·|L|·2·window — linear in the
+    Scale: candidates ≤ (CODE_LEN+2)·|L|·2·window — linear in the
     prospect count, independent of |R| (measured sf0.1→sf1: candidate
     volume grows 10×, not 100×).  The rank pass shuffles
-    (code_len+2)·(|L|+|R|) slim rows via one range partitioning (no
+    (CODE_LEN+2)·(|L|+|R|) slim rows via one range partitioning (no
     single-task sort at any block size); the candidate join's skew
     cap is the equal-depth position-block key ⌊pos/window⌋.
 
@@ -830,8 +833,8 @@ def rank_window_candidates(
         and cache_key in window_cache
     ):
         window = int(window_cache[cache_key])
-    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len, direction)
-    pro = _arm_prospects(left, left_id, vec_col, naics_col, code_len, direction)
+    cli = _arm_clients(right, right_id, vec_col, naics_col, direction)
+    pro = _arm_prospects(left, left_id, vec_col, naics_col, direction)
     u = cli.unionByName(pro)
     if window is None:
         # COLD derivation: the calibration pass (sample agg + exact
@@ -943,11 +946,11 @@ def _parse_direction(s: str) -> list[float]:
     return [float(x) for x in s.split(",")] if s else []
 
 
-def _malformed_expr(naics_col: str, code_len: int):
+def _malformed_expr(naics_col: str):
     # null-safe: NULL codes are malformed (length(NULL) != n is NULL,
     # which F.when treats as false — the isNull arm catches it)
     return F.col(naics_col).isNull() | (
-        F.length(F.col(naics_col)) != code_len
+        F.length(F.col(naics_col)) != CODE_LEN
     )
 
 
@@ -964,15 +967,14 @@ def _arm_clients(
     right_id: str,
     vec_col: str,
     naics_col: str,
-    code_len: int,
     direction: list[float] | None = None,
 ) -> DataFrame:
     """Clients exploded to their arms: malformed codes go ONLY to the
     lvl −1 sentinel arm; well-formed codes to lvl 0 (global) + every
     p-prefix arm, keyed by :func:`_window_key`."""
-    wf_lvls = F.array(*[F.lit(i) for i in range(code_len + 1)])
+    wf_lvls = F.array(*[F.lit(i) for i in range(CODE_LEN + 1)])
     mal_lvls = F.array(F.lit(-1))
-    malformed = _malformed_expr(naics_col, code_len)
+    malformed = _malformed_expr(naics_col)
     return (
         right.select(
             F.col(right_id).alias("__id"),
@@ -1002,14 +1004,13 @@ def _arm_prospects(
     left_id: str,
     vec_col: str,
     naics_col: str,
-    code_len: int,
     direction: list[float] | None = None,
 ) -> DataFrame:
     """Prospects probe EVERY arm (a malformed prospect's lvl>=1 probes
     carry junk/NULL prefixes — NULL keys drop from the equi-join, junk
     prefixes only add candidates; its coverage is the lvl −1 and lvl 0
     arms, where its hops is the constant −1)."""
-    all_lvls = F.array(*[F.lit(i) for i in range(-1, code_len + 1)])
+    all_lvls = F.array(*[F.lit(i) for i in range(-1, CODE_LEN + 1)])
     return (
         left.select(
             F.col(left_id).alias("__id"),
@@ -1175,10 +1176,8 @@ def derive_rank_window_stats(
     w_hops: float = DEFAULT_W_HOPS,
     w_havs: float = DEFAULT_W_HAVS,
     sample_mod: int = 500,
-    code_len: int = CODE_LEN,
     min_window: int = 64,
     prev_window: int | None = None,
-    warm_sample_mod: int | None = None,
     direction: list[float] | None = None,
 ) -> dict:
     """STANDALONE window derivation — for :func:`rank_window_index`
@@ -1199,9 +1198,9 @@ def derive_rank_window_stats(
     ~372 s derivation), so a nightly rebuild against a corpus that
     drifted only marginally re-pays it for an answer it already has.
     With ``prev_window`` set, the derivation first runs on a ~8×
-    SMALLER sample (``warm_sample_mod``, default ``sample_mod·8`` —
-    the mod is the INVERSE of the sampling rate, so a larger mod
-    samples fewer prospects); if that cheap pass derives a window ≤
+    SMALLER sample (mod ``sample_mod·8`` — the mod is the INVERSE of
+    the sampling rate, so a larger mod samples fewer prospects); if
+    that cheap pass derives a window ≤
     ``prev_window`` the previous window is KEPT (stability: the
     window never shrinks between nightly builds without a full pass),
     otherwise the FULL-sample derivation runs — escalation, the rare
@@ -1248,12 +1247,11 @@ def derive_rank_window_stats(
     )
     if prev_window is not None:
         same = dict(
-            scoring, code_len=code_len, min_window=min_window,
-            direction=direction,
+            scoring, min_window=min_window, direction=direction,
         )
         warm = derive_rank_window_stats(
             left, right, left_id, right_id,
-            sample_mod=warm_sample_mod or sample_mod * 8, **same,
+            sample_mod=sample_mod * 8, **same,
         )
         if warm["window"] <= prev_window:
             return {
@@ -1276,8 +1274,8 @@ def derive_rank_window_stats(
     sample, n_sampled, used_mod = _derivation_sample(
         left, left_id, sample_mod
     )
-    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len, direction)
-    pro = _arm_prospects(sample, left_id, vec_col, naics_col, code_len, direction)
+    cli = _arm_clients(right, right_id, vec_col, naics_col, direction)
+    pro = _arm_prospects(sample, left_id, vec_col, naics_col, direction)
     _, _, n_pairs, mx = _calibrated_rank(
         spark, cli.unionByName(pro), lambda: (sample, n_sampled),
         right, left_id, right_id, **scoring,
@@ -1297,7 +1295,6 @@ def rank_window_index(
     vec_col: str = "vec",
     naics_col: str = "naics",
     window: int | None = 64,
-    code_len: int = CODE_LEN,
     calibration: DataFrame | None = None,
     calibration_id: str | None = None,
     lat_col: str = "lat",
@@ -1328,7 +1325,7 @@ def rank_window_index(
     use — a probe with a mismatched window silently fetches wrong
     neighborhoods, so the window travels WITH the artifact.
 
-    Scale: (code_len+1)·|R| slim rows, ranked by the distributed
+    Scale: (CODE_LEN+1)·|R| slim rows, ranked by the distributed
     dense_ids construction (no single-task sort); write it
     partitioned by ``__lvl`` (NOT by ``__blk``: the global arm's block
     id is the empty string, which Hive-style partition paths round-trip
@@ -1366,11 +1363,11 @@ def rank_window_index(
             vec_col=vec_col, naics_col=naics_col,
             lat_col=lat_col, lon_col=lon_col,
             k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            sample_mod=sample_mod, code_len=code_len,
+            sample_mod=sample_mod,
             min_window=min_window, prev_window=prev_window,
             direction=direction,
         )["window"]
-    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len, direction)
+    cli = _arm_clients(right, right_id, vec_col, naics_col, direction)
     ranked = _distributed_rank(cli, spark)
     return _index_rows(ranked, window, direction)
 
@@ -1512,9 +1509,7 @@ def rank_window_probe(
     vec_col: str = "vec",
     naics_col: str = "naics",
     window: int | None = None,
-    code_len: int = CODE_LEN,
     tombstones: DataFrame | None = None,
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """Probe a :func:`rank_window_index` with a prospect batch and
     return the SAME candidate pairs as the batch
@@ -1536,7 +1531,7 @@ def rank_window_probe(
     strictly below the prospect) and the ±window band.  The
     strict-less comparator on (angle, id) is the batch path's exactly.
 
-    Scale: the block starts are |R|·(code_len+1)/window rows
+    Scale: the block starts are |R|·(CODE_LEN+1)/window rows
     (broadcast); each prospect touches 3 window blocks of the index —
     at serving batch sizes that is an index lookup, not a corpus pass;
     two index scans and one batch-sized exchange per probe.
@@ -1562,14 +1557,11 @@ def rank_window_probe(
     compacted probe IS the rebuild, value-oracled end to end
     (``rank_window_delete_e2e``).
 
-    ``broadcast_probes`` (default True — the SERVING contract: probe
-    batches are bounded) broadcasts every probe-derived frame so the
-    corpus-sized index never shuffles.  A caller probing a
-    CORPUS-SIZED prospect relation (bulk replays, backfills) must
-    pass False (round-15 advice): at large scale the
-    (batch × arms)-sized broadcasts would exceed the broadcast/driver
-    memory limits, and the shuffle join on the bounded
-    (lvl, blk, wb) key is the right plan for that shape."""
+    Every probe-derived frame is broadcast (the SERVING contract:
+    probe batches are bounded), so the corpus-sized index never
+    shuffles.  A CORPUS-SIZED prospect relation (bulk replays,
+    backfills) belongs on :func:`rank_window_candidates`, whose
+    window fetch shuffle-joins on the bounded (lvl, blk, wb) key."""
     if "__dir" in index.columns:
         raise ValueError(
             "rank_window_probe: this index carries __dir metadata — it "
@@ -1581,8 +1573,7 @@ def rank_window_probe(
     window, _ = _resolve_window_meta(index, window)
     return _projection_probe_resolved(
         left, index, left_id, right_id, None, window,
-        vec_col, naics_col, code_len, tombstones,
-        broadcast_probes=broadcast_probes,
+        vec_col, naics_col, tombstones,
     )
 
 
@@ -1595,9 +1586,7 @@ def _projection_probe_resolved(
     window: int,
     vec_col: str = "vec",
     naics_col: str = "naics",
-    code_len: int = CODE_LEN,
     tombstones: DataFrame | None = None,
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """THE probe body of both families, AFTER metadata resolution
     (:func:`_resolve_window_meta`) — called by both public probes, and
@@ -1626,16 +1615,10 @@ def _projection_probe_resolved(
        below swb−1 lie wholly below it, so the fetched blocks always
        contain that client) — then the position band, ``distinct``,
        the tombstone anti-join, and the caller's feature joins and
-       top-K all reuse the prospect-id partitioning.
-
-    ``broadcast_probes`` gates the probe-side broadcast of the fetch
-    (NOT the block starts); False is for corpus-sized probe relations
-    whose (batch × arms) frame outgrows the broadcast limit (round-15
-    advice) — the fetch then shuffle-joins on the bounded
-    (lvl, blk, wb) key."""
+       top-K all reuse the prospect-id partitioning."""
     from pyspark.sql import Window
 
-    pro = _arm_prospects(left, left_id, vec_col, naics_col, code_len, direction)
+    pro = _arm_prospects(left, left_id, vec_col, naics_col, direction)
 
     k_lt = lambda a_v, a_i, b_v, b_i: (a_v < b_v) | (  # noqa: E731
         (a_v == b_v) & (a_i < b_i)
@@ -1663,9 +1646,7 @@ def _projection_probe_resolved(
         "__blk",
         F.explode(F.array(swb - 1, swb, swb + 1)).alias("__wb"),
     )
-    if broadcast_probes:
-        probes = F.broadcast(probes)
-    fetched = probes.join(
+    fetched = F.broadcast(probes).join(
         index.select(
             "__lvl", "__blk", "__wb", "__cpos", "__rid",
             F.col("__v1n").alias("__cv"),
@@ -1762,7 +1743,6 @@ def rank_window_insert(
     right_id: str,
     vec_col: str = "vec",
     naics_col: str = "naics",
-    code_len: int = CODE_LEN,
     direction: list[float] | None = None,
 ) -> DataFrame:
     """INSERT intraday client arrivals into a :func:`rank_window_index`
@@ -1828,7 +1808,7 @@ def rank_window_insert(
         "left_anti",
     )
     new = _arm_clients(
-        arrivals, right_id, vec_col, naics_col, code_len, direction
+        arrivals, right_id, vec_col, naics_col, direction
     )
     old = index.select(
         F.col("__rid").alias("__id"), "__v1n", "__lvl", "__blk",
@@ -1890,18 +1870,13 @@ def derive_projection_window_stats(
 PROJECTION_WINDOW_COST_RATIO = 32
 
 
-def projection_window_wins(
-    window: int,
-    n_right: int,
-    code_len: int = CODE_LEN,
-    cost_ratio: int = PROJECTION_WINDOW_COST_RATIO,
-) -> bool:
+def projection_window_wins(window: int, n_right: int) -> bool:
     """The kernel-vs-window DISPATCH RULE (round-13 verdict #1): take
     the projection-window candidate path only when its predicted
-    per-prospect candidate volume — ``(code_len+1) · 2 · window``
+    per-prospect candidate volume — ``(CODE_LEN+1) · 2 · window``
     (well-formed arms; the malformed arm is additive noise) — costs
     less than the exact kernel's ``n_right`` pairs at the MEASURED
-    per-candidate cost ratio.  Both sides scale with |prospects|, so
+    per-candidate cost ratio (:data:`PROJECTION_WINDOW_COST_RATIO`).  Both sides scale with |prospects|, so
     the prospect count cancels.  On near-uniform geometries the
     derived window grows ~linearly with corpus density (measured
     133 → 1305 per ×10 data, SCALE.md round-13), so this picks the
@@ -1911,7 +1886,7 @@ def projection_window_wins(
     asymptotics.  The deciding quantity is exactly what the
     derivation already computes, so dispatch adds no jobs beyond the
     one `count()` of the client corpus."""
-    return (code_len + 1) * 2 * window * cost_ratio < n_right
+    return (CODE_LEN + 1) * 2 * window * PROJECTION_WINDOW_COST_RATIO < n_right
 
 
 #: Measured SERVING-path throughputs, pairs/second, at the two
@@ -1978,21 +1953,15 @@ def serving_cost_ratio(n_right: int) -> float:
     return math.exp(math.log(r_lo) + t * (math.log(r_hi) - math.log(r_lo)))
 
 
-def serving_probe_wins(
-    window: int,
-    n_right: int,
-    n_batch: int = 1,
-    code_len: int = CODE_LEN,
-) -> bool:
+def serving_probe_wins(window: int, n_right: int) -> bool:
     """The SERVING-side probe-vs-kernel dispatch rule (round-14
     verdict #1): serve an intraday batch off the window artifact only
     when the probe's predicted fetched-pair volume —
-    ``(code_len+1)·2·window·|batch|`` — costs less than the exact
+    ``(CODE_LEN+1)·2·window·|batch|`` — costs less than the exact
     kernel's ``|batch|·n_right`` pairs at the measured per-pair cost
-    ratio (:func:`serving_cost_ratio`).  Both sides are linear in
-    ``n_batch`` so the batch size cancels; it stays in the signature
-    because the quantities being compared ARE the two batch costs, and
-    a future fixed-cost term would need it.
+    ratio (:func:`serving_cost_ratio`).  Both sides are linear in the
+    batch size, so it cancels: the rule compares per-prospect
+    volumes.
 
     Measured anchors (SCALE.md round-15 re-measure, pytest-pinned): at
     sf1 (window 4096, 135k clients) the probe wins ~3.3× (23.5s vs
@@ -2004,9 +1973,8 @@ def serving_probe_wins(
     window 16384 against only 135k clients) still route to the kernel;
     clustered corpora (small derived windows) and trickle batches stay
     firmly in the artifact's domain at any measured scale."""
-    probe_pairs = (code_len + 1) * 2 * window * n_batch
-    kernel_pairs = n_batch * n_right
-    return probe_pairs * serving_cost_ratio(n_right) < kernel_pairs
+    probe_pairs = (CODE_LEN + 1) * 2 * window
+    return probe_pairs * serving_cost_ratio(n_right) < n_right
 
 
 def serve_batch(
@@ -2024,9 +1992,7 @@ def serve_batch(
     w_hops: float = DEFAULT_W_HOPS,
     w_havs: float = DEFAULT_W_HAVS,
     n_right: int | None = None,
-    code_len: int = CODE_LEN,
     tombstones: DataFrame | None = None,
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """THE serving entry point: answer one intraday prospect batch
     with the full scored top-K, routing probe-vs-kernel on the
@@ -2075,7 +2041,7 @@ def serve_batch(
     window, direction = _resolve_window_meta(index, who="serve_batch")
     if n_right is None:
         n_right = clients.count()
-    probe_wins = serving_probe_wins(window, n_right, code_len=code_len)
+    probe_wins = serving_probe_wins(window, n_right)
     if direction is None and not probe_wins:
         _require_dim2(batch, vec_col, "serve_batch(batch)")
     scoring = dict(
@@ -2086,7 +2052,7 @@ def serve_batch(
     if probe_wins:
         return _serve_probed(
             batch, index, clients, left_id, right_id, window, direction,
-            code_len, tombstones, broadcast_probes, **scoring,
+            tombstones, **scoring,
         )
     live = (
         clients.join(
@@ -2106,9 +2072,7 @@ def _serve_probed(
     right_id: str,
     window: int,
     direction: list[float] | None,
-    code_len: int,
     tombstones: DataFrame | None,
-    broadcast_probes: bool = True,
     **scoring,
 ) -> DataFrame:
     """The PROBE route of ``serve_batch`` and the streaming loops, with
@@ -2121,15 +2085,14 @@ def _serve_probed(
     vec_col = scoring["vec_col"]
     cand = _projection_probe_resolved(
         batch, index, left_id, right_id, direction, window,
-        vec_col, scoring["naics_col"], code_len, tombstones,
-        broadcast_probes=broadcast_probes,
+        vec_col, scoring["naics_col"], tombstones,
     )
     dim = 2 if direction is None else len(direction)
     return _score_topk(
         _dim_guarded(batch, vec_col, dim, "serving re-rank (batch)"),
         _dim_guarded(clients, vec_col, dim, "serving re-rank (clients)"),
         cand, left_id, right_id,
-        dim=dim, broadcast_sides=broadcast_probes, **scoring,
+        dim=dim, broadcast_sides=True, **scoring,
     )
 
 
@@ -2163,9 +2126,7 @@ def projection_window_probe(
     naics_col: str = "naics",
     window: int | None = None,
     direction: list[float] | None = None,
-    code_len: int = CODE_LEN,
     tombstones: DataFrame | None = None,
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """Probe a :func:`projection_window_index` with a prospect batch —
     :func:`rank_window_probe` keyed by the artifact's projection, on the
@@ -2192,8 +2153,7 @@ def projection_window_probe(
     )
     return _projection_probe_resolved(
         left, index, left_id, right_id, direction, window,
-        vec_col, naics_col, code_len, tombstones,
-        broadcast_probes=broadcast_probes,
+        vec_col, naics_col, tombstones,
     )
 
 

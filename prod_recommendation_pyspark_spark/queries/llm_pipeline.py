@@ -440,54 +440,42 @@ def streaming_dedup_serving_replay(spark: SparkSession, sf_dir: str) -> DataFram
     spreads the arriving side before hashing (11.5s/batch unspread at
     sf0.1 — `lastProgress.durationMs.addBatch` — vs sub-second
     spread)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from prod_recommendation_pyspark_spark.sources.writers import (
         write_bucketed,
     )
     from prod_recommendation_pyspark_spark.streaming.joins import (
         streaming_incremental_dedup,
     )
+    from prod_recommendation_pyspark_spark.streaming.pipeline import (
+        replay_stream,
+    )
 
     docs = _spread(Catalog(spark, sf_dir).table("documents"))
     corpus = docs.filter(F.col("doc_id") % 5 != 4)
     batch = docs.filter(F.col("doc_id") % 5 == 4).select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="dedup_serving_replay_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    # static side of every micro-batch's stream-static join: the
-    # nightly bucketed artifact (no static-side shuffle per batch)
-    write_bucketed(
-        minhash_band_keys(corpus, "doc_id", "text"),
-        "dedup_band_index_serving", 16, ["band", "key"],
-        path=f"{base}/store",
-    )
-    store = spark.table("dedup_band_index_serving")
-    landing, out = f"{base}/landing", f"{base}/out"
-    for i in range(3):  # three part files -> three micro-batches
-        batch.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    cand_stream = streaming_incremental_dedup(stream, store, "doc_id", "text")
-    cand_schema = cand_stream.schema
-    q = (
-        cand_stream.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    shutil.rmtree(landing, ignore_errors=True)
+    cand_schema = None
+
+    def start(stream: DataFrame, base: str):
+        nonlocal cand_schema
+        # static side of every micro-batch's stream-static join: the
+        # nightly bucketed artifact (no static-side shuffle per batch)
+        write_bucketed(
+            minhash_band_keys(corpus, "doc_id", "text"),
+            "dedup_band_index_serving", 16, ["band", "key"],
+            path=f"{base}/store",
+        )
+        store = spark.table("dedup_band_index_serving")
+        cand_stream = streaming_incremental_dedup(stream, store, "doc_id", "text")
+        cand_schema = cand_stream.schema
+        return (
+            cand_stream.writeStream.format("parquet")
+            .option("path", f"{base}/out")
+            .option("checkpointLocation", f"{base}/ckpt")
+            .outputMode("append")
+            .start()
+        )
+
+    out = replay_stream(batch, "doc_id", start, "dedup_serving_replay_")
     # zero-candidate replays still create the sink dir (with
     # _spark_metadata) the moment the query starts, so a bare
     # isdir check can't detect emptiness and schema inference would
@@ -557,44 +545,30 @@ def streaming_dedup_within_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrivals in DIFFERENT micro-batches are absent from BOTH sides —
     the documented deferral to the next nightly rebuild, now pinned
     as semantics instead of left implicit."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     from prod_recommendation_pyspark_spark.streaming.joins import (
         streaming_dedup_serving_full,
+    )
+    from prod_recommendation_pyspark_spark.streaming.pipeline import (
+        replay_stream,
     )
 
     docs = _spread(Catalog(spark, sf_dir).table("documents"))
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     arrivals = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id", "text")
     store = minhash_band_keys(corpus, "doc_id", "text")
-    base = tempfile.mkdtemp(prefix="dedup_within_batch_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    landing, out = f"{base}/landing", f"{base}/out"
-    for i in range(3):  # three part files -> three micro-batches
-        arrivals.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-    stream = (
-        spark.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
 
-    def emit(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("append").parquet(out)
+    def start(stream: DataFrame, base: str):
+        def emit(df: DataFrame, batch_id: int) -> None:
+            df.write.mode("append").parquet(f"{base}/out")
 
-    q = streaming_dedup_serving_full(
-        stream, store, emit, "doc_id", "text",
-        checkpoint_dir=f"{base}/ckpt",
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    shutil.rmtree(landing, ignore_errors=True)
+        return streaming_dedup_serving_full(
+            stream, store, emit, "doc_id", "text",
+            checkpoint_dir=f"{base}/ckpt",
+        )
+
+    out = replay_stream(arrivals, "doc_id", start, "dedup_within_batch_")
     if not os.path.isdir(out):  # no batch emitted (empty arrivals)
         return spark.createDataFrame(
             [], "id_a long, id_b long, jaccard double"

@@ -10,10 +10,16 @@ explicit SQL transliteration of the score formula).
 
 from __future__ import annotations
 
+import os
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from prod_recommendation_pyspark_spark.operators.hybrid import hybrid_topk
+from prod_recommendation_pyspark_spark.operators.hybrid import (
+    hybrid_topk,
+    hybrid_topk_pruned,
+)
 from prod_recommendation_pyspark_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_crossjoin,
@@ -26,6 +32,56 @@ W_HOPS, W_HAVS = 0.399, 0.001  # search_ranking_peers.py:608-609
 W_COS = 1.0 - W_HOPS - W_HAVS  # == 0.6 exactly in IEEE754
 TOPK_PEERS = 15  # search_ranking_peers.py:613
 THRESHOLD = 0.0  # search_ranking_peers.py:612
+
+
+def _peer_sides(firmo: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(prospects, clients) of a firmographics frame: the deterministic
+    10/90 split by ``c_custkey % 10`` (replacing the reference's
+    randomSplit, U2, for oracle determinism)."""
+    prospects = firmo.filter(F.col("c_custkey") % 10 == 0).select(
+        F.col("c_custkey").alias("tgt_custkey"), "vec", "naics", "lat", "lon"
+    )
+    clients = firmo.filter(F.col("c_custkey") % 10 != 0).select(
+        F.col("c_custkey").alias("src_custkey"), "vec", "naics", "lat", "lon"
+    )
+    return prospects, clients
+
+
+_SCORING = dict(
+    vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
+    k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
+)
+
+
+def _exact(prospects: DataFrame, clients: DataFrame) -> DataFrame:
+    """The exact blocked kernel's peer top-15."""
+    return hybrid_topk(
+        prospects, clients, "tgt_custkey", "src_custkey", **_SCORING
+    )
+
+
+def _scored(
+    prospects: DataFrame,
+    clients: DataFrame,
+    candidates: DataFrame,
+    dim: int | None,
+    broadcast_sides: bool = False,
+) -> DataFrame:
+    """The peer top-15 exact-scored over ``candidates`` — the re-rank
+    every candidate-pruned query runs (``broadcast_sides`` on the
+    serving-shaped bodies, whose candidates are the big relation)."""
+    return hybrid_topk_pruned(
+        prospects, clients, "tgt_custkey", "src_custkey", **_SCORING,
+        candidates=candidates, dim=dim, broadcast_sides=broadcast_sides,
+    )
+
+
+def _finished(peers: DataFrame) -> DataFrame:
+    """The registered peer result: scores rounded as the oracles round
+    them, ordered like the oracles."""
+    return peers.select(
+        "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
+    ).orderBy("tgt_custkey", "src_custkey")
 
 
 @register(
@@ -201,6 +257,18 @@ _HAVS_SQL = """
 """
 
 
+def _hybrid_score_sql(dot: str) -> str:
+    """The hybrid score of pair ``(l, r)`` given its dot-product SQL."""
+    return (
+        f"CAST(0.6 AS DOUBLE) * ({dot})\n"
+        f"               + CAST(0.399 AS DOUBLE) * ({_HOPS_SQL})\n"
+        f"               + CAST(0.001 AS DOUBLE) * ({_HAVS_SQL})"
+    )
+
+
+_SCORE_SQL = _hybrid_score_sql("l.v0 * r.v0 + l.v1 * r.v1")
+
+
 @register(
     "peer_search_hybrid_topk",
     sql=f"""
@@ -208,9 +276,7 @@ _HAVS_SQL = """
     pairs AS (
         SELECT l.c_custkey AS tgt_custkey, r.c_custkey AS src_custkey,
                l.c_name AS tgt_name, r.c_name AS src_name,
-               CAST(0.6 AS DOUBLE) * (l.v0 * r.v0 + l.v1 * r.v1)
-               + CAST(0.399 AS DOUBLE) * ({_HOPS_SQL})
-               + CAST(0.001 AS DOUBLE) * ({_HAVS_SQL}) AS score
+               {_SCORE_SQL} AS score
         FROM normed l JOIN normed r
           ON l.c_custkey % 10 = 0 AND r.c_custkey % 10 <> 0),
     ranked AS (
@@ -233,27 +299,7 @@ def peer_search_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     side data move executor→executor through the cogroup shuffle
     (fixing the reference's driver-collected closure lists at
     :538-549)."""
-    firmo = _firmographics(spark, sf_dir)
-    prospects = firmo.filter(F.col("c_custkey") % 10 == 0).select(
-        F.col("c_custkey").alias("tgt_custkey"), "vec", "naics", "lat", "lon"
-    )
-    clients = firmo.filter(F.col("c_custkey") % 10 != 0).select(
-        F.col("c_custkey").alias("src_custkey"), "vec", "naics", "lat", "lon"
-    )
-    peers = hybrid_topk(
-        prospects,
-        clients,
-        "tgt_custkey",
-        "src_custkey",
-        vec_col="vec",
-        naics_col="naics",
-        lat_col="lat",
-        lon_col="lon",
-        k=TOPK_PEERS,
-        threshold=THRESHOLD,
-        w_hops=W_HOPS,
-        w_havs=W_HAVS,
-    )
+    peers = _exact(*_peer_sides(_firmographics(spark, sf_dir)))
     names = Catalog(spark, sf_dir).table("customer").select("c_custkey", "c_name")
     return (
         peers.join(
@@ -967,7 +1013,20 @@ def ann_ivf_update_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from prod_recommendation_pyspark_spark.operators.hybrid import (  # noqa: E402
     hybrid_candidates,
-    hybrid_topk_pruned,
+    projection_window_candidates,
+    projection_window_index,
+    projection_window_probe,
+    rank_window_candidates,
+    rank_window_compact,
+    rank_window_index,
+    rank_window_insert,
+    rank_window_probe,
+)
+from prod_recommendation_pyspark_spark.streaming.joins import (  # noqa: E402
+    streaming_peer_serving,
+)
+from prod_recommendation_pyspark_spark.streaming.pipeline import (  # noqa: E402
+    replay_stream,
 )
 
 _PRUNE_QBUCKETS, _PRUNE_PREFIX = 64, 4
@@ -1012,9 +1071,7 @@ def _pruned_cte() -> str:
         )),
     pruned_scored AS (
         SELECT cand.tgt AS tgt_custkey, cand.src AS src_custkey,
-               CAST(0.6 AS DOUBLE) * (l.v0 * r.v0 + l.v1 * r.v1)
-               + CAST(0.399 AS DOUBLE) * ({_HOPS_SQL})
-               + CAST(0.001 AS DOUBLE) * ({_HAVS_SQL}) AS score
+               {_SCORE_SQL} AS score
         FROM cand JOIN varr l ON cand.tgt = l.c_custkey
                   JOIN varr r ON cand.src = r.c_custkey),
     pruned_ranked AS (
@@ -1026,40 +1083,19 @@ def _pruned_cte() -> str:
 
 
 def _pruned_spark(spark: SparkSession, sf_dir: str):
-    firmo = _firmographics(spark, sf_dir)
-    prospects = firmo.filter(F.col("c_custkey") % 10 == 0).select(
-        F.col("c_custkey").alias("tgt_custkey"), "vec", "naics", "lat", "lon"
+    prospects, clients = _peer_sides(_firmographics(spark, sf_dir))
+    cand = hybrid_candidates(
+        prospects, clients, "tgt_custkey", "src_custkey",
+        tables=[], naics_prefix_len=_PRUNE_PREFIX,
+        quantile_buckets=_PRUNE_QBUCKETS,
     )
-    clients = firmo.filter(F.col("c_custkey") % 10 != 0).select(
-        F.col("c_custkey").alias("src_custkey"), "vec", "naics", "lat", "lon"
-    )
-    return hybrid_topk_pruned(
-        prospects,
-        clients,
-        "tgt_custkey",
-        "src_custkey",
-        vec_col="vec",
-        naics_col="naics",
-        lat_col="lat",
-        lon_col="lon",
-        k=TOPK_PEERS,
-        threshold=THRESHOLD,
-        w_hops=W_HOPS,
-        w_havs=W_HAVS,
-        candidates=hybrid_candidates(
-            prospects, clients, "tgt_custkey", "src_custkey",
-            tables=[], naics_prefix_len=_PRUNE_PREFIX,
-            quantile_buckets=_PRUNE_QBUCKETS,
-        ),
-    )
+    return _scored(prospects, clients, cand, dim=None)
 
 
 _EXACT_PAIRS_CTE = f"""
     exact_scored AS (
         SELECT l.c_custkey AS tgt_custkey, r.c_custkey AS src_custkey,
-               CAST(0.6 AS DOUBLE) * (l.v0 * r.v0 + l.v1 * r.v1)
-               + CAST(0.399 AS DOUBLE) * ({_HOPS_SQL})
-               + CAST(0.001 AS DOUBLE) * ({_HAVS_SQL}) AS score
+               {_SCORE_SQL} AS score
         FROM normed l JOIN normed r
           ON l.c_custkey % 10 = 0 AND r.c_custkey % 10 <> 0),
     exact_ranked AS (
@@ -1100,18 +1136,10 @@ def peer_search_pruned_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     boolean.  Value-oracled on all five columns: DuckDB recomputes the
     exact and pruned pair sets independently, so a hash match proves
     both Spark paths AND the measured recall."""
-    firmo = _firmographics(spark, sf_dir)
-    prospects = firmo.filter(F.col("c_custkey") % 10 == 0).select(
-        F.col("c_custkey").alias("tgt_custkey"), "vec", "naics", "lat", "lon"
+    prospects, clients = _peer_sides(_firmographics(spark, sf_dir))
+    exact = _exact(prospects, clients).select(
+        "tgt_custkey", "src_custkey", F.lit(1).alias("__e")
     )
-    clients = firmo.filter(F.col("c_custkey") % 10 != 0).select(
-        F.col("c_custkey").alias("src_custkey"), "vec", "naics", "lat", "lon"
-    )
-    exact = hybrid_topk(
-        prospects, clients, "tgt_custkey", "src_custkey",
-        vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-    ).select("tgt_custkey", "src_custkey", F.lit(1).alias("__e"))
     pruned = _pruned_spark(spark, sf_dir).select(
         "tgt_custkey", "src_custkey", F.lit(1).alias("__p")
     )
@@ -1157,14 +1185,122 @@ def _rank_sides(
     DIRECT calls (tests, notebooks, serving loops) cannot accumulate
     cached frames the way persist() did (round-9 advice); registry
     dispatch additionally clearCache()s on entry."""
-    firmo = _firmographics(spark, sf_dir).localCheckpoint()
-    prospects = firmo.filter(F.col("c_custkey") % 10 == 0).select(
-        F.col("c_custkey").alias("tgt_custkey"), "vec", "naics", "lat", "lon"
+    return _peer_sides(_firmographics(spark, sf_dir).localCheckpoint())
+
+
+class _Family(NamedTuple):
+    """One window family's query recipe — all that the family's
+    lifecycle queries differ in: ``sides(spark, sf_dir)`` → (prospects,
+    clients) on a checkpointed feature subtree; ``index(clients)``, the
+    serving artifact built at the family's pinned window; ``probe(batch,
+    index)``, the family's public probe, which reads the window (and
+    direction) off the artifact's metadata — a mismatched probe is
+    impossible by default; and ``dim``, the re-rank's unrolled dot."""
+
+    sides: Callable[[SparkSession, str], tuple[DataFrame, DataFrame]]
+    index: Callable[[DataFrame], DataFrame]
+    probe: Callable[[DataFrame, DataFrame], DataFrame]
+    dim: int
+
+
+#: The 2-D rank-window family.  Its probe runs an eager dim-2 check on
+#: the batch that the projection probe does not.
+_RANK = _Family(
+    _rank_sides,
+    lambda clients: rank_window_index(
+        clients, "src_custkey", window=_RANK_WINDOW
+    ),
+    lambda batch, index: rank_window_probe(
+        batch, index, "tgt_custkey", "src_custkey"
+    ),
+    2,
+)
+
+
+def _probe_parity(fam: _Family, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Build the family's artifact ONCE (localCheckpoint = the
+    persisted nightly artifact stand-in, read by both probes), answer
+    the prospects in TWO independent probe batches, exact-score the
+    union."""
+    prospects, clients = fam.sides(spark, sf_dir)
+    index = fam.index(clients).localCheckpoint()
+    batches = [
+        prospects.filter(F.col("tgt_custkey") % 20 == 0),
+        prospects.filter(F.col("tgt_custkey") % 20 != 0),
+    ]
+    probed = [fam.probe(b, index) for b in batches]
+    cand = probed[0].unionByName(probed[1])
+    return _finished(_scored(prospects, clients, cand, fam.dim, broadcast_sides=True))
+
+
+def _delete_e2e(fam: _Family, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tombstone the clients with ``src_custkey % 9 == 4``, compact the
+    family's artifact, probe the compacted artifact and exact-score
+    against the surviving clients."""
+    prospects, clients = fam.sides(spark, sf_dir)
+    index = fam.index(clients)
+    tombs = clients.filter(F.col("src_custkey") % 9 == 4).select(
+        "src_custkey"
     )
-    clients = firmo.filter(F.col("c_custkey") % 10 != 0).select(
-        F.col("c_custkey").alias("src_custkey"), "vec", "naics", "lat", "lon"
+    # compacted artifact stand-in (localCheckpoint ~ the rewritten
+    # parquet): three probe references + the __w resolve read it
+    compacted = rank_window_compact(index, tombs).localCheckpoint()
+    cand = fam.probe(prospects, compacted)
+    kept = clients.join(F.broadcast(tombs), "src_custkey", "left_anti")
+    return _finished(_scored(prospects, kept, cand, fam.dim, broadcast_sides=True))
+
+
+def _insert_e2e(fam: _Family, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Build the family's artifact over the clients with
+    ``src_custkey % 6 != 5``, insert the rest, probe the grown artifact
+    and exact-score against the full client corpus."""
+    prospects, clients = fam.sides(spark, sf_dir)
+    old = clients.filter(F.col("src_custkey") % 6 != 5)
+    arrivals = clients.filter(F.col("src_custkey") % 6 == 5)
+    index = fam.index(old)
+    grown = rank_window_insert(index, arrivals, "src_custkey").localCheckpoint()
+    cand = fam.probe(prospects, grown)
+    return _finished(_scored(prospects, clients, cand, fam.dim, broadcast_sides=True))
+
+
+def _serving_replay(
+    fam: _Family, spark: SparkSession, sf_dir: str, prefix: str
+) -> DataFrame:
+    """Serve the prospects through ``streaming_peer_serving`` over the
+    family's artifact as three real micro-batches
+    (:func:`replay_stream`), appending each batch's top-15 to a parquet
+    sink that is read back as the result."""
+    prospects, clients = fam.sides(spark, sf_dir)
+    index = fam.index(clients).localCheckpoint()
+
+    def start(stream: DataFrame, base: str):
+        def emit(df: DataFrame, batch_id: int) -> None:
+            df.write.mode("append").parquet(f"{base}/out")
+
+        return streaming_peer_serving(
+            stream, index, clients, "tgt_custkey", "src_custkey", emit,
+            **_SCORING,
+        )
+
+    out = replay_stream(prospects, "tgt_custkey", start, prefix)
+    if not os.path.isdir(out):  # no batch emitted (empty prospect set)
+        return spark.createDataFrame(
+            [], "tgt_custkey long, src_custkey long, score double"
+        )
+    return _finished(spark.read.parquet(out))
+
+
+def _nightly_index(
+    prospects: DataFrame, clients: DataFrame, prev_window: int | None = None
+) -> DataFrame:
+    """The nightly 2-D build: window derived at index time from the
+    prospects as calibration (warm-started from ``prev_window``) and
+    stamped into ``__w``."""
+    return rank_window_index(
+        clients, "src_custkey", window=None,
+        calibration=prospects, calibration_id="tgt_custkey",
+        prev_window=prev_window, **_SCORING,
     )
-    return prospects, clients
 
 
 #: Derived rank windows memoized per (corpus snapshot, floor) for the
@@ -1190,41 +1326,13 @@ def _rank_spark(
     query passes ``min_window=_RANK_WINDOW`` — derive-then-floor, so
     the derivation can only RAISE the window above the measured-exact
     256, never lower it (round-10 verdict #2)."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        rank_window_candidates,
-    )
-
     prospects, clients = _rank_sides(spark, sf_dir)
     cand = rank_window_candidates(
-        prospects,
-        clients,
-        "tgt_custkey",
-        "src_custkey",
-        window=window,
-        min_window=min_window,
-        k=TOPK_PEERS,
-        threshold=THRESHOLD,
-        w_hops=W_HOPS,
-        w_havs=W_HAVS,
-        window_cache=_DERIVED_WINDOW_CACHE,
-        cache_key=(sf_dir, min_window),
+        prospects, clients, "tgt_custkey", "src_custkey",
+        window=window, min_window=min_window, **_SCORING,
+        window_cache=_DERIVED_WINDOW_CACHE, cache_key=(sf_dir, min_window),
     )
-    return hybrid_topk_pruned(
-        prospects,
-        clients,
-        "tgt_custkey",
-        "src_custkey",
-        vec_col="vec",
-        naics_col="naics",
-        lat_col="lat",
-        lon_col="lon",
-        k=TOPK_PEERS,
-        threshold=THRESHOLD,
-        w_hops=W_HOPS,
-        w_havs=W_HAVS,
-        candidates=cand,
-        dim=2,
-    )
+    return _scored(prospects, clients, cand, dim=2)
 
 
 def _rank_cte(cli_filter: str = "") -> str:
@@ -1288,9 +1396,7 @@ def _rank_cte(cli_filter: str = "") -> str:
                AND c.pos BETWEEN p.ins - {w - 1} AND p.ins + {w}),
     rank_scored AS (
         SELECT rcand.tgt AS tgt_custkey, rcand.src AS src_custkey,
-               CAST(0.6 AS DOUBLE) * (l.v0 * r.v0 + l.v1 * r.v1)
-               + CAST(0.399 AS DOUBLE) * ({_HOPS_SQL})
-               + CAST(0.001 AS DOUBLE) * ({_HAVS_SQL}) AS score
+               {_SCORE_SQL} AS score
         FROM rcand JOIN varr l ON rcand.tgt = l.c_custkey
                    JOIN varr r ON rcand.src = r.c_custkey),
     rank_ranked AS (
@@ -1301,15 +1407,22 @@ def _rank_cte(cli_filter: str = "") -> str:
 """
 
 
-@register(
-    "peer_search_rank_window_topk",
-    sql=f"""
+def _rank_oracle(cli_filter: str = "") -> str:
+    """The 2-D family's full value oracle: the pinned-256 rank-window
+    replay (:func:`_rank_cte`, ``cli_filter`` forwarded), top-15 per
+    prospect."""
+    return f"""
     WITH {_FIRMO_SQL},
-    {_rank_cte()}
+    {_rank_cte(cli_filter)}
     SELECT tgt_custkey, src_custkey, round(score, 4) AS score
     FROM rank_ranked WHERE rn <= 15
     ORDER BY tgt_custkey, src_custkey
-    """,
+    """
+
+
+@register(
+    "peer_search_rank_window_topk",
+    sql=_rank_oracle(),
 )
 def peer_search_rank_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage-1 peer search on the LINEAR-candidate path
@@ -1357,24 +1470,14 @@ def peer_search_rank_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference anchor: the MIN_BATCH loop this replaces
     (search_ranking_peers.py:489-494,606-613)."""
-    return (
+    return _finished(
         _rank_spark(spark, sf_dir, window=None, min_window=_RANK_WINDOW)
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
     )
 
 
 @register(
     "rank_window_derived_parity",
-    sql=f"""
-    WITH {_FIRMO_SQL},
-    {_rank_cte()}
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM rank_ranked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_rank_oracle(),
 )
 def rank_window_derived_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DERIVATION-evidence twin of ``peer_search_rank_window_topk``
@@ -1396,24 +1499,12 @@ def rank_window_derived_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the derivation rides the growing tie density and lands exactly
     on the measured-exact 256 at sf1 (where the 64 floor reads recall
     0.9924), with end-to-end recall 1.0000 at all three scales."""
-    return (
-        _rank_spark(spark, sf_dir, window=None)
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    return _finished(_rank_spark(spark, sf_dir, window=None))
 
 
 @register(
     "peer_search_probe_parity",
-    sql=f"""
-    WITH {_FIRMO_SQL},
-    {_rank_cte()}
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM rank_ranked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_rank_oracle(),
 )
 def peer_search_probe_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SERVING-PATH twin of ``peer_search_rank_window_topk``: rank the
@@ -1432,68 +1523,18 @@ def peer_search_probe_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     against an independent SQL replay, not merely against the batch
     Spark path.
 
-    Scale: the index is (code_len+1)·|R| slim rows built by the
+    Scale: the index is (CODE_LEN+1)·|R| slim rows built by the
     distributed rank (no single-task sort); each probe batch touches
-    a broadcast block summary (|index|/window rows) plus ≤4 window
+    a broadcast block summary (|index|/window rows) plus 3 window
     blocks per (prospect, arm) — index-lookup I/O, independent of
     corpus size.  Reference anchor: the per-batch scoring loop this
     serves online, search_ranking_peers.py:489-494,536-559."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        rank_window_index,
-        rank_window_probe,
-    )
-
-    prospects, clients = _rank_sides(spark, sf_dir)
-    # build once; localCheckpoint = the "persisted nightly artifact"
-    # stand-in (three index references per probe × two probes below)
-    index = rank_window_index(
-        clients, "src_custkey", window=_RANK_WINDOW
-    ).localCheckpoint()
-    batches = [
-        prospects.filter(F.col("tgt_custkey") % 20 == 0),
-        prospects.filter(F.col("tgt_custkey") % 20 != 0),
-    ]
-    # window intentionally NOT passed: the probe derives it from the
-    # index's __w metadata column (round-11 — the window travels WITH
-    # the artifact, so a mismatched probe is impossible by default)
-    probed = [
-        rank_window_probe(b, index, "tgt_custkey", "src_custkey")
-        for b in batches
-    ]
-    cand = probed[0].unionByName(probed[1])
-    return (
-        hybrid_topk_pruned(
-            prospects,
-            clients,
-            "tgt_custkey",
-            "src_custkey",
-            vec_col="vec",
-            naics_col="naics",
-            lat_col="lat",
-            lon_col="lon",
-            k=TOPK_PEERS,
-            threshold=THRESHOLD,
-            w_hops=W_HOPS,
-            w_havs=W_HAVS,
-            candidates=cand, broadcast_sides=True,
-            dim=2,
-        )
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    return _probe_parity(_RANK, spark, sf_dir)
 
 
 @register(
     "rank_window_nightly_e2e",
-    sql=f"""
-    WITH {_FIRMO_SQL},
-    {_rank_cte()}
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM rank_ranked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_rank_oracle(),
 )
 def rank_window_nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The NIGHTLY-BUILD deployment story end to end, under the full
@@ -1512,41 +1553,15 @@ def rank_window_nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``rank_window_derivation_contract`` (the derived statistic),
     ``peer_search_probe_parity`` (index/probe arithmetic),
     ``rank_window_derived_parity`` (derived-window recall)."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        rank_window_index,
-        rank_window_probe,
-    )
-
     prospects, clients = _rank_sides(spark, sf_dir)
-    index = rank_window_index(
-        clients, "src_custkey", window=None,
-        calibration=prospects, calibration_id="tgt_custkey",
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-    ).localCheckpoint()
+    index = _nightly_index(prospects, clients).localCheckpoint()
     cand = rank_window_probe(prospects, index, "tgt_custkey", "src_custkey")
-    return (
-        hybrid_topk_pruned(
-            prospects, clients, "tgt_custkey", "src_custkey",
-            vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-            k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-            candidates=cand, dim=2, broadcast_sides=True,
-        )
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    return _finished(_scored(prospects, clients, cand, 2, broadcast_sides=True))
 
 
 @register(
     "rank_window_warm_nightly_e2e",
-    sql=f"""
-    WITH {_FIRMO_SQL},
-    {_rank_cte()}
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM rank_ranked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_rank_oracle(),
 )
 def rank_window_warm_nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WARM-STARTED nightly rebuild end to end (round 16, VERDICT
@@ -1567,47 +1582,19 @@ def rank_window_warm_nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_projection_artifact.py warm-start cases)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
         _resolve_window_meta,
-        rank_window_index,
-        rank_window_probe,
     )
 
     prospects, clients = _rank_sides(spark, sf_dir)
-    night1 = rank_window_index(
-        clients, "src_custkey", window=None,
-        calibration=prospects, calibration_id="tgt_custkey",
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-    ).localCheckpoint()
+    night1 = _nightly_index(prospects, clients).localCheckpoint()
     prev_w, _ = _resolve_window_meta(night1)  # yesterday's __w
-    night2 = rank_window_index(
-        clients, "src_custkey", window=None,
-        calibration=prospects, calibration_id="tgt_custkey",
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-        prev_window=prev_w,
-    ).localCheckpoint()
+    night2 = _nightly_index(prospects, clients, prev_w).localCheckpoint()
     cand = rank_window_probe(prospects, night2, "tgt_custkey", "src_custkey")
-    return (
-        hybrid_topk_pruned(
-            prospects, clients, "tgt_custkey", "src_custkey",
-            vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-            k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-            candidates=cand, dim=2, broadcast_sides=True,
-        )
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    return _finished(_scored(prospects, clients, cand, 2, broadcast_sides=True))
 
 
 @register(
     "rank_window_delete_e2e",
-    sql=f"""
-    WITH {_FIRMO_SQL},
-    {_rank_cte(" AND c_custkey % 9 <> 4")}
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM rank_ranked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_rank_oracle(" AND c_custkey % 9 <> 4"),
 )
 def rank_window_delete_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DELETE half of the peer-search artifact lifecycle (round-11
@@ -1630,47 +1617,12 @@ def rank_window_delete_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the BETWEEN-compactions semantics and deliberately not a
     rebuild, so it pins against the un-tombstoned probe, not this
     oracle."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        rank_window_compact,
-        rank_window_index,
-        rank_window_probe,
-    )
-
-    prospects, clients = _rank_sides(spark, sf_dir)
-    index = rank_window_index(clients, "src_custkey", window=_RANK_WINDOW)
-    tombs = clients.filter(F.col("src_custkey") % 9 == 4).select(
-        "src_custkey"
-    )
-    # compacted artifact stand-in (localCheckpoint ~ the rewritten
-    # parquet): three probe references + the __w resolve read it
-    compacted = rank_window_compact(index, tombs).localCheckpoint()
-    cand = rank_window_probe(
-        prospects, compacted, "tgt_custkey", "src_custkey"
-    )
-    kept = clients.join(F.broadcast(tombs), "src_custkey", "left_anti")
-    return (
-        hybrid_topk_pruned(
-            prospects, kept, "tgt_custkey", "src_custkey",
-            vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-            k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-            candidates=cand, dim=2, broadcast_sides=True,
-        )
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    return _delete_e2e(_RANK, spark, sf_dir)
 
 
 @register(
     "rank_window_insert_e2e",
-    sql=f"""
-    WITH {_FIRMO_SQL},
-    {_rank_cte()}
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM rank_ranked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_rank_oracle(),
 )
 def rank_window_insert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INSERT on the peer-search artifact — completing its CRUD matrix
@@ -1689,41 +1641,12 @@ def rank_window_insert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     The build window (256) is kept across the insert — tie density
     can rise with growth, so sustained growth re-derives at the next
     nightly build; the ×2 derivation pad covers intraday volumes."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        rank_window_index,
-        rank_window_insert,
-        rank_window_probe,
-    )
-
-    prospects, clients = _rank_sides(spark, sf_dir)
-    old = clients.filter(F.col("src_custkey") % 6 != 5)
-    arrivals = clients.filter(F.col("src_custkey") % 6 == 5)
-    index = rank_window_index(old, "src_custkey", window=_RANK_WINDOW)
-    grown = rank_window_insert(index, arrivals, "src_custkey").localCheckpoint()
-    cand = rank_window_probe(prospects, grown, "tgt_custkey", "src_custkey")
-    return (
-        hybrid_topk_pruned(
-            prospects, clients, "tgt_custkey", "src_custkey",
-            vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-            k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-            candidates=cand, dim=2, broadcast_sides=True,
-        )
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    return _insert_e2e(_RANK, spark, sf_dir)
 
 
 @register(
     "rank_window_versioned_publish_e2e",
-    sql=f"""
-    WITH {_FIRMO_SQL},
-    {_rank_cte()}
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM rank_ranked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_rank_oracle(),
 )
 def rank_window_versioned_publish_e2e(
     spark: SparkSession, sf_dir: str
@@ -1762,10 +1685,6 @@ def rank_window_versioned_publish_e2e(
     import shutil
     import tempfile
 
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        rank_window_index,
-        rank_window_probe,
-    )
     from prod_recommendation_pyspark_spark.sources.readers import (
         latest_published_version,
         read_published,
@@ -1778,16 +1697,11 @@ def rank_window_versioned_publish_e2e(
     base = tempfile.mkdtemp(prefix="rank_window_versions_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
     stale = clients.filter(F.col("src_custkey") % 6 != 5)
-    publish_versioned(
-        rank_window_index(stale, "src_custkey", window=_RANK_WINDOW),
-        f"{base}/index", partition_by=["__lvl"],
-        companions={"features": stale},
-    )
-    publish_versioned(
-        rank_window_index(clients, "src_custkey", window=_RANK_WINDOW),
-        f"{base}/index", partition_by=["__lvl"],
-        companions={"features": clients},
-    )
+    for corpus in (stale, clients):
+        publish_versioned(
+            _RANK.index(corpus), f"{base}/index", partition_by=["__lvl"],
+            companions={"features": corpus},
+        )
     # resolve ONCE, read artifact + its build's features at that pin
     v = latest_published_version(spark, f"{base}/index")
     artifact = read_published(
@@ -1796,21 +1710,8 @@ def rank_window_versioned_publish_e2e(
     feats = read_published(
         spark, f"{base}/index", version=v, companion="features"
     )
-    cand = rank_window_probe(
-        prospects, artifact, "tgt_custkey", "src_custkey"
-    )
-    return (
-        hybrid_topk_pruned(
-            prospects, feats, "tgt_custkey", "src_custkey",
-            vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-            k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-            candidates=cand, dim=2, broadcast_sides=True,
-        )
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    cand = _RANK.probe(prospects, artifact)
+    return _finished(_scored(prospects, feats, cand, 2, broadcast_sides=True))
 
 
 def _mod_ladder(start: int = 500) -> list[int]:
@@ -1857,9 +1758,7 @@ def _derivation_contract_sql() -> str:
              ORDER BY m DESC LIMIT 1),
     samp_scored AS (
         SELECT l.c_custkey AS tgt, r.c_custkey AS src,
-               CAST(0.6 AS DOUBLE) * (l.v0 * r.v0 + l.v1 * r.v1)
-               + CAST(0.399 AS DOUBLE) * ({_HOPS_SQL})
-               + CAST(0.001 AS DOUBLE) * ({_HAVS_SQL}) AS score
+               {_SCORE_SQL} AS score
         FROM varr l JOIN varr r
           ON l.c_custkey % 10 = 0 AND r.c_custkey % 10 <> 0
         CROSS JOIN pick WHERE l.c_custkey % pick.m = 0),
@@ -1925,8 +1824,7 @@ def rank_window_derivation_contract(
 
     prospects, clients = _rank_sides(spark, sf_dir)
     stats = derive_rank_window_stats(
-        prospects, clients, "tgt_custkey", "src_custkey",
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
+        prospects, clients, "tgt_custkey", "src_custkey", **_SCORING
     )
     return spark.createDataFrame(
         [(
@@ -1943,13 +1841,7 @@ def rank_window_derivation_contract(
 
 @register(
     "streaming_peer_serving_replay",
-    sql=f"""
-    WITH {_FIRMO_SQL},
-    {_rank_cte()}
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM rank_ranked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_rank_oracle(),
 )
 def streaming_peer_serving_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming serving loop REGISTERED under the full value
@@ -1968,66 +1860,12 @@ def streaming_peer_serving_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     execution (file source batching, foreachBatch plumbing, sink
     append), not just the operators it composes.
 
-    Scale: per micro-batch I/O is the broadcast block summary plus ≤4
+    Scale: per micro-batch I/O is the broadcast block summary plus 3
     index window-blocks per (prospect, arm) — independent of corpus
     size (measured sf1: see SCALE.md round-11 appendix).  Reference
     anchor: the per-batch scoring loop this serves online,
     search_ranking_peers.py:536-559."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        rank_window_index,
-    )
-    from prod_recommendation_pyspark_spark.streaming.joins import (
-        streaming_peer_serving,
-    )
-
-    prospects, clients = _rank_sides(spark, sf_dir)
-    index = rank_window_index(
-        clients, "src_custkey", window=_RANK_WINDOW
-    ).localCheckpoint()
-    base = tempfile.mkdtemp(prefix="peer_serving_replay_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    landing, out = f"{base}/landing", f"{base}/out"
-    for i in range(3):  # three part files -> three micro-batches
-        prospects.filter(F.col("tgt_custkey") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-    stream = (
-        spark.readStream.schema(prospects.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-
-    def emit(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("append").parquet(out)
-
-    q = streaming_peer_serving(
-        stream, index, clients, "tgt_custkey", "src_custkey", emit,
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # the landing staging is only read by the (stopped) stream — drop
-    # it now so repeated runs don't accumulate prospect copies in /tmp
-    # (the out dir must outlive us: the returned frame reads it lazily)
-    shutil.rmtree(landing, ignore_errors=True)
-    if not os.path.isdir(out):  # no batch emitted (empty prospect set)
-        return spark.createDataFrame(
-            [], "tgt_custkey long, src_custkey long, score double"
-        )
-    return (
-        spark.read.parquet(out)
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    return _serving_replay(_RANK, spark, sf_dir, "peer_serving_replay_")
 
 
 @register(
@@ -2186,10 +2024,7 @@ def streaming_ann_serving_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-batch I/O = broadcast centroid assignment + a
     DPP-pruned scan of the batch's probed list directories —
     independent of the corpus outside those lists."""
-    import atexit
-    import os
     import shutil
-    import tempfile
 
     from prod_recommendation_pyspark_spark.operators.similarity import (
         ivf_index,
@@ -2206,41 +2041,27 @@ def streaming_ann_serving_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = emb.filter(F.col("vec_id") % 17 == 3).select(
         F.col("vec_id").alias("tgt_id"), "embedding"
     )
-    base = tempfile.mkdtemp(prefix="ann_serving_replay_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    landing, out = f"{base}/landing", f"{base}/out"
-    ivf_index(corpus, "nbr_id", "embedding", centroids).repartition(
-        "ivf_list"
-    ).write.mode("overwrite").partitionBy("ivf_list").parquet(
-        f"{base}/ivf_index"
-    )
-    artifact = spark.read.parquet(f"{base}/ivf_index")
-    for i in range(3):  # three part files -> three micro-batches
-        qs.filter(F.col("tgt_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-    stream = (
-        spark.readStream.schema(qs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
 
-    def emit(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("append").parquet(out)
+    def start(stream: DataFrame, base: str):
+        ivf_index(corpus, "nbr_id", "embedding", centroids).repartition(
+            "ivf_list"
+        ).write.mode("overwrite").partitionBy("ivf_list").parquet(
+            f"{base}/ivf_index"
+        )
+        artifact = spark.read.parquet(f"{base}/ivf_index")
 
-    q = streaming_ann_serving(
-        stream, artifact, centroids, "tgt_id", "nbr_id", emit,
-        vec_col="embedding", k=_IVF_K, n_probe=_IVF_NPROBE,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # landing AND the artifact are fully consumed by the (stopped)
-    # stream's eager per-batch probes — only the sink must outlive us
-    # (the returned frame reads it lazily)
-    shutil.rmtree(landing, ignore_errors=True)
-    shutil.rmtree(f"{base}/ivf_index", ignore_errors=True)
+        def emit(df: DataFrame, batch_id: int) -> None:
+            df.write.mode("append").parquet(f"{base}/out")
+
+        return streaming_ann_serving(
+            stream, artifact, centroids, "tgt_id", "nbr_id", emit,
+            vec_col="embedding", k=_IVF_K, n_probe=_IVF_NPROBE,
+        )
+
+    out = replay_stream(qs, "tgt_id", start, "ann_serving_replay_")
+    # the artifact is fully consumed by the (stopped) stream's eager
+    # per-batch probes — only the sink must outlive us
+    shutil.rmtree(f"{os.path.dirname(out)}/ivf_index", ignore_errors=True)
     if not os.path.isdir(out):  # no batch emitted (empty query set)
         return spark.createDataFrame(
             [], "tgt_id long, nbr_id long, score double"
@@ -3170,12 +2991,7 @@ def _fd_vdot(a: str, b: str, bpfx: str = "v") -> str:
     )
 
 
-def _fd_hybrid_score(l: str = "l", r: str = "r") -> str:
-    return (
-        f"CAST(0.6 AS DOUBLE) * ({_fd_vdot(l, r)})\n"
-        f"               + CAST(0.399 AS DOUBLE) * ({_HOPS_SQL})\n"
-        f"               + CAST(0.001 AS DOUBLE) * ({_HAVS_SQL})"
-    )
+_FD_SCORE_SQL = _hybrid_score_sql(_fd_vdot("l", "r"))
 
 
 def _fd_sides(spark: SparkSession, sf_dir: str):
@@ -3187,14 +3003,7 @@ def _fd_sides(spark: SparkSession, sf_dir: str):
     production query, 27.5 → 22.0s for the IVF arm, 20.1 → 18.2s for
     the recall row).  Checkpoint blocks are reclaimed by the
     ContextCleaner when the result frames are GC'd."""
-    firmo = _firmographics_full(spark, sf_dir).localCheckpoint()
-    prospects = firmo.filter(F.col("c_custkey") % 10 == 0).select(
-        F.col("c_custkey").alias("tgt_custkey"), "vec", "naics", "lat", "lon"
-    )
-    clients = firmo.filter(F.col("c_custkey") % 10 != 0).select(
-        F.col("c_custkey").alias("src_custkey"), "vec", "naics", "lat", "lon"
-    )
-    return prospects, clients
+    return _peer_sides(_firmographics_full(spark, sf_dir).localCheckpoint())
 
 
 #: Projection direction for the general-dim window arm: the
@@ -3215,6 +3024,18 @@ _FD_DIRECTION = [_FD_W_REV, _FD_W_NUM, _FD_W_NUM, _FD_W_NUM] + [
 #: 1.0000 there (SCALE.md round-13).
 _FD_WINDOW = 512
 
+#: The projection family (9-D recipe, reference-weight direction).
+_PROJ = _Family(
+    _fd_sides,
+    lambda clients: projection_window_index(
+        clients, "src_custkey", _FD_DIRECTION, window=_FD_WINDOW
+    ),
+    lambda batch, index: projection_window_probe(
+        batch, index, "tgt_custkey", "src_custkey"
+    ),
+    _FD_DIM,
+)
+
 
 def _fd_win_spark(
     spark: SparkSession, sf_dir: str, window: int | None = None
@@ -3226,32 +3047,26 @@ def _fd_win_spark(
     recall-evidence query pins THIS arm; the production query rides
     :func:`_fd_prod_spark`, which dispatches between this arm and the
     exact kernel on the measured cost rule."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-        projection_window_candidates,
-    )
-
     prospects, clients = _fd_sides(spark, sf_dir)
     cand = projection_window_candidates(
         prospects, clients, "tgt_custkey", "src_custkey",
-        _FD_DIRECTION, vec_col="vec", naics_col="naics",
-        window=window, min_window=_FD_WINDOW,
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
+        _FD_DIRECTION, window=window, min_window=_FD_WINDOW, **_SCORING,
         window_cache=_DERIVED_WINDOW_CACHE,
         cache_key=("fulldim", sf_dir, _FD_WINDOW),
     )
-    return hybrid_topk_pruned(
-        prospects, clients, "tgt_custkey", "src_custkey",
-        vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-        candidates=cand, dim=_FD_DIM,
-    )
+    return _scored(prospects, clients, cand, dim=_FD_DIM)
 
 
 #: Client-corpus counts memoized per snapshot for the dispatch (the
 #: count is one job on a localCheckpointed slim frame; caching it
 #: mirrors the window memo — sf_dir IS the snapshot identity here).
 _FD_NCLIENTS_CACHE: dict[str, int] = {}
+
+
+def _fd_n_clients(clients: DataFrame, sf_dir: str) -> int:
+    if sf_dir not in _FD_NCLIENTS_CACHE:
+        _FD_NCLIENTS_CACHE[sf_dir] = clients.count()
+    return _FD_NCLIENTS_CACHE[sf_dir]
 
 
 def _fd_derived_window(prospects: DataFrame, clients: DataFrame, sf_dir: str) -> int:
@@ -3270,8 +3085,7 @@ def _fd_derived_window(prospects: DataFrame, clients: DataFrame, sf_dir: str) ->
 
         stats = derive_projection_window_stats(
             prospects, clients, "tgt_custkey", "src_custkey", _FD_DIRECTION,
-            k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-            min_window=_FD_WINDOW,
+            min_window=_FD_WINDOW, **_SCORING,
         )
         _DERIVED_WINDOW_CACHE[key] = int(stats["window"])
     return _DERIVED_WINDOW_CACHE[key]
@@ -3280,16 +3094,14 @@ def _fd_derived_window(prospects: DataFrame, clients: DataFrame, sf_dir: str) ->
 def _fd_route(spark: SparkSession, sf_dir: str):
     """(prospects, clients, derived window, n_clients, kernel_chosen)
     — the dispatch inputs, shared by the production query and the
-    registered dispatch-evidence query."""
+    registered dispatch-evidence queries (batch and serving)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
         projection_window_wins,
     )
 
     prospects, clients = _fd_sides(spark, sf_dir)
     w = _fd_derived_window(prospects, clients, sf_dir)
-    if sf_dir not in _FD_NCLIENTS_CACHE:
-        _FD_NCLIENTS_CACHE[sf_dir] = clients.count()
-    n = _FD_NCLIENTS_CACHE[sf_dir]
+    n = _fd_n_clients(clients, sf_dir)
     return prospects, clients, w, n, not projection_window_wins(w, n)
 
 
@@ -3302,29 +3114,14 @@ def _fd_prod_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured at every oracle scale and sf1), so the dispatch changes
     the PLAN, never the result — which is exactly what lets the SQL
     twin stay pinned to the window replay."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-        projection_window_candidates,
-    )
-
     prospects, clients, w, n, kernel = _fd_route(spark, sf_dir)
     if kernel:
-        return hybrid_topk(
-            prospects, clients, "tgt_custkey", "src_custkey",
-            vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-            k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-        )
+        return _exact(prospects, clients)
     cand = projection_window_candidates(
         prospects, clients, "tgt_custkey", "src_custkey",
-        _FD_DIRECTION, vec_col="vec", naics_col="naics", window=w,
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
+        _FD_DIRECTION, window=w, **_SCORING,
     )
-    return hybrid_topk_pruned(
-        prospects, clients, "tgt_custkey", "src_custkey",
-        vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-        candidates=cand, dim=_FD_DIM,
-    )
+    return _scored(prospects, clients, cand, dim=_FD_DIM)
 
 
 def _fd_proj_sql(alias: str) -> str:
@@ -3387,16 +3184,21 @@ def _fd_win_cte(cli_filter: str = "", pro_filter: str = "") -> str:
 """
 
 
-@register(
-    "peer_search_fulldim_topk",
-    sql=f"""
-    WITH {_fd_firmo_sql()},
-    {_fd_win_cte()},
+_FD_SCORED_CTE = f"""
     fscored AS (
         SELECT fcand.tgt AS tgt_custkey, fcand.src AS src_custkey,
-               {_fd_hybrid_score()} AS score
+               {_FD_SCORE_SQL} AS score
         FROM fcand JOIN fnormed l ON fcand.tgt = l.c_custkey
-                   JOIN fnormed r ON fcand.src = r.c_custkey),
+                   JOIN fnormed r ON fcand.src = r.c_custkey)"""
+
+
+def _fd_oracle(cli_filter: str = "", pro_filter: str = "") -> str:
+    """The projection family's full value oracle: the window-512
+    replay (:func:`_fd_win_cte`, filters forwarded), exact-scored,
+    top-15 per prospect."""
+    return f"""
+    WITH {_fd_firmo_sql()},
+    {_fd_win_cte(cli_filter, pro_filter)},{_FD_SCORED_CTE},
     franked AS (
         SELECT tgt_custkey, src_custkey, score,
                row_number() OVER (PARTITION BY tgt_custkey
@@ -3405,14 +3207,19 @@ def _fd_win_cte(cli_filter: str = "", pro_filter: str = "") -> str:
     SELECT tgt_custkey, src_custkey, round(score, 4) AS score
     FROM franked WHERE rn <= 15
     ORDER BY tgt_custkey, src_custkey
-    """,
+    """
+
+
+@register(
+    "peer_search_fulldim_topk",
+    sql=_fd_oracle(),
 )
 def peer_search_fulldim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE general-dim production peer search — round 14: the engine
     now ACTS on the crossover it measured in round 13.  The body
     (``_fd_prod_spark``) derives the projection window
     (derive-then-floor-at-512, memoized per snapshot), predicts the
-    window arm's candidate volume (``(code_len+1)·2·window`` per
+    window arm's candidate volume (``(CODE_LEN+1)·2·window`` per
     prospect), and DISPATCHES on the measured cost rule
     (``projection_window_wins``, cost ratio 32 ≈ the sf1-measured
     ~29× per-candidate overhead of the rank+fetch machinery vs one
@@ -3445,25 +3252,14 @@ def peer_search_fulldim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``peer_search_fulldim_probe_parity`` pins the probed serving under
     this same oracle).  Reference anchor: the blocked-matmul batching
     intent at search_ranking_peers.py:489-494,240-243."""
-    return (
-        _fd_prod_spark(spark, sf_dir)
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    return _finished(_fd_prod_spark(spark, sf_dir))
 
 
 @register(
     "peer_search_fulldim_recall",
     sql=f"""
     WITH {_fd_firmo_sql()},
-    {_fd_win_cte()},
-    fscored AS (
-        SELECT fcand.tgt AS tgt_custkey, fcand.src AS src_custkey,
-               {_fd_hybrid_score()} AS score
-        FROM fcand JOIN fnormed l ON fcand.tgt = l.c_custkey
-                   JOIN fnormed r ON fcand.src = r.c_custkey),
+    {_fd_win_cte()},{_FD_SCORED_CTE},
     fpruned AS (
         SELECT tgt_custkey, src_custkey FROM (
             SELECT tgt_custkey, src_custkey,
@@ -3473,7 +3269,7 @@ def peer_search_fulldim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE rn <= 15),
     fexact_scored AS (
         SELECT l.c_custkey AS tgt_custkey, r.c_custkey AS src_custkey,
-               {_fd_hybrid_score()} AS score
+               {_FD_SCORE_SQL} AS score
         FROM fnormed l JOIN fnormed r
           ON l.c_custkey % 10 = 0 AND r.c_custkey % 10 <> 0),
     fexact AS (
@@ -3509,13 +3305,9 @@ def peer_search_fulldim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCALE.md — it stays the fallback for geometries where a single
     projection is uninformative."""
     prospects, clients = _fd_sides(spark, sf_dir)
-    prospects = prospects.persist()
-    clients = clients.persist()
-    exact = hybrid_topk(
-        prospects, clients, "tgt_custkey", "src_custkey",
-        vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-    ).select("tgt_custkey", "src_custkey", F.lit(1).alias("__e"))
+    exact = _exact(prospects.persist(), clients.persist()).select(
+        "tgt_custkey", "src_custkey", F.lit(1).alias("__e")
+    )
     pruned = _fd_win_spark(spark, sf_dir).select(
         "tgt_custkey", "src_custkey", F.lit(1).alias("__p")
     )
@@ -3645,11 +3437,7 @@ def peer_search_serving_dispatch(
         serving_probe_wins,
     )
 
-    prospects, clients = _fd_sides(spark, sf_dir)
-    w = _fd_derived_window(prospects, clients, sf_dir)
-    if sf_dir not in _FD_NCLIENTS_CACHE:
-        _FD_NCLIENTS_CACHE[sf_dir] = clients.count()
-    n = _FD_NCLIENTS_CACHE[sf_dir]
+    _, _, w, n, _ = _fd_route(spark, sf_dir)
     pred = (CODE_LEN + 1) * 2 * w
     return spark.createDataFrame(
         [
@@ -3668,23 +3456,7 @@ def peer_search_serving_dispatch(
 
 @register(
     "peer_search_serve_batch_e2e",
-    sql=f"""
-    WITH {_fd_firmo_sql()},
-    {_fd_win_cte(pro_filter=" AND c_custkey % 30 = 0")},
-    fscored AS (
-        SELECT fcand.tgt AS tgt_custkey, fcand.src AS src_custkey,
-               {_fd_hybrid_score()} AS score
-        FROM fcand JOIN fnormed l ON fcand.tgt = l.c_custkey
-                   JOIN fnormed r ON fcand.src = r.c_custkey),
-    franked AS (
-        SELECT tgt_custkey, src_custkey, score,
-               row_number() OVER (PARTITION BY tgt_custkey
-                                  ORDER BY score DESC, src_custkey) AS rn
-        FROM fscored WHERE score >= 0.0)
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM franked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_fd_oracle(pro_filter=" AND c_custkey % 30 = 0"),
 )
 def peer_search_serve_batch_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END serving dispatch under the full value oracle
@@ -3700,50 +3472,22 @@ def peer_search_serve_batch_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (kernel at sf0.01's 1.35k clients, probe at sf0.1's 13.5k), so a
     green row at both scales is evidence for both routes end to end."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        projection_window_index,
         serve_batch,
     )
 
     prospects, clients = _fd_sides(spark, sf_dir)
     batch = prospects.filter(F.col("tgt_custkey") % 30 == 0)
-    index = projection_window_index(
-        clients, "src_custkey", _FD_DIRECTION, window=_FD_WINDOW
-    ).localCheckpoint()
-    if sf_dir not in _FD_NCLIENTS_CACHE:
-        _FD_NCLIENTS_CACHE[sf_dir] = clients.count()
+    index = _PROJ.index(clients).localCheckpoint()
     out = serve_batch(
-        batch, index, clients, "tgt_custkey", "src_custkey",
-        vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-        n_right=_FD_NCLIENTS_CACHE[sf_dir],
+        batch, index, clients, "tgt_custkey", "src_custkey", **_SCORING,
+        n_right=_fd_n_clients(clients, sf_dir),
     )
-    return (
-        out.select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    return _finished(out)
 
 
 @register(
     "peer_search_fulldim_probe_parity",
-    sql=f"""
-    WITH {_fd_firmo_sql()},
-    {_fd_win_cte()},
-    fscored AS (
-        SELECT fcand.tgt AS tgt_custkey, fcand.src AS src_custkey,
-               {_fd_hybrid_score()} AS score
-        FROM fcand JOIN fnormed l ON fcand.tgt = l.c_custkey
-                   JOIN fnormed r ON fcand.src = r.c_custkey),
-    franked AS (
-        SELECT tgt_custkey, src_custkey, score,
-               row_number() OVER (PARTITION BY tgt_custkey
-                                  ORDER BY score DESC, src_custkey) AS rn
-        FROM fscored WHERE score >= 0.0)
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM franked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_fd_oracle(),
 )
 def peer_search_fulldim_probe_parity(
     spark: SparkSession, sf_dir: str
@@ -3764,63 +3508,17 @@ def peer_search_fulldim_probe_parity(
     independent SQL replay.  This closes round-13 gap #1: the 9-D
     production recipe now has the same nightly-build /
     intraday-probe economics as the 2-D path (the distributed rank
-    runs at BUILD time; probes touch ≤4 window blocks per (prospect,
+    runs at BUILD time; probes touch 3 window blocks per (prospect,
     arm) — see the ``serving:projection_window_probe`` bench row).
     CRUD rides the shared metadata-dispatched cells
     (rank_window_compact / rank_window_insert — pytest-pinned
     rebuild equivalences on __dir artifacts)."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-        projection_window_index,
-        projection_window_probe,
-    )
-
-    prospects, clients = _fd_sides(spark, sf_dir)
-    index = projection_window_index(
-        clients, "src_custkey", _FD_DIRECTION, window=_FD_WINDOW
-    ).localCheckpoint()
-    batches = [
-        prospects.filter(F.col("tgt_custkey") % 20 == 0),
-        prospects.filter(F.col("tgt_custkey") % 20 != 0),
-    ]
-    probed = [
-        projection_window_probe(b, index, "tgt_custkey", "src_custkey")
-        for b in batches
-    ]
-    cand = probed[0].unionByName(probed[1])
-    return (
-        hybrid_topk_pruned(
-            prospects, clients, "tgt_custkey", "src_custkey",
-            vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-            k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-            candidates=cand, dim=_FD_DIM, broadcast_sides=True,
-        )
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    return _probe_parity(_PROJ, spark, sf_dir)
 
 
 @register(
     "projection_window_delete_e2e",
-    sql=f"""
-    WITH {_fd_firmo_sql()},
-    {_fd_win_cte(cli_filter=" AND c_custkey % 9 <> 4")},
-    fscored AS (
-        SELECT fcand.tgt AS tgt_custkey, fcand.src AS src_custkey,
-               {_fd_hybrid_score()} AS score
-        FROM fcand JOIN fnormed l ON fcand.tgt = l.c_custkey
-                   JOIN fnormed r ON fcand.src = r.c_custkey),
-    franked AS (
-        SELECT tgt_custkey, src_custkey, score,
-               row_number() OVER (PARTITION BY tgt_custkey
-                                  ORDER BY score DESC, src_custkey) AS rn
-        FROM fscored WHERE score >= 0.0)
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM franked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_fd_oracle(cli_filter=" AND c_custkey % 9 <> 4"),
 )
 def projection_window_delete_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE lifecycle on the 9-D serving artifact, under the full
@@ -3837,58 +3535,12 @@ def projection_window_delete_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≡ rebuild for the projection family end to end.  Pre-compaction
     tombstone-probe semantics are pytest-pinned separately
     (tests/test_projection_artifact.py)."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-        projection_window_index,
-        projection_window_probe,
-        rank_window_compact,
-    )
-
-    prospects, clients = _fd_sides(spark, sf_dir)
-    index = projection_window_index(
-        clients, "src_custkey", _FD_DIRECTION, window=_FD_WINDOW
-    )
-    tombs = clients.filter(F.col("src_custkey") % 9 == 4).select(
-        "src_custkey"
-    )
-    compacted = rank_window_compact(index, tombs).localCheckpoint()
-    cand = projection_window_probe(
-        prospects, compacted, "tgt_custkey", "src_custkey"
-    )
-    kept = clients.join(F.broadcast(tombs), "src_custkey", "left_anti")
-    return (
-        hybrid_topk_pruned(
-            prospects, kept, "tgt_custkey", "src_custkey",
-            vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-            k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-            candidates=cand, dim=_FD_DIM, broadcast_sides=True,
-        )
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    return _delete_e2e(_PROJ, spark, sf_dir)
 
 
 @register(
     "projection_window_insert_e2e",
-    sql=f"""
-    WITH {_fd_firmo_sql()},
-    {_fd_win_cte()},
-    fscored AS (
-        SELECT fcand.tgt AS tgt_custkey, fcand.src AS src_custkey,
-               {_fd_hybrid_score()} AS score
-        FROM fcand JOIN fnormed l ON fcand.tgt = l.c_custkey
-                   JOIN fnormed r ON fcand.src = r.c_custkey),
-    franked AS (
-        SELECT tgt_custkey, src_custkey, score,
-               row_number() OVER (PARTITION BY tgt_custkey
-                                  ORDER BY score DESC, src_custkey) AS rn
-        FROM fscored WHERE score >= 0.0)
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM franked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_fd_oracle(),
 )
 def projection_window_insert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INSERT lifecycle on the 9-D serving artifact, under the full
@@ -3903,58 +3555,12 @@ def projection_window_insert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact.  The oracle is the full-corpus projection-window replay,
     so a hash-green row proves insert ≡ rebuild-over-the-grown-corpus
     for the projection family end to end."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-        projection_window_index,
-        projection_window_probe,
-        rank_window_insert,
-    )
-
-    prospects, clients = _fd_sides(spark, sf_dir)
-    old = clients.filter(F.col("src_custkey") % 6 != 5)
-    arrivals = clients.filter(F.col("src_custkey") % 6 == 5)
-    index = projection_window_index(
-        old, "src_custkey", _FD_DIRECTION, window=_FD_WINDOW
-    )
-    grown = rank_window_insert(
-        index, arrivals, "src_custkey"
-    ).localCheckpoint()
-    cand = projection_window_probe(
-        prospects, grown, "tgt_custkey", "src_custkey"
-    )
-    return (
-        hybrid_topk_pruned(
-            prospects, clients, "tgt_custkey", "src_custkey",
-            vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-            k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-            candidates=cand, dim=_FD_DIM, broadcast_sides=True,
-        )
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
+    return _insert_e2e(_PROJ, spark, sf_dir)
 
 
 @register(
     "streaming_projection_serving_replay",
-    sql=f"""
-    WITH {_fd_firmo_sql()},
-    {_fd_win_cte()},
-    fscored AS (
-        SELECT fcand.tgt AS tgt_custkey, fcand.src AS src_custkey,
-               {_fd_hybrid_score()} AS score
-        FROM fcand JOIN fnormed l ON fcand.tgt = l.c_custkey
-                   JOIN fnormed r ON fcand.src = r.c_custkey),
-    franked AS (
-        SELECT tgt_custkey, src_custkey, score,
-               row_number() OVER (PARTITION BY tgt_custkey
-                                  ORDER BY score DESC, src_custkey) AS rn
-        FROM fscored WHERE score >= 0.0)
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM franked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
+    sql=_fd_oracle(),
 )
 def streaming_projection_serving_replay(
     spark: SparkSession, sf_dir: str
@@ -3972,55 +3578,6 @@ def streaming_projection_serving_replay(
     and the probe is per-row independent, so the unioned per-batch
     top-15 IS the batch path's — the same window-512 CTE replays the
     whole loop, pinning the streaming execution end to end."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        projection_window_index,
-    )
-    from prod_recommendation_pyspark_spark.streaming.joins import (
-        streaming_peer_serving,
-    )
-
-    prospects, clients = _fd_sides(spark, sf_dir)
-    index = projection_window_index(
-        clients, "src_custkey", _FD_DIRECTION, window=_FD_WINDOW
-    ).localCheckpoint()
-    base = tempfile.mkdtemp(prefix="projection_serving_replay_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    landing, out = f"{base}/landing", f"{base}/out"
-    for i in range(3):  # three part files -> three micro-batches
-        prospects.filter(F.col("tgt_custkey") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-    stream = (
-        spark.readStream.schema(prospects.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-
-    def emit(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("append").parquet(out)
-
-    q = streaming_peer_serving(
-        stream, index, clients, "tgt_custkey", "src_custkey", emit,
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    shutil.rmtree(landing, ignore_errors=True)
-    if not os.path.isdir(out):  # no batch emitted (empty prospect set)
-        return spark.createDataFrame(
-            [], "tgt_custkey long, src_custkey long, score double"
-        )
-    return (
-        spark.read.parquet(out)
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
+    return _serving_replay(
+        _PROJ, spark, sf_dir, "projection_serving_replay_"
     )

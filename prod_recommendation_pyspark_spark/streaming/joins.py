@@ -297,12 +297,13 @@ def streaming_peer_serving(
 
     Scale: each micro-batch touches a broadcast array of block starts
     (|index|/window rows) plus 3 window blocks per (prospect, arm) —
-    index-lookup I/O, independent of corpus size; the re-rank's dim
-    guards cost one limit-1 job per side per batch (the window is
-    resolved ONCE, not per batch; off a published read the guards sit
-    inside the plan and cost no job).  State: NONE (no streaming
-    aggregation, no watermark) — the index and client attributes are static sides,
-    re-read (or cached) per batch.  Returns the started
+    index-lookup I/O, independent of corpus size; the re-rank checks
+    vector dims inside each batch's plan (``_dim_guarded``), so no
+    guard job runs per batch, and the window is resolved ONCE, not per
+    batch (off a published read, from its manifest with no job).
+    State: NONE (no streaming aggregation, no watermark) — the index
+    and client attributes are static sides, re-read (or cached) per
+    batch.  Returns the started
     ``StreamingQuery``.
 
     ``checkpoint_dir`` makes the loop RESTARTABLE: the file-source
@@ -373,7 +374,6 @@ def _serving_fn(
     and vector dims are checked inside each batch's plan, so a
     micro-batch launches no guard job at all."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        CODE_LEN,
         _resolve_window_meta,
         _serve_probed,
     )
@@ -385,7 +385,7 @@ def _serving_fn(
     def serve(batch: DataFrame) -> DataFrame:
         return _serve_probed(
             batch, index, clients, left_id, right_id, w, direction,
-            CODE_LEN, tombstones,
+            tombstones,
             vec_col=vec_col, naics_col=naics_col,
             lat_col=lat_col, lon_col=lon_col,
             k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,

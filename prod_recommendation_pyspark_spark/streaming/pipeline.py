@@ -36,9 +36,13 @@ file source for Kafka changes only ``read_events_stream``.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from prod_recommendation_pyspark_spark.streaming.adapter import (
     read_events_stream,
@@ -67,6 +71,43 @@ def stage_landing_dir(src_path: str, landing_dir: str) -> str:
         if not os.path.exists(dst):
             os.symlink(os.path.abspath(s), dst)
     return landing_dir
+
+
+def replay_stream(frame: DataFrame, key_col: str, start, prefix: str) -> str:
+    """Replay a static ``frame`` through a real file stream — the
+    harness of the registered streaming replays.  ``frame`` is staged
+    as three parquet files by ``key_col % 3`` in a landing dir and read
+    back with ``readStream`` at ``maxFilesPerTrigger=1``, so each class
+    arrives as its own micro-batch; ``start(stream, base)`` starts the
+    caller's loop, which writes its sink to ``{base}/out``.  The loop
+    is drained (``processAllAvailable``) and stopped even when that
+    raises, the landing dir is dropped, and the sink path is returned.
+
+    ``base`` is a ``tempfile.mkdtemp(prefix=prefix)`` dir removed at
+    interpreter exit: the sink must outlive the call, because the
+    caller's read-back is lazy, and the loop may keep a checkpoint or a
+    static artifact there too.  A loop that emits no batch leaves no
+    sink dir, so the caller handles ``not os.path.isdir(out)``."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    landing = f"{base}/landing"
+    for i in range(3):  # three part files -> three micro-batches
+        frame.filter(F.col(key_col) % 3 == i).coalesce(1).write.mode(
+            "append"
+        ).parquet(landing)
+    stream = (
+        frame.sparkSession.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
+    )
+    q = start(stream, base)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    # only the (stopped) stream read the landing copies
+    shutil.rmtree(landing, ignore_errors=True)
+    return f"{base}/out"
 
 
 def run_events_hourly_pipeline(

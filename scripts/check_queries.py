@@ -8,9 +8,10 @@ With no names: checks nothing (use driver_mimic.py for the full sweep).
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession

@@ -63,6 +63,32 @@ def test_renumbering_keeps_which_id_is_which():
     assert capture_plans.normalize(a) != capture_plans.normalize(swapped)
 
 
+def test_temp_dirs_renumber_by_first_appearance():
+    """The replay queries read sinks under ``tempfile.mkdtemp`` dirs,
+    whose random tails differ per run; which dir is which still counts."""
+    line = "Location: InMemoryFileIndex [file:/tmp/peer_serving_replay_{}/out]"
+    a = "\n".join([line.format("k2j_9x4q"), line.format("a8mmq01z")])
+    b = "\n".join([line.format("0qz1lp_7"), line.format("zz93kd0a")])
+    same_dir = "\n".join([line.format("0qz1lp_7"), line.format("0qz1lp_7")])
+    assert capture_plans.normalize(a) == capture_plans.normalize(b) == [
+        "Location: InMemoryFileIndex [file:/tmp/peer_serving_replay_n0/out]",
+        "Location: InMemoryFileIndex [file:/tmp/peer_serving_replay_n1/out]",
+    ]
+    assert capture_plans.normalize(a) != capture_plans.normalize(same_dir)
+    fixed = "Location: InMemoryFileIndex [file:/tmp/spark-local/x]"
+    assert capture_plans.normalize(fixed) == [fixed]
+
+
+def test_rdd_call_sites_are_dropped():
+    """A checkpointed RDD's call site names a checkout path and line,
+    or whichever overlapped driver thread made it; the RDD id stays."""
+    a = "Arguments: [x#1], MapPartitionsRDD[216] at collect at /a/hybrid.py:1080, ExistingRDD"
+    b = "Arguments: [x#4], MapPartitionsRDD[221] at localCheckpoint at <unknown>:0, ExistingRDD"
+    assert capture_plans.normalize(a) == capture_plans.normalize(b) == [
+        "Arguments: [x#n0], MapPartitionsRDD[n0], ExistingRDD"
+    ]
+
+
 def _run_diff(*args: str) -> subprocess.CompletedProcess:
     return subprocess.run(
         [sys.executable, SCRIPT, "diff", *args],
@@ -102,3 +128,21 @@ def test_diff_refuses_failed_captures(tmp_path):
 def test_diff_refuses_an_empty_comparison(tmp_path):
     out = _run_diff(str(tmp_path), "before", str(tmp_path), "after")
     assert out.returncode == 2 and "no plans" in out.stdout
+
+
+def test_diff_compares_oracle_sql(tmp_path):
+    """Oracle files are compared with whitespace collapsed; a changed
+    oracle fails the diff even when every plan is identical."""
+    plan = os.path.join(R18, "peer_search_rank_window_topk_before.txt")
+    for sfx in ("before", "after", "changed"):
+        shutil.copy(plan, tmp_path / f"q_{sfx}.txt")
+    (tmp_path / "q_before.sql").write_text("SELECT a,\n       b\n  FROM t\n")
+    (tmp_path / "q_after.sql").write_text("  SELECT a, b FROM t")
+    (tmp_path / "q_changed.sql").write_text("SELECT a, b FROM t WHERE a > 0")
+    same = _run_diff(str(tmp_path), "before", str(tmp_path), "after")
+    assert same.returncode == 0, same.stdout
+    assert "0 of 1 oracles differ" in same.stdout
+    changed = _run_diff(str(tmp_path), "before", str(tmp_path), "changed")
+    assert changed.returncode == 1
+    assert "0 of 1 plans differ" in changed.stdout
+    assert "q: oracle" in changed.stdout

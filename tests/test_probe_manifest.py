@@ -242,16 +242,12 @@ def _edge_prospects(spark, family, pros, clis, index, window):
 
 
 @pytest.mark.parametrize("family", ["rank", "projection"])
-@pytest.mark.parametrize(
-    "window, broadcast_probes", [(4, True), (8, False), (128, True)]
-)
-def test_probe_fetch_matches_batch_candidates(
-    spark, family, window, broadcast_probes
-):
+@pytest.mark.parametrize("window", [4, 128])
+def test_probe_fetch_matches_batch_candidates(spark, family, window):
     """Probe ≡ batch candidates at the build window, with and without
     tombstones, including a prospect before every client, a prospect
-    tying a block start on (key, id), windows wider than every arm
-    (128 here) and the shuffle-join fetch (``broadcast_probes=False``)."""
+    tying a block start on (key, id) and windows wider than every arm
+    (128 here)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
         projection_window_candidates,
         projection_window_probe,
@@ -271,12 +267,10 @@ def test_probe_fetch_matches_batch_candidates(
         )
         probe = projection_window_probe
     want = _pairs(batch)
-    got = _pairs(probe(pros, index, "tgt", "src",
-                       broadcast_probes=broadcast_probes))
+    got = _pairs(probe(pros, index, "tgt", "src"))
     assert got == want
     assert {p for p in got if p[0] == 1000}, "edge prospect fetched nothing"
     dead = {r["src"] for r in tombs.collect()}
-    tombed = _pairs(probe(pros, index, "tgt", "src", tombstones=tombs,
-                          broadcast_probes=broadcast_probes))
+    tombed = _pairs(probe(pros, index, "tgt", "src", tombstones=tombs))
     assert tombed == {p for p in want if p[1] not in dead}
     assert len(tombed) < len(want)

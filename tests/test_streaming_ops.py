@@ -3,6 +3,7 @@ static directory must match the batch computation on the same rows."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -18,6 +19,7 @@ from prod_recommendation_pyspark_spark.streaming.joins import (
     streaming_click_attribution,
     streaming_dedup_events,
 )
+from prod_recommendation_pyspark_spark.streaming.pipeline import replay_stream
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -1004,3 +1006,45 @@ def test_streaming_peer_serving_hot_swaps_published_version(spark):
     assert got1 == want(b1, clis) and len(got1) > 0    # served from v2
     # and the swap mattered: v1 would have answered batch 1 differently
     assert got1 != want(b1, stale)
+
+
+def _collecting_loop(seen: dict):
+    """``replay_stream`` start callback: a foreachBatch loop that
+    records each micro-batch's rows and appends the non-empty ones to
+    the sink, as the registered replays' loops do."""
+
+    def start(stream, base):
+        def emit(df, batch_id):
+            seen[batch_id] = [tuple(r) for r in df.collect()]
+            if seen[batch_id]:
+                df.write.mode("append").parquet(f"{base}/out")
+
+        return stream.writeStream.foreachBatch(emit).start()
+
+    return start
+
+
+def test_replay_stream_empty_frame_emits_nothing(spark):
+    """An empty frame replays to no rows and no sink dir — the branch
+    every replay query answers with its typed empty frame."""
+    seen: dict = {}
+    frame = spark.createDataFrame([], "id long, v string")
+    out = replay_stream(frame, "id", _collecting_loop(seen), "replay_empty_")
+    assert not any(seen.values())
+    assert not os.path.isdir(out)
+    assert not os.path.isdir(os.path.join(os.path.dirname(out), "landing"))
+
+
+def test_replay_stream_replays_each_class_as_one_batch(spark):
+    """A frame of three ``id % 3`` classes replays to exactly its own
+    rows, one class per micro-batch, and the landing copies are gone."""
+    seen: dict = {}
+    frame = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(30)], "id long, v string"
+    )
+    out = replay_stream(frame, "id", _collecting_loop(seen), "replay_three_")
+    want = sorted(tuple(r) for r in frame.collect())
+    assert sorted(tuple(r) for r in spark.read.parquet(out).collect()) == want
+    classes = [{r[0] % 3 for r in rows} for rows in seen.values() if rows]
+    assert sorted(classes, key=min) == [{0}, {1}, {2}]
+    assert not os.path.isdir(os.path.join(os.path.dirname(out), "landing"))
