@@ -22,7 +22,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from prod_recommendation_pyspark_spark.operators.relational import dedup_first_by_key
+from prod_recommendation_pyspark_spark.operators.relational import (
+    dedup_first_by_key,
+    drop_tombstoned,
+)
 
 
 def normalize_text(col: Column) -> Column:
@@ -77,56 +80,6 @@ def minhash_signature(hashed_shingles: Column, n_hashes: int = 64) -> Column:
             F.array_min(F.transform(hashed_shingles, hash_fn(i)))
             for i in range(n_hashes)
         ]
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    hashed_col: str,
-    n_hashes: int = 64,
-    sig_col: str = "__sig",
-) -> DataFrame:
-    """MinHash signatures as a DataFrame op: ``(id, array<bigint>)``
-    with the identical hash family/values as ``minhash_signature``,
-    but computed as explode → ``n_hashes`` codegen'd ``min(xxhash64(h,
-    i))`` aggregates instead of ``n_hashes`` interpreted higher-order
-    ``transform``/``array_min`` passes.  HOF expressions never enter
-    whole-stage codegen — the column-expression form runs the 64-pass
-    loop in the interpreter per row, which profiled 3-5× slower (and
-    JIT-warmup-sensitive) at sf0.1.  Here every hash+min runs inside
-    one codegen'd HashAggregate; partial (map-side) aggregation
-    collapses each doc's shingles to one 64-long row BEFORE the
-    shuffle, so the exchange carries ~|docs| rows regardless of
-    shingle fan-out.  Docs whose shingle array is empty vanish
-    (explode) — ``word_shingles`` never returns an empty array, and
-    callers with other upstreams should explode_outer themselves if
-    they need null signatures."""
-    exploded = df.select(F.col(id_col), F.explode(hashed_col).alias("__h"))
-    return _sig_from_exploded(exploded, id_col, "__h", n_hashes, sig_col)
-
-
-def _sig_from_exploded(
-    exploded: DataFrame,
-    id_col: str,
-    hash_col: str,
-    n_hashes: int,
-    sig_col: str,
-) -> DataFrame:
-    """Signature aggregation shared by ``minhash_signatures`` and
-    ``lsh_candidate_pairs``: long-form ``(id, hashed-shingle)`` rows →
-    ``n_hashes`` codegen'd ``min(xxhash64(h, i))`` aggregates → one
-    ``array<bigint>`` column.  One implementation so the two call
-    sites cannot drift."""
-    mins = exploded.groupBy(id_col).agg(
-        *[
-            F.min(F.xxhash64(F.col(hash_col), F.lit(i))).alias(f"__m{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    return mins.select(
-        id_col,
-        F.array(*[F.col(f"__m{i}") for i in range(n_hashes)]).alias(sig_col),
     )
 
 
@@ -199,13 +152,26 @@ def minhash_band_keys(
             F.concat_ws(" ", F.slice("__w", F.col("__p") + 1, shingle_words))
         ).alias("__h"),
     )
-    sig = _sig_from_exploded(shingle_hashed, id_col, "__h", n_hashes, "__sig")
+    # the signature as n_hashes codegen'd min(xxhash64(h, i))
+    # aggregates, not n_hashes interpreted transform/array_min passes
+    # (HOF expressions never enter whole-stage codegen: the column form
+    # profiled 3-5x slower at sf0.1); partial aggregation collapses each
+    # doc's shingles to one row before the shuffle, so the exchange
+    # carries ~|docs| rows regardless of shingle fan-out
+    mins = shingle_hashed.groupBy(id_col).agg(
+        *[
+            F.min(F.xxhash64(F.col("__h"), F.lit(i))).alias(f"__m{i}")
+            for i in range(n_hashes)
+        ]
+    )
+    sig = mins.select(
+        id_col,
+        F.array(*[F.col(f"__m{i}") for i in range(n_hashes)]).alias("__sig"),
+    )
     banded = sig.select(
         id_col, F.explode(band_key_structs("__sig", bands, rows_per_band)).alias("bk")
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     if max_bucket is not None:
-        from pyspark.sql import Window
-
         w = Window.partitionBy("band", "key")
         banded = (
             banded.withColumn("__n", F.count(F.lit(1)).over(w))
@@ -278,38 +244,17 @@ def incremental_lsh_candidates(
     tombstone set before banding, so a deleted document can never
     pair with an arriving batch.  Band keys are per-document, so the
     tombstone probe is EXACTLY the probe of the compacted store
-    (``dedup_store_compact``) and of a store rebuilt without the
+    (``drop_tombstoned``) and of a store rebuilt without the
     deleted docs (rebuild-equivalence pytest-pinned;
     ``dedup_index_delete_e2e`` pins it against the
     rebuild-minus-deleted SQL replay)."""
-    if tombstones is not None:
-        corpus_keys = corpus_keys.join(
-            F.broadcast(tombstones.select(id_col)), id_col, "left_anti"
-        )
+    corpus_keys = drop_tombstoned(corpus_keys, tombstones, id_col)
     new_keys = minhash_band_keys(
         batch, id_col, text_col, shingle_words, n_hashes, bands, max_bucket
     )
     a = corpus_keys.select(F.col(id_col).alias("id_a"), "band", "key")
     b = new_keys.select(F.col(id_col).alias("id_b"), "band", "key")
     return a.join(b, on=["band", "key"]).select("id_a", "id_b").distinct()
-
-
-def dedup_store_compact(
-    corpus_keys: DataFrame, tombstones: DataFrame, id_col: str
-) -> DataFrame:
-    """COMPACT a persisted band-key store by dropping tombstoned
-    documents' rows — rewrite the result with the same ``(band, key)``
-    bucketing (``write_bucketed``) and the probe-time anti-join
-    becomes unnecessary.  Band keys are a pure per-document function
-    of the text, so the compacted store is EXACTLY
-    ``minhash_band_keys(corpus minus deleted)`` — the anti-join IS the
-    rebuild, no re-hashing needed (rebuild-equivalence
-    pytest-pinned).  One scan of the store against a broadcast
-    tombstone set; at 100 TB that is the cheap path vs re-shingling
-    and re-hashing the surviving corpus."""
-    return corpus_keys.join(
-        F.broadcast(tombstones.select(id_col)), id_col, "left_anti"
-    )
 
 
 def ngram_jaccard_pairs(

@@ -48,7 +48,10 @@ from prod_recommendation_pyspark_spark.operators.naics import (
     CODE_LEN,
     naics_hops_score,
 )
-from prod_recommendation_pyspark_spark.operators.relational import windowed_topk
+from prod_recommendation_pyspark_spark.operators.relational import (
+    drop_tombstoned,
+    windowed_topk,
+)
 from prod_recommendation_pyspark_spark.operators.similarity import (
     DEFAULT_MAX_BLOCK_BYTES,
     _chunks_for,
@@ -1676,9 +1679,9 @@ def _projection_probe_resolved(
     if tombstones is not None:
         # re-select: a named-column join hoists the key to column 0,
         # which would silently swap (left_id, right_id) positionally
-        fetched = fetched.join(
-            F.broadcast(tombstones.select(right_id)), right_id, "left_anti"
-        ).select(left_id, right_id)
+        fetched = drop_tombstoned(fetched, tombstones, right_id).select(
+            left_id, right_id
+        )
     return fetched
 
 
@@ -2054,13 +2057,7 @@ def serve_batch(
             batch, index, clients, left_id, right_id, window, direction,
             tombstones, **scoring,
         )
-    live = (
-        clients.join(
-            F.broadcast(tombstones.select(right_id)), right_id, "left_anti"
-        )
-        if tombstones is not None
-        else clients
-    )
+    live = drop_tombstoned(clients, tombstones, right_id)
     return hybrid_topk(batch, live, left_id, right_id, **scoring)
 
 

@@ -350,6 +350,41 @@ def merge_upsert(
     return kept.unionByName(upserts)
 
 
+def drop_tombstoned(
+    df: DataFrame, tombstones: DataFrame | None, id_col: str
+) -> DataFrame:
+    """The tombstone policy of every serving artifact: drop the rows of
+    ``df`` whose ``id_col`` appears in ``tombstones`` (a small frame
+    carrying deleted ids in an ``id_col`` column), by an anti-join
+    against the broadcast tombstone set.  ``tombstones=None`` returns
+    ``df`` unchanged.
+
+    Applied at probe time it deletes documents from serving BETWEEN
+    nightly rebuilds; applied to a whole artifact it is the COMPACTION
+    job — rewrite the result with the artifact's layout and the
+    probe-time anti-join becomes unnecessary.  For the two artifacts
+    whose rows are a pure per-document function, the anti-join IS the
+    rebuild, with no re-assignment or re-hashing pass
+    (rebuild-equivalence pytest-pinned,
+    ``tests/test_artifact_lifecycle.py``):
+
+    - an ``ivf_index`` artifact under frozen centroids: list assignment
+      is per-row, so the compacted index is exactly ``ivf_index(corpus
+      minus deleted, same centroids)``.  Compaction serves the intraday
+      takedown; the nightly rebuild (which also re-derives centroids
+      via ``ivf_auto_centroids``) remains the steady state.
+    - a ``minhash_band_keys`` store: band keys are per-document, so the
+      compacted store is exactly ``minhash_band_keys(corpus minus
+      deleted)``.
+
+    Cost: one scan of ``df`` against a broadcast takedown-sized set —
+    at 100 TB the cheap path vs re-assigning or re-hashing the
+    surviving corpus."""
+    if tombstones is None:
+        return df
+    return df.join(F.broadcast(tombstones.select(id_col)), id_col, "left_anti")
+
+
 def table_diff(
     old: DataFrame,
     new: DataFrame,

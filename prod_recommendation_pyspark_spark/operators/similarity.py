@@ -42,7 +42,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from prod_recommendation_pyspark_spark.operators.relational import windowed_topk
+from prod_recommendation_pyspark_spark.operators.relational import (
+    drop_tombstoned,
+    windowed_topk,
+)
 
 
 def l2_normalize(df: DataFrame, vec_col: str, out_col: str | None = None) -> DataFrame:
@@ -786,6 +789,19 @@ def ann_lsh_topk(
 # ---------------------------------------------------------------------------
 
 
+def _hof_cosine(a: str, b: str) -> Column:
+    """``dot(a, b) / (|a|·|b|)`` of two ``array<double>`` columns as
+    left-folded higher-order expressions — the IVF assignment and
+    re-rank score that the SQL twins replay as
+    ``list_cosine_similarity``."""
+    an = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+    bn = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+    return dot / (an * bn)
+
+
 def ivf_assign(
     df: DataFrame,
     id_col: str,
@@ -861,14 +877,7 @@ def ivf_assign(
     if use_kernel:
         csim = seq_cosine_kernel("__v", "__cvec")
     else:
-        vn = F.sqrt(F.aggregate("__v", F.lit(0.0), lambda a, x: a + x * x))
-        cn = F.sqrt(F.aggregate("__cvec", F.lit(0.0), lambda a, x: a + x * x))
-        dot = F.aggregate(
-            F.zip_with("__v", "__cvec", lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        csim = dot / (vn * cn)
+        csim = _hof_cosine("__v", "__cvec")
     scored = v.crossJoin(F.broadcast(c)).select(
         id_col, list_col, csim.alias("__csim")
     )
@@ -922,14 +931,7 @@ def ann_ivf_topk(
     if use_kernel:
         score = seq_cosine_kernel("__qvec", "__cvec")
     else:
-        qn = F.sqrt(F.aggregate("__qvec", F.lit(0.0), lambda a, x: a + x * x))
-        cn = F.sqrt(F.aggregate("__cvec", F.lit(0.0), lambda a, x: a + x * x))
-        dot = F.aggregate(
-            F.zip_with("__qvec", "__cvec", lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        score = dot / (qn * cn)
+        score = _hof_cosine("__qvec", "__cvec")
     scored = (
         pairs.join(qv, "__qid")
         .join(cv, "__cid")
@@ -1051,15 +1053,12 @@ def ivf_probe(
     tombstone set before scoring, so a deleted vector can never
     surface as a neighbor.  Because assignment is per-row under
     frozen centroids, the tombstone probe is EXACTLY the probe of the
-    compacted artifact (``ivf_compact``) and of a frozen-centroid
+    compacted artifact (``drop_tombstoned``) and of a frozen-centroid
     rebuild without the deleted rows (equality pytest-pinned;
     ``ann_ivf_delete_e2e`` pins it against the rebuild-minus-deleted
     SQL replay).  Cost: one broadcast anti-join on the fetched lists
     — tombstone sets are takedown-sized, not corpus-sized."""
-    if tombstones is not None:
-        index = index.join(
-            F.broadcast(tombstones.select(corpus_id)), corpus_id, "left_anti"
-        )
+    index = drop_tombstoned(index, tombstones, corpus_id)
     q_assign = ivf_assign(
         queries, query_id, vec_col, centroids, n_probe=n_probe,
         list_col=list_col, use_kernel=use_kernel,
@@ -1081,14 +1080,7 @@ def ivf_probe(
     if use_kernel:
         score = seq_cosine_kernel("__qvec", "__cvec")
     else:
-        qn = F.sqrt(F.aggregate("__qvec", F.lit(0.0), lambda a, x: a + x * x))
-        cn = F.sqrt(F.aggregate("__cvec", F.lit(0.0), lambda a, x: a + x * x))
-        dot = F.aggregate(
-            F.zip_with("__qvec", "__cvec", lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        score = dot / (qn * cn)
+        score = _hof_cosine("__qvec", "__cvec")
     scored = (
         hits.select("__qid", "__cid", "__cvec")
         .join(F.broadcast(qv), "__qid")
@@ -1100,29 +1092,6 @@ def ivf_probe(
     )
     return windowed_topk(
         scored, query_id, [F.col("score").desc(), F.col(corpus_id)], k
-    )
-
-
-def ivf_compact(
-    index: DataFrame, tombstones: DataFrame, corpus_id: str
-) -> DataFrame:
-    """COMPACT an ``ivf_index`` artifact by dropping tombstoned rows —
-    the periodic job that turns accumulated probe-time anti-joins back
-    into a clean artifact (rewrite the result with the same
-    ``partitionBy(list_col)`` layout).  Under frozen centroids the
-    list assignment is a pure per-row function of the vector, so the
-    compacted index is EXACTLY ``ivf_index(corpus minus deleted,
-    same centroids)`` — no re-assignment pass needed, just the
-    anti-join (rebuild-equivalence pytest-pinned).  Corpus cost: one
-    scan of the index against a broadcast tombstone set; only
-    partitions holding deleted rows change content, so a
-    layout-preserving rewrite touches those lists alone.  Compare
-    ``ivf_index`` (full nightly rebuild — also re-derives centroids
-    via ``ivf_auto_centroids`` as the corpus drifts): compaction
-    serves the intraday takedown; the nightly rebuild remains the
-    steady state."""
-    return index.join(
-        F.broadcast(tombstones.select(corpus_id)), corpus_id, "left_anti"
     )
 
 
@@ -1152,7 +1121,7 @@ def ivf_compact_rewrite(
     the Hadoop FileSystem API (portable across file://, hdfs://,
     s3a://).  Returns the number of affected lists.
 
-    The result equals a full ``ivf_compact`` rewrite, which equals a
+    The result equals a full ``drop_tombstoned`` rewrite, which equals a
     frozen-centroid rebuild without the deleted rows (both
     pytest-pinned; ``ann_ivf_compact_rewrite_e2e`` pins the reloaded
     artifact under the rebuild-minus-deleted value oracle).
@@ -1215,38 +1184,6 @@ def ivf_compact_rewrite(
         fs = p.getFileSystem(hconf)
         fs.delete(p, True)
     return len(affected)
-
-
-def cosine_topk_auto(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    vec_col: str = "vec",
-    k: int = 10,
-    threshold: float | None = None,
-    exclude_self: bool = False,
-    max_block_bytes: int = 256 * 1024 * 1024,
-    block_mod_col: str | None = None,
-) -> DataFrame:
-    """Back-compat alias: auto block sizing is now ``cosine_topk``'s
-    default (``n_blocks=None``) — see ``_auto_n_blocks``.  Costs one
-    tiny aggregate on the right side (count + dim) before planning; the
-    result is exact for any block count (per-block exact top-K, then
-    one windowed re-rank)."""
-    return cosine_topk(
-        left,
-        right,
-        left_id,
-        right_id,
-        vec_col,
-        k=k,
-        threshold=threshold,
-        exclude_self=exclude_self,
-        n_blocks=None,
-        block_mod_col=block_mod_col,
-        max_block_bytes=max_block_bytes,
-    )
 
 
 def sign_lsh_self_pairs(

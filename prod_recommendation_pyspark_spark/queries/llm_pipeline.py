@@ -27,6 +27,11 @@ from prod_recommendation_pyspark_spark.operators.multimodal import (
 from prod_recommendation_pyspark_spark.operators.text import text_stats
 from prod_recommendation_pyspark_spark.queries.registry import register
 from prod_recommendation_pyspark_spark.sources.catalog import Catalog
+from prod_recommendation_pyspark_spark.sources.writers import write_bucketed
+from prod_recommendation_pyspark_spark.streaming.pipeline import (
+    replay_stream,
+    scratch_dir,
+)
 
 
 # Canonical single-split-read fan-out (no-op when the input already
@@ -37,20 +42,21 @@ from prod_recommendation_pyspark_spark.operators.similarity import (  # noqa: E4
 
 # Word-trigram Jaccard oracle: shingle i = words[i..i+2]; DuckDB list
 # slicing is 1-based inclusive so w[i:i+2] mirrors Spark slice(w,i,3).
-_SHINGLES_SQL = """
+_SH_SIZES_SQL = """
     toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents),
     sh AS (SELECT DISTINCT doc_id,
                   unnest(list_transform(range(1, greatest(len(w) - 1, 2)),
                          i -> array_to_string(w[i:i+2], ' '))) AS s
            FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)"""
+
+_SHINGLES_SQL = _SH_SIZES_SQL + """,
     common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
                GROUP BY a.doc_id, b.doc_id)
 """
 
-_JACCARD_SQL = f"""
-    WITH {_SHINGLES_SQL}
+_JACCARD_TAIL_SQL = """
     SELECT id_a, id_b,
            round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
     FROM common
@@ -59,6 +65,66 @@ _JACCARD_SQL = f"""
     WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
     ORDER BY id_a, id_b
     """
+
+_JACCARD_SQL = f"""
+    WITH {_SHINGLES_SQL}{_JACCARD_TAIL_SQL}"""
+
+
+def _cross_jaccard_sql(pairs: str) -> str:
+    """Brute-force trigram Jaccard ≥ 0.8 over the ``(a, b)`` shingle
+    pairs that satisfy ``pairs`` — the oracle of the dedup-store
+    queries, whose candidates cross a store side with an arrival side
+    instead of self-pairing ``a.doc_id < b.doc_id``."""
+    return f"""
+    WITH {_SH_SIZES_SQL},
+    common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
+               FROM sh a JOIN sh b ON a.s = b.s
+               WHERE {pairs}
+               GROUP BY a.doc_id, b.doc_id){_JACCARD_TAIL_SQL}"""
+
+
+#: Store = the corpus (``doc_id % 5 != 4``), arrivals = today's batch.
+_STORE_X_BATCH = "a.doc_id % 5 <> 4 AND b.doc_id % 5 = 4"
+
+
+def _verified(
+    docs: DataFrame, cands: DataFrame, a: str = "id_a", b: str = "id_b",
+    distinct: bool = False,
+) -> DataFrame:
+    """The dedup verify tail: candidate pairs ``(a, b)`` as long
+    ``(id_a, id_b)`` (``distinct`` for streamed candidates, which
+    arrive once per band collision), exact trigram Jaccard ≥ 0.8 on
+    those pairs only, rounded and ordered like the oracles."""
+    pairs = cands.select(
+        F.col(a).cast("long").alias("id_a"),
+        F.col(b).cast("long").alias("id_b"),
+    )
+    if distinct:
+        pairs = pairs.distinct()
+    verified = ngram_jaccard_pairs(
+        docs, "doc_id", "text", shingle_words=3, threshold=0.8, candidates=pairs
+    )
+    return verified.select(
+        "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
+    ).orderBy("id_a", "id_b")
+
+
+def _band_store(
+    spark: SparkSession, table: str, base: str, *slices: DataFrame
+) -> DataFrame:
+    """The persisted band-key store: each slice's ``minhash_band_keys``
+    written to the bucketed table ``table`` (16 buckets on ``(band,
+    key)``, EXTERNAL at ``{base}/store`` — a managed table would collide
+    with a previous run's warehouse leftovers in a fresh session), the
+    first slice overwriting and the rest appended, then read back
+    through the catalog."""
+    for i, docs in enumerate(slices):
+        write_bucketed(
+            minhash_band_keys(docs, "doc_id", "text"), table, 16,
+            ["band", "key"], mode="append" if i else "overwrite",
+            path=f"{base}/store",
+        )
+    return spark.table(table)
 
 
 @register(
@@ -96,43 +162,12 @@ def minhash_lsh_dedup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     missed w.p. ~2e-4, and this corpus's near-dups are ≥0.9 (miss
     ~1e-7), so LSH+verify equals brute force deterministically here."""
     docs = _spread(Catalog(spark, sf_dir).table("documents"))
-    cands = lsh_candidate_pairs(
+    return _verified(docs, lsh_candidate_pairs(
         docs, "doc_id", "text", shingle_words=3, n_hashes=64, bands=16
-    ).select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-    )
-    verified = ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_words=3, threshold=0.8, candidates=cands
-    )
-    return verified.select(
-        "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
-    ).orderBy("id_a", "id_b")
+    ))
 
 
-@register(
-    "incremental_dedup_documents",
-    sql="""
-    WITH
-    toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents),
-    sh AS (SELECT DISTINCT doc_id,
-                  unnest(list_transform(range(1, greatest(len(w) - 1, 2)),
-                         i -> array_to_string(w[i:i+2], ' '))) AS s
-           FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-               FROM sh a JOIN sh b ON a.s = b.s
-               WHERE a.doc_id % 5 <> 4 AND b.doc_id % 5 = 4
-               GROUP BY a.doc_id, b.doc_id)
-    SELECT id_a, id_b,
-           round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-    FROM common
-    JOIN sizes sa ON common.id_a = sa.doc_id
-    JOIN sizes sb ON common.id_b = sb.doc_id
-    WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
-    ORDER BY id_a, id_b
-    """,
-)
+@register("incremental_dedup_documents", sql=_cross_jaccard_sql(_STORE_X_BATCH))
 def incremental_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup dedup — the daily job of a continuously
     ingesting corpus: dedup a NEW batch (doc_id % 5 == 4 stands in for
@@ -148,41 +183,12 @@ def incremental_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") % 5 != 4)
     batch = docs.filter(F.col("doc_id") % 5 == 4)
     store = minhash_band_keys(corpus, "doc_id", "text")
-    cands = incremental_lsh_candidates(store, batch, "doc_id", "text").select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
+    return _verified(
+        docs, incremental_lsh_candidates(store, batch, "doc_id", "text")
     )
-    verified = ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_words=3, threshold=0.8, candidates=cands
-    )
-    return verified.select(
-        "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
-    ).orderBy("id_a", "id_b")
 
 
-@register(
-    "dedup_index_nightly_e2e",
-    sql="""
-    WITH
-    toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents),
-    sh AS (SELECT DISTINCT doc_id,
-                  unnest(list_transform(range(1, greatest(len(w) - 1, 2)),
-                         i -> array_to_string(w[i:i+2], ' '))) AS s
-           FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-               FROM sh a JOIN sh b ON a.s = b.s
-               WHERE a.doc_id % 5 <> 4 AND b.doc_id % 5 = 4
-               GROUP BY a.doc_id, b.doc_id)
-    SELECT id_a, id_b,
-           round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-    FROM common
-    JOIN sizes sa ON common.id_a = sa.doc_id
-    JOIN sizes sb ON common.id_b = sb.doc_id
-    WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
-    ORDER BY id_a, id_b
-    """,
-)
+@register("dedup_index_nightly_e2e", sql=_cross_jaccard_sql(_STORE_X_BATCH))
 def dedup_index_nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup NIGHTLY-ARTIFACT story end to end — the third leg of
     the serving-split trilogy (peer search: ``rank_window_nightly_e2e``;
@@ -200,65 +206,23 @@ def dedup_index_nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force cross Jaccard, so a hash-green row proves the
     PERSISTED path end to end: hash determinism across the write, the
     bucketed layout's join, and the probe arithmetic."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from prod_recommendation_pyspark_spark.sources.writers import (
-        write_bucketed,
-    )
-
     docs = _spread(Catalog(spark, sf_dir).table("documents"))
     corpus = docs.filter(F.col("doc_id") % 5 != 4)
     batch = docs.filter(F.col("doc_id") % 5 == 4)
-    store = minhash_band_keys(corpus, "doc_id", "text")
-    # nightly write: bucketed by the probe join key, EXTERNAL at a
-    # per-run temp location (a managed table would collide with a
-    # previous run's warehouse leftovers in a fresh session)
-    base = tempfile.mkdtemp(prefix="dedup_idx_nightly_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    write_bucketed(
-        store, "dedup_band_index_nightly", 16, ["band", "key"],
-        path=f"{base}/store",
+    store = _band_store(
+        spark, "dedup_band_index_nightly", scratch_dir("dedup_idx_nightly_"),
+        corpus,
     )
-    reloaded = spark.table("dedup_band_index_nightly")
-    cands = incremental_lsh_candidates(
-        reloaded, batch, "doc_id", "text"
-    ).select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
+    return _verified(
+        docs, incremental_lsh_candidates(store, batch, "doc_id", "text")
     )
-    verified = ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_words=3, threshold=0.8, candidates=cands
-    )
-    return verified.select(
-        "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
-    ).orderBy("id_a", "id_b")
 
 
 @register(
     "dedup_index_delete_e2e",
-    sql="""
-    WITH
-    toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents),
-    sh AS (SELECT DISTINCT doc_id,
-                  unnest(list_transform(range(1, greatest(len(w) - 1, 2)),
-                         i -> array_to_string(w[i:i+2], ' '))) AS s
-           FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-               FROM sh a JOIN sh b ON a.s = b.s
-               WHERE a.doc_id % 5 <> 4 AND a.doc_id % 7 <> 2
-                 AND b.doc_id % 5 = 4
-               GROUP BY a.doc_id, b.doc_id)
-    SELECT id_a, id_b,
-           round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-    FROM common
-    JOIN sizes sa ON common.id_a = sa.doc_id
-    JOIN sizes sb ON common.id_b = sb.doc_id
-    WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
-    ORDER BY id_a, id_b
-    """,
+    sql=_cross_jaccard_sql(
+        "a.doc_id % 5 <> 4 AND a.doc_id % 7 <> 2 AND b.doc_id % 5 = 4"
+    ),
 )
 def dedup_index_delete_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DELETE half of the dedup artifact lifecycle (round-11
@@ -269,68 +233,26 @@ def dedup_index_delete_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     between rebuilds.  The ORACLE knows nothing about tombstones: it
     replays brute-force cross Jaccard against the SURVIVING corpus
     (rebuild-minus-deleted), and band keys are per-document, so
-    tombstone-probe ≡ compacted-store probe ≡ rebuild exactly
-    (``dedup_store_compact``'s rebuild equivalence is additionally
-    pytest-pinned, tests/test_artifact_lifecycle.py).  Delete cost:
-    one broadcast anti-join on the store scan — never re-shingling
-    the surviving corpus."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from prod_recommendation_pyspark_spark.sources.writers import (
-        write_bucketed,
-    )
-
+    tombstone-probe ≡ compacted-store probe ≡ rebuild exactly (the
+    compaction, ``drop_tombstoned`` over the whole store, is
+    additionally pytest-pinned equal to the rebuild,
+    tests/test_artifact_lifecycle.py).  Delete cost: one broadcast
+    anti-join on the store scan — never re-shingling the surviving
+    corpus."""
     docs = _spread(Catalog(spark, sf_dir).table("documents"))
     corpus = docs.filter(F.col("doc_id") % 5 != 4)
     batch = docs.filter(F.col("doc_id") % 5 == 4)
     tombs = corpus.filter(F.col("doc_id") % 7 == 2).select("doc_id")
-    store = minhash_band_keys(corpus, "doc_id", "text")
-    base = tempfile.mkdtemp(prefix="dedup_idx_delete_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    write_bucketed(
-        store, "dedup_band_index_delete", 16, ["band", "key"],
-        path=f"{base}/store",
+    store = _band_store(
+        spark, "dedup_band_index_delete", scratch_dir("dedup_idx_delete_"),
+        corpus,
     )
-    reloaded = spark.table("dedup_band_index_delete")
-    cands = incremental_lsh_candidates(
-        reloaded, batch, "doc_id", "text", tombstones=tombs
-    ).select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-    )
-    verified = ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_words=3, threshold=0.8, candidates=cands
-    )
-    return verified.select(
-        "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
-    ).orderBy("id_a", "id_b")
+    return _verified(docs, incremental_lsh_candidates(
+        store, batch, "doc_id", "text", tombstones=tombs
+    ))
 
 
-@register(
-    "dedup_index_append_e2e",
-    sql="""
-    WITH
-    toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents),
-    sh AS (SELECT DISTINCT doc_id,
-                  unnest(list_transform(range(1, greatest(len(w) - 1, 2)),
-                         i -> array_to_string(w[i:i+2], ' '))) AS s
-           FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-               FROM sh a JOIN sh b ON a.s = b.s
-               WHERE a.doc_id % 5 <> 4 AND b.doc_id % 5 = 4
-               GROUP BY a.doc_id, b.doc_id)
-    SELECT id_a, id_b,
-           round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-    FROM common
-    JOIN sizes sa ON common.id_a = sa.doc_id
-    JOIN sizes sb ON common.id_b = sb.doc_id
-    WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
-    ORDER BY id_a, id_b
-    """,
-)
+@register("dedup_index_append_e2e", sql=_cross_jaccard_sql(_STORE_X_BATCH))
 def dedup_index_append_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INSERT half of the dedup artifact lifecycle: yesterday's
     arrivals are APPENDED to the persisted band-key store instead of
@@ -349,67 +271,21 @@ def dedup_index_append_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     against today's batch — identical to ``dedup_index_nightly_e2e``'s
     oracle, which is the point: growing the store by append must be
     indistinguishable from the nightly rebuild."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from prod_recommendation_pyspark_spark.sources.writers import (
-        write_bucketed,
-    )
-
     docs = _spread(Catalog(spark, sf_dir).table("documents"))
     nightly = docs.filter(F.col("doc_id") % 5 <= 2)
     arrivals = docs.filter(F.col("doc_id") % 5 == 3)
     batch = docs.filter(F.col("doc_id") % 5 == 4)
-    base = tempfile.mkdtemp(prefix="dedup_idx_append_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    write_bucketed(
-        minhash_band_keys(nightly, "doc_id", "text"),
-        "dedup_band_index_append", 16, ["band", "key"],
-        path=f"{base}/store",
+    grown = _band_store(
+        spark, "dedup_band_index_append", scratch_dir("dedup_idx_append_"),
+        nightly, arrivals,
     )
-    write_bucketed(
-        minhash_band_keys(arrivals, "doc_id", "text"),
-        "dedup_band_index_append", 16, ["band", "key"],
-        mode="append", path=f"{base}/store",
+    return _verified(
+        docs, incremental_lsh_candidates(grown, batch, "doc_id", "text")
     )
-    grown = spark.table("dedup_band_index_append")
-    cands = incremental_lsh_candidates(
-        grown, batch, "doc_id", "text"
-    ).select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-    )
-    verified = ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_words=3, threshold=0.8, candidates=cands
-    )
-    return verified.select(
-        "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
-    ).orderBy("id_a", "id_b")
 
 
 @register(
-    "streaming_dedup_serving_replay",
-    sql="""
-    WITH
-    toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents),
-    sh AS (SELECT DISTINCT doc_id,
-                  unnest(list_transform(range(1, greatest(len(w) - 1, 2)),
-                         i -> array_to_string(w[i:i+2], ' '))) AS s
-           FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-               FROM sh a JOIN sh b ON a.s = b.s
-               WHERE a.doc_id % 5 <> 4 AND b.doc_id % 5 = 4
-               GROUP BY a.doc_id, b.doc_id)
-    SELECT id_a, id_b,
-           round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-    FROM common
-    JOIN sizes sa ON common.id_a = sa.doc_id
-    JOIN sizes sb ON common.id_b = sb.doc_id
-    WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
-    ORDER BY id_a, id_b
-    """,
+    "streaming_dedup_serving_replay", sql=_cross_jaccard_sql(_STORE_X_BATCH)
 )
 def streaming_dedup_serving_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING dedup loop registered under the brute-force
@@ -440,14 +316,8 @@ def streaming_dedup_serving_replay(spark: SparkSession, sf_dir: str) -> DataFram
     spreads the arriving side before hashing (11.5s/batch unspread at
     sf0.1 — `lastProgress.durationMs.addBatch` — vs sub-second
     spread)."""
-    from prod_recommendation_pyspark_spark.sources.writers import (
-        write_bucketed,
-    )
     from prod_recommendation_pyspark_spark.streaming.joins import (
         streaming_incremental_dedup,
-    )
-    from prod_recommendation_pyspark_spark.streaming.pipeline import (
-        replay_stream,
     )
 
     docs = _spread(Catalog(spark, sf_dir).table("documents"))
@@ -459,12 +329,7 @@ def streaming_dedup_serving_replay(spark: SparkSession, sf_dir: str) -> DataFram
         nonlocal cand_schema
         # static side of every micro-batch's stream-static join: the
         # nightly bucketed artifact (no static-side shuffle per batch)
-        write_bucketed(
-            minhash_band_keys(corpus, "doc_id", "text"),
-            "dedup_band_index_serving", 16, ["band", "key"],
-            path=f"{base}/store",
-        )
-        store = spark.table("dedup_band_index_serving")
+        store = _band_store(spark, "dedup_band_index_serving", base, corpus)
         cand_stream = streaming_incremental_dedup(stream, store, "doc_id", "text")
         cand_schema = cand_stream.schema
         return (
@@ -483,47 +348,20 @@ def streaming_dedup_serving_replay(spark: SparkSession, sf_dir: str) -> DataFram
     # stream's own schema instead: committed-file listing comes from
     # the sink's metadata log and an empty log yields the empty
     # typed frame.
-    cands = (
-        spark.read.schema(cand_schema).parquet(out)
-        .select(
-            F.col("corpus_id").cast("long").alias("id_a"),
-            F.col("doc_id").cast("long").alias("id_b"),
-        )
-        .distinct()
+    return _verified(
+        docs, spark.read.schema(cand_schema).parquet(out),
+        "corpus_id", "doc_id", distinct=True,
     )
-    verified = ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_words=3, threshold=0.8, candidates=cands
-    )
-    return verified.select(
-        "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
-    ).orderBy("id_a", "id_b")
 
 
 @register(
     "streaming_dedup_within_batch",
-    sql="""
-    WITH
-    toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents),
-    sh AS (SELECT DISTINCT doc_id,
-                  unnest(list_transform(range(1, greatest(len(w) - 1, 2)),
-                         i -> array_to_string(w[i:i+2], ' '))) AS s
-           FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-               FROM sh a JOIN sh b ON a.s = b.s
-               WHERE (a.doc_id % 2 = 0 AND b.doc_id % 2 = 1)
+    sql=_cross_jaccard_sql(
+        """(a.doc_id % 2 = 0 AND b.doc_id % 2 = 1)
                   OR (a.doc_id % 2 = 1 AND b.doc_id % 2 = 1
                       AND a.doc_id % 3 = b.doc_id % 3
-                      AND a.doc_id < b.doc_id)
-               GROUP BY a.doc_id, b.doc_id)
-    SELECT id_a, id_b,
-           round(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
-    FROM common
-    JOIN sizes sa ON common.id_a = sa.doc_id
-    JOIN sizes sb ON common.id_b = sb.doc_id
-    WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
-    ORDER BY id_a, id_b
-    """,
+                      AND a.doc_id < b.doc_id)"""
+    ),
 )
 def streaming_dedup_within_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming dedup loop WITH within-micro-batch self-pairing
@@ -550,9 +388,6 @@ def streaming_dedup_within_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prod_recommendation_pyspark_spark.streaming.joins import (
         streaming_dedup_serving_full,
     )
-    from prod_recommendation_pyspark_spark.streaming.pipeline import (
-        replay_stream,
-    )
 
     docs = _spread(Catalog(spark, sf_dir).table("documents"))
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
@@ -573,20 +408,7 @@ def streaming_dedup_within_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "id_a long, id_b long, jaccard double"
         )
-    cands = (
-        spark.read.parquet(out)
-        .select(
-            F.col("id_a").cast("long").alias("id_a"),
-            F.col("id_b").cast("long").alias("id_b"),
-        )
-        .distinct()
-    )
-    verified = ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_words=3, threshold=0.8, candidates=cands
-    )
-    return verified.select(
-        "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
-    ).orderBy("id_a", "id_b")
+    return _verified(docs, spark.read.parquet(out), distinct=True)
 
 
 @register("ngram_jaccard_pairs_brute", sql=_JACCARD_SQL)
@@ -2078,17 +1900,8 @@ def weighted_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "containment_dedup_pairs",
-    sql="""
-    WITH
-    toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents),
-    sh AS (SELECT DISTINCT doc_id,
-                  unnest(list_transform(range(1, greatest(len(w) - 1, 2)),
-                         i -> array_to_string(w[i:i+2], ' '))) AS s
-           FROM toks),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-               FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-               GROUP BY a.doc_id, b.doc_id)
+    sql=f"""
+    WITH {_SHINGLES_SQL}
     SELECT id_a, id_b, sa.n AS na, sb.n AS nb,
            round(c * 1.0 / least(sa.n, sb.n), 4) AS containment
     FROM common

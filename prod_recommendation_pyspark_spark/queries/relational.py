@@ -19,6 +19,7 @@ from prod_recommendation_pyspark_spark.operators.relational import (
 from prod_recommendation_pyspark_spark.queries.registry import register
 from prod_recommendation_pyspark_spark.sources.catalog import Catalog
 from prod_recommendation_pyspark_spark.sources.readers import latest_snapshot
+from prod_recommendation_pyspark_spark.streaming.pipeline import scratch_dir
 
 
 # --- TPC-H Q1 shape: scan → filter → groupBy 2 keys → 8 aggs → sort -------
@@ -645,10 +646,6 @@ def sink_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleanup deferred to process exit since the returned plan scans the
     files lazily); ``single_file`` exercises the reference's
     coalesce(1) report shape (search_ranking_peers.py:168-173)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from prod_recommendation_pyspark_spark.sources.readers import (
         read_csv,
         read_json,
@@ -664,8 +661,7 @@ def sink_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = Catalog(spark, sf_dir).table("nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    base = tempfile.mkdtemp(prefix="spark_graft_roundtrip_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = scratch_dir("spark_graft_roundtrip_")
     write_csv(nation, f"{base}/nation_csv", single_file=True)
     write_parquet(nation, f"{base}/nation_parquet")
     write_json(nation, f"{base}/nation_json")
@@ -868,10 +864,6 @@ def zorder_layout_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum).  The skipping benefit itself (per-file min/max span
     shrinkage on BOTH columns) is pinned by a pyarrow footer-stats
     pytest."""
-    import atexit
-    import shutil
-    import tempfile
-
     from prod_recommendation_pyspark_spark.operators.layout import (
         write_zordered,
         zorder_value,
@@ -883,8 +875,7 @@ def zorder_layout_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lands in the repo tree.  The returned DataFrame scans these
     # files lazily, so cleanup is deferred to process exit rather
     # than racing the consumer's collect().
-    base = tempfile.mkdtemp(prefix="spark_graft_zorder_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = scratch_dir("spark_graft_zorder_")
     write_zordered(ev, f"{base}/events_z", ["user_id", "value"], bits=16,
                    n_files=8)
     back = spark.read.parquet(f"{base}/events_z")
@@ -1106,15 +1097,10 @@ def schema_evolution_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cost knob: evolve-by-ADD keeps it cheap, and a table format's
     schema registry replaces it entirely — this is the plain-parquet
     contract."""
-    import atexit
-    import shutil
-    import tempfile
-
     nation = Catalog(spark, sf_dir).table("nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    base = tempfile.mkdtemp(prefix="spark_graft_evolve_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = scratch_dir("spark_graft_evolve_")
     old = nation.filter(F.col("n_nationkey") < 12).drop("n_regionkey")
     new = nation.filter(F.col("n_nationkey") >= 12)
     old.write.parquet(f"{base}/t/batch=1")
@@ -1144,15 +1130,10 @@ def orc_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown / column pruning machinery).  The value hash pins the
     lossless type round-trip against the plain table; per-invocation
     temp dir as in the other sink queries."""
-    import atexit
-    import shutil
-    import tempfile
-
     nation = Catalog(spark, sf_dir).table("nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    base = tempfile.mkdtemp(prefix="spark_graft_orc_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = scratch_dir("spark_graft_orc_")
     nation.write.mode("overwrite").orc(f"{base}/nation_orc")
     return (
         spark.read.orc(f"{base}/nation_orc")

@@ -428,45 +428,86 @@ def ann_lsh_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ANN: IVF (inverted-file) with deterministic centroid sample
 # ---------------------------------------------------------------------------
 
+from prod_recommendation_pyspark_spark.operators.relational import (  # noqa: E402
+    drop_tombstoned,
+)
 from prod_recommendation_pyspark_spark.operators.similarity import (  # noqa: E402
     ann_ivf_topk,
+    ivf_auto_centroids,
+    ivf_compact_rewrite,
+    ivf_index,
+    ivf_probe,
+)
+from prod_recommendation_pyspark_spark.streaming.pipeline import (  # noqa: E402
+    replay_stream,
+    scratch_dir,
 )
 
 _IVF_CENTROID_MOD, _IVF_NPROBE, _IVF_K = 13, 4, 5
+_IVF_DEL_MOD, _IVF_DEL_REM = 23, 5
+_IVF_UPD_MOD, _IVF_UPD_REM = 19, 6
 
 
-@register(
-    "ann_ivf_topk_embeddings",
-    sql=f"""
+def _ivf_cent_sql(mod: int | str, src: str = "e") -> str:
+    """The centroid CTE: the ``vec_id % mod == 0`` sample of ``src``."""
+    return f"""cent AS (SELECT vec_id AS centroid_id, v AS cv FROM {src}
+             WHERE vec_id % {mod} = 0)"""
+
+
+def _ivf_derived_cent_sql(src: str) -> str:
+    """``ivf_auto_centroids`` replayed over ``src``: the modulus
+    ``n // ceil(sqrt(n))`` from ``count(*)`` (``md``), then its
+    sample."""
+    return f"""md AS (SELECT greatest(1, count(*) // greatest(1,
+                   CAST(ceil(sqrt(count(*))) AS BIGINT))) AS m FROM {src}),
+    {_ivf_cent_sql("(SELECT m FROM md)", src)}"""
+
+
+def _ivf_nearest_sql(src: str, filters: list[str], n: int) -> str:
+    """The ``n`` nearest centroids of every ``src`` row whose ``vec_id``
+    passes each of ``filters`` (``"% 17 = 3"``-style tails)."""
+    where = " AND ".join(f"{src}.vec_id {f}" for f in filters)
+    return f"""
+        SELECT vec_id, centroid_id FROM (
+            SELECT {src}.vec_id, cent.centroid_id,
+                   row_number() OVER (
+                       PARTITION BY {src}.vec_id
+                       ORDER BY list_cosine_similarity({src}.v, cent.cv) DESC,
+                                cent.centroid_id) AS rn
+            FROM {src} CROSS JOIN cent{f" WHERE {where}" if where else ""})
+        WHERE rn <= {n}"""
+
+
+#: The frozen ``% 13`` centroid sample of the registered IVF queries.
+_IVF_CENT_SQL = _ivf_cent_sql(_IVF_CENTROID_MOD)
+
+
+def _ivf_oracle(
+    batch: str, drop: str | None = None, cent: str = _IVF_CENT_SQL,
+    src: str = "e",
+) -> str:
+    """SQL replay of an IVF top-k: every ``src`` vector in the list of
+    its nearest ``cent`` centroid, the query batch (``vec_id {batch}``)
+    probing its ``_IVF_NPROBE`` nearest lists, exact cosine re-rank.
+    ``drop`` (a ``vec_id`` tail) restricts both the corpus and the
+    batch — the rebuild-minus-deleted replay; ``cent`` carries the CTEs
+    between ``e`` and the assignments (the fixed ``% 13`` sample by
+    default, or :func:`_ivf_derived_cent_sql`, or an updated ``e2``
+    relation that ``src`` then names)."""
+    kept = [drop] if drop else []
+    return f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e
-             WHERE vec_id % {_IVF_CENTROID_MOD} = 0),
-    c_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent)
-        WHERE rn <= 1),
-    q_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent WHERE e.vec_id % 20 = 0)
-        WHERE rn <= {_IVF_NPROBE}),
+    {cent},
+    c_assign AS ({_ivf_nearest_sql(src, kept, 1)}),
+    q_assign AS ({_ivf_nearest_sql(src, [batch] + kept, _IVF_NPROBE)}),
     cand AS (
         SELECT DISTINCT q.vec_id AS tgt_id, c.vec_id AS nbr_id
         FROM q_assign q JOIN c_assign c ON q.centroid_id = c.centroid_id
         WHERE q.vec_id <> c.vec_id),
     scored AS (
         SELECT tgt_id, nbr_id, list_cosine_similarity(a.v, b.v) AS score
-        FROM cand JOIN e a ON cand.tgt_id = a.vec_id
-                  JOIN e b ON cand.nbr_id = b.vec_id),
+        FROM cand JOIN {src} a ON cand.tgt_id = a.vec_id
+                  JOIN {src} b ON cand.nbr_id = b.vec_id),
     ranked AS (
         SELECT tgt_id, nbr_id, score,
                row_number() OVER (PARTITION BY tgt_id ORDER BY score DESC, nbr_id) AS rn
@@ -474,8 +515,88 @@ _IVF_CENTROID_MOD, _IVF_NPROBE, _IVF_K = 13, 4, 5
     SELECT tgt_id, nbr_id, round(score, 4) AS score
     FROM ranked WHERE rn <= {_IVF_K}
     ORDER BY tgt_id, nbr_id
-    """,
-)
+    """
+
+
+#: The serving batch of the artifact queries, and its tail after a
+#: delete (a deleted document issues no queries).
+_IVF_BATCH = "% 17 = 3"
+_IVF_KEPT = f"% {_IVF_DEL_MOD} <> {_IVF_DEL_REM}"
+
+
+def _ivf_sides(
+    spark: SparkSession, sf_dir: str, mod: int = 17, rem: int = 3,
+    deleted: bool = False,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(centroids, corpus, batch) of the IVF queries: the frozen
+    ``vec_id % 13`` centroid sample, the corpus as ``nbr_id``, and the
+    query batch ``vec_id % mod == rem`` as ``tgt_id`` — without the
+    deleted ``% 23 == 5`` slice when ``deleted``."""
+    emb = Catalog(spark, sf_dir).table("embeddings")
+    centroids = emb.filter(F.col("vec_id") % _IVF_CENTROID_MOD == 0).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("vec")
+    )
+    corpus = emb.select(F.col("vec_id").alias("nbr_id"), "embedding")
+    batch = F.col("vec_id") % mod == rem
+    if deleted:
+        batch = batch & (F.col("vec_id") % _IVF_DEL_MOD != _IVF_DEL_REM)
+    qs = emb.filter(batch).select(F.col("vec_id").alias("tgt_id"), "embedding")
+    return centroids, corpus, qs
+
+
+def _ivf_tombstones(corpus: DataFrame) -> DataFrame:
+    """The takedown set of the delete lifecycle: ``nbr_id % 23 == 5``."""
+    return corpus.filter(
+        F.col("nbr_id") % _IVF_DEL_MOD == _IVF_DEL_REM
+    ).select("nbr_id")
+
+
+def _ivf_written(
+    spark: SparkSession,
+    corpus: DataFrame,
+    centroids: DataFrame,
+    base: str,
+    compact: DataFrame | None = None,
+) -> DataFrame:
+    """Build the IVF artifact, write it list-partitioned to
+    ``{base}/ivf_index``, partially compact it against ``compact``
+    tombstones when given (``ivf_compact_rewrite``), and reload it
+    cold.  Repartitioning by list before the partitioned write gives
+    one file per inverted list instead of one per (task × list) — at
+    real corpus sizes the unrepartitioned write explodes into tiny
+    files."""
+    path = f"{base}/ivf_index"
+    ivf_index(corpus, "nbr_id", "embedding", centroids).repartition(
+        "ivf_list"
+    ).write.mode("overwrite").partitionBy("ivf_list").parquet(path)
+    if compact is not None:
+        ivf_compact_rewrite(spark, path, compact, "nbr_id")
+    return spark.read.parquet(path)
+
+
+def _ivf_probed(
+    qs: DataFrame,
+    index: DataFrame,
+    centroids: DataFrame,
+    tombstones: DataFrame | None = None,
+) -> DataFrame:
+    """The batch's IVF top-k served off ``index``."""
+    return ivf_probe(
+        qs, index, "tgt_id", "nbr_id", centroids,
+        vec_col="embedding", k=_IVF_K, n_probe=_IVF_NPROBE,
+        tombstones=tombstones,
+    )
+
+
+def _ivf_finished(out: DataFrame) -> DataFrame:
+    """The registered IVF result: scores rounded as the oracles round
+    them, ordered like the oracles."""
+    return out.select(
+        "tgt_id", "nbr_id", F.round("score", 4).alias("score")
+    ).orderBy("tgt_id", "nbr_id")
+
+
+@register("ann_ivf_topk_embeddings", sql=_ivf_oracle("% 20 = 0"))
 def ann_ivf_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-5: inverted lists = Voronoi cells of a deterministic
     corpus sample (vec_id % 13) as centroids; corpus vectors live in
@@ -484,141 +605,41 @@ def ann_ivf_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables; fully reproducible → value-oracled in SQL.  At scale the
     corpus is written partitioned by list id, so probing is a
     partition-pruned scan of n_probe lists."""
-    emb = Catalog(spark, sf_dir).table("embeddings")
-    centroids = emb.filter(F.col("vec_id") % _IVF_CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("vec")
-    )
-    corpus = emb.select(F.col("vec_id").alias("nbr_id"), "embedding")
-    qs = emb.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("tgt_id"), "embedding"
-    )
-    out = ann_ivf_topk(
+    centroids, corpus, qs = _ivf_sides(spark, sf_dir, 20, 0)
+    return _ivf_finished(ann_ivf_topk(
         corpus, qs, "nbr_id", "tgt_id", "embedding",
         k=_IVF_K, centroids=centroids, n_probe=_IVF_NPROBE,
-    )
-    return out.select(
-        "tgt_id", "nbr_id", F.round("score", 4).alias("score")
-    ).orderBy("tgt_id", "nbr_id")
+    ))
 
 
 @register(
     "ann_ivf_derived_density",
-    sql=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    md AS (SELECT greatest(1, count(*) // greatest(1,
-                   CAST(ceil(sqrt(count(*))) AS BIGINT))) AS m FROM e),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e
-             WHERE vec_id % (SELECT m FROM md) = 0),
-    c_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent)
-        WHERE rn <= 1),
-    q_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent WHERE e.vec_id % 20 = 0)
-        WHERE rn <= {_IVF_NPROBE}),
-    cand AS (
-        SELECT DISTINCT q.vec_id AS tgt_id, c.vec_id AS nbr_id
-        FROM q_assign q JOIN c_assign c ON q.centroid_id = c.centroid_id
-        WHERE q.vec_id <> c.vec_id),
-    scored AS (
-        SELECT tgt_id, nbr_id, list_cosine_similarity(a.v, b.v) AS score
-        FROM cand JOIN e a ON cand.tgt_id = a.vec_id
-                  JOIN e b ON cand.nbr_id = b.vec_id),
-    ranked AS (
-        SELECT tgt_id, nbr_id, score,
-               row_number() OVER (PARTITION BY tgt_id ORDER BY score DESC, nbr_id) AS rn
-        FROM scored)
-    SELECT tgt_id, nbr_id, round(score, 4) AS score
-    FROM ranked WHERE rn <= {_IVF_K}
-    ORDER BY tgt_id, nbr_id
-    """,
+    sql=_ivf_oracle("% 20 = 0", cent=_ivf_derived_cent_sql("e")),
 )
 def ann_ivf_derived_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with the centroid density DERIVED from the corpus
     (``ivf_auto_centroids``: nlist ≈ sqrt(N) via the deterministic
     ``id % (N // ceil(sqrt(N)))`` sample) instead of the pinned
-    ``% {_IVF_CENTROID_MOD}`` — the ANN analogue of the rank-window
-    derivation replacing the pinned window: any fixed sampling
-    constant is eventually the wrong density (at sf1 the registered
-    constant is already 1,539 thirteen-row lists; sqrt(N) builds 8x
-    faster AND probes at higher recall — SCALE.md round-11 ANN
-    appendix).  Same query batch as ``ann_ivf_topk_embeddings`` so
-    the two hash-green rows differ ONLY in density.  The oracle
-    derives the identical modulus from ``count(*)`` with the same
-    floating ceil(sqrt(N)) formulation, so the whole derived index is
-    independently replayed — a hash match pins the derivation, the
-    assignment, and the probe end to end."""
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_auto_centroids,
-    )
-
-    emb = Catalog(spark, sf_dir).table("embeddings")
-    corpus = emb.select(F.col("vec_id").alias("nbr_id"), "embedding")
+    ``% 13`` — the ANN analogue of the rank-window derivation
+    replacing the pinned window: any fixed sampling constant is
+    eventually the wrong density (at sf1 the registered constant is
+    already 1,539 thirteen-row lists; sqrt(N) builds 8x faster AND
+    probes at higher recall — SCALE.md round-11 ANN appendix).  Same
+    query batch as ``ann_ivf_topk_embeddings`` so the two hash-green
+    rows differ ONLY in density.  The oracle derives the identical
+    modulus from ``count(*)`` with the same floating ceil(sqrt(N))
+    formulation, so the whole derived index is independently replayed
+    — a hash match pins the derivation, the assignment, and the probe
+    end to end."""
+    _, corpus, qs = _ivf_sides(spark, sf_dir, 20, 0)
     centroids = ivf_auto_centroids(corpus, "nbr_id", "embedding")
-    qs = emb.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("tgt_id"), "embedding"
-    )
-    out = ann_ivf_topk(
+    return _ivf_finished(ann_ivf_topk(
         corpus, qs, "nbr_id", "tgt_id", "embedding",
         k=_IVF_K, centroids=centroids, n_probe=_IVF_NPROBE,
-    )
-    return out.select(
-        "tgt_id", "nbr_id", F.round("score", 4).alias("score")
-    ).orderBy("tgt_id", "nbr_id")
+    ))
 
 
-@register(
-    "ann_ivf_nightly_e2e",
-    sql=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e
-             WHERE vec_id % {_IVF_CENTROID_MOD} = 0),
-    c_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent)
-        WHERE rn <= 1),
-    q_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent WHERE e.vec_id % 17 = 3)
-        WHERE rn <= {_IVF_NPROBE}),
-    cand AS (
-        SELECT DISTINCT q.vec_id AS tgt_id, c.vec_id AS nbr_id
-        FROM q_assign q JOIN c_assign c ON q.centroid_id = c.centroid_id
-        WHERE q.vec_id <> c.vec_id),
-    scored AS (
-        SELECT tgt_id, nbr_id, list_cosine_similarity(a.v, b.v) AS score
-        FROM cand JOIN e a ON cand.tgt_id = a.vec_id
-                  JOIN e b ON cand.nbr_id = b.vec_id),
-    ranked AS (
-        SELECT tgt_id, nbr_id, score,
-               row_number() OVER (PARTITION BY tgt_id ORDER BY score DESC, nbr_id) AS rn
-        FROM scored)
-    SELECT tgt_id, nbr_id, round(score, 4) AS score
-    FROM ranked WHERE rn <= {_IVF_K}
-    ORDER BY tgt_id, nbr_id
-    """,
-)
+@register("ann_ivf_nightly_e2e", sql=_ivf_oracle(_IVF_BATCH))
 def ann_ivf_nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ANN NIGHTLY-BUILD deployment story end to end, under the
     full value oracle — the vector-index twin of
@@ -641,90 +662,14 @@ def ann_ivf_nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Query batch (vec_id % 17 = 3) is disjoint from
     ``ann_ivf_topk_embeddings``'s (% 20 = 0) so the two rows evidence
     different batches."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_index,
-        ivf_probe,
+    centroids, corpus, qs = _ivf_sides(spark, sf_dir)
+    artifact = _ivf_written(
+        spark, corpus, centroids, scratch_dir("spark_graft_ivf_")
     )
-
-    emb = Catalog(spark, sf_dir).table("embeddings")
-    centroids = emb.filter(F.col("vec_id") % _IVF_CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("vec")
-    )
-    corpus = emb.select(F.col("vec_id").alias("nbr_id"), "embedding")
-    qs = emb.filter(F.col("vec_id") % 17 == 3).select(
-        F.col("vec_id").alias("tgt_id"), "embedding"
-    )
-    base = tempfile.mkdtemp(prefix="spark_graft_ivf_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    # repartition by list before the partitioned write: one file per
-    # inverted list instead of one per (task x list) — at real corpus
-    # sizes the unrepartitioned write explodes into tiny files
-    ivf_index(corpus, "nbr_id", "embedding", centroids).repartition(
-        "ivf_list"
-    ).write.mode("overwrite").partitionBy("ivf_list").parquet(
-        f"{base}/ivf_index"
-    )
-    artifact = spark.read.parquet(f"{base}/ivf_index")
-    out = ivf_probe(
-        qs, artifact, "tgt_id", "nbr_id", centroids,
-        vec_col="embedding", k=_IVF_K, n_probe=_IVF_NPROBE,
-    )
-    return out.select(
-        "tgt_id", "nbr_id", F.round("score", 4).alias("score")
-    ).orderBy("tgt_id", "nbr_id")
+    return _ivf_finished(_ivf_probed(qs, artifact, centroids))
 
 
-_IVF_DEL_MOD, _IVF_DEL_REM = 23, 5
-
-
-@register(
-    "ann_ivf_delete_e2e",
-    sql=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e
-             WHERE vec_id % {_IVF_CENTROID_MOD} = 0),
-    c_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent
-            WHERE e.vec_id % {_IVF_DEL_MOD} <> {_IVF_DEL_REM})
-        WHERE rn <= 1),
-    q_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent
-            WHERE e.vec_id % 17 = 3
-              AND e.vec_id % {_IVF_DEL_MOD} <> {_IVF_DEL_REM})
-        WHERE rn <= {_IVF_NPROBE}),
-    cand AS (
-        SELECT DISTINCT q.vec_id AS tgt_id, c.vec_id AS nbr_id
-        FROM q_assign q JOIN c_assign c ON q.centroid_id = c.centroid_id
-        WHERE q.vec_id <> c.vec_id),
-    scored AS (
-        SELECT tgt_id, nbr_id, list_cosine_similarity(a.v, b.v) AS score
-        FROM cand JOIN e a ON cand.tgt_id = a.vec_id
-                  JOIN e b ON cand.nbr_id = b.vec_id),
-    ranked AS (
-        SELECT tgt_id, nbr_id, score,
-               row_number() OVER (PARTITION BY tgt_id ORDER BY score DESC, nbr_id) AS rn
-        FROM scored)
-    SELECT tgt_id, nbr_id, round(score, 4) AS score
-    FROM ranked WHERE rn <= {_IVF_K}
-    ORDER BY tgt_id, nbr_id
-    """,
-)
+@register("ann_ivf_delete_e2e", sql=_ivf_oracle(_IVF_BATCH, _IVF_KEPT))
 def ann_ivf_delete_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DELETE half of the ANN artifact lifecycle (round-11 verdict
     #1): the nightly artifact is built and written over the FULL
@@ -737,9 +682,9 @@ def ann_ivf_delete_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector removes its index ROW, not the list it anchors), so a
     hash-green row proves tombstone-probe ≡ rebuild-minus-deleted
     exactly — the property that makes the intraday delete semantically
-    honest rather than best-effort.  ``ivf_compact`` (the anti-join as
-    a rewrite job) is pinned equal to both by pytest
-    (tests/test_artifact_lifecycle.py).
+    honest rather than best-effort.  ``drop_tombstoned`` over the
+    whole artifact (the anti-join as a rewrite job) is pinned equal to
+    both by pytest (tests/test_artifact_lifecycle.py).
 
     Scale: the tombstone set is takedown-sized and broadcast; the
     probe's partition-pruned list fetch is unchanged — delete cost is
@@ -747,88 +692,17 @@ def ann_ivf_delete_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     query batch excludes tombstoned ids (a deleted document does not
     issue queries); centroids are the standard frozen ``% 13``
     derivation shared with ``ann_ivf_nightly_e2e``."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_index,
-        ivf_probe,
+    centroids, corpus, qs = _ivf_sides(spark, sf_dir, deleted=True)
+    artifact = _ivf_written(
+        spark, corpus, centroids, scratch_dir("spark_graft_ivf_del_")
     )
-
-    emb = Catalog(spark, sf_dir).table("embeddings")
-    centroids = emb.filter(F.col("vec_id") % _IVF_CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("vec")
+    return _ivf_finished(
+        _ivf_probed(qs, artifact, centroids, _ivf_tombstones(corpus))
     )
-    corpus = emb.select(F.col("vec_id").alias("nbr_id"), "embedding")
-    tombs = corpus.filter(
-        F.col("nbr_id") % _IVF_DEL_MOD == _IVF_DEL_REM
-    ).select("nbr_id")
-    qs = emb.filter(
-        (F.col("vec_id") % 17 == 3)
-        & (F.col("vec_id") % _IVF_DEL_MOD != _IVF_DEL_REM)
-    ).select(F.col("vec_id").alias("tgt_id"), "embedding")
-    base = tempfile.mkdtemp(prefix="spark_graft_ivf_del_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    ivf_index(corpus, "nbr_id", "embedding", centroids).repartition(
-        "ivf_list"
-    ).write.mode("overwrite").partitionBy("ivf_list").parquet(
-        f"{base}/ivf_index"
-    )
-    artifact = spark.read.parquet(f"{base}/ivf_index")
-    out = ivf_probe(
-        qs, artifact, "tgt_id", "nbr_id", centroids,
-        vec_col="embedding", k=_IVF_K, n_probe=_IVF_NPROBE,
-        tombstones=tombs,
-    )
-    return out.select(
-        "tgt_id", "nbr_id", F.round("score", 4).alias("score")
-    ).orderBy("tgt_id", "nbr_id")
 
 
 @register(
-    "ann_ivf_compact_rewrite_e2e",
-    sql=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e
-             WHERE vec_id % {_IVF_CENTROID_MOD} = 0),
-    c_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent
-            WHERE e.vec_id % {_IVF_DEL_MOD} <> {_IVF_DEL_REM})
-        WHERE rn <= 1),
-    q_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent
-            WHERE e.vec_id % 17 = 3
-              AND e.vec_id % {_IVF_DEL_MOD} <> {_IVF_DEL_REM})
-        WHERE rn <= {_IVF_NPROBE}),
-    cand AS (
-        SELECT DISTINCT q.vec_id AS tgt_id, c.vec_id AS nbr_id
-        FROM q_assign q JOIN c_assign c ON q.centroid_id = c.centroid_id
-        WHERE q.vec_id <> c.vec_id),
-    scored AS (
-        SELECT tgt_id, nbr_id, list_cosine_similarity(a.v, b.v) AS score
-        FROM cand JOIN e a ON cand.tgt_id = a.vec_id
-                  JOIN e b ON cand.nbr_id = b.vec_id),
-    ranked AS (
-        SELECT tgt_id, nbr_id, score,
-               row_number() OVER (PARTITION BY tgt_id ORDER BY score DESC, nbr_id) AS rn
-        FROM scored)
-    SELECT tgt_id, nbr_id, round(score, 4) AS score
-    FROM ranked WHERE rn <= {_IVF_K}
-    ORDER BY tgt_id, nbr_id
-    """,
+    "ann_ivf_compact_rewrite_e2e", sql=_ivf_oracle(_IVF_BATCH, _IVF_KEPT)
 )
 def ann_ivf_compact_rewrite_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPACTION of the written ANN artifact, end to end under the
@@ -848,92 +722,25 @@ def ann_ivf_compact_rewrite_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: compaction I/O rides the affected lists (takedown-sized),
     not the corpus — the property that makes intraday compaction
     viable at 100 TB where a full rewrite is a nightly-sized job."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_compact_rewrite,
-        ivf_index,
-        ivf_probe,
+    centroids, corpus, qs = _ivf_sides(spark, sf_dir, deleted=True)
+    artifact = _ivf_written(
+        spark, corpus, centroids, scratch_dir("spark_graft_ivf_cr_"),
+        compact=_ivf_tombstones(corpus),
     )
-
-    emb = Catalog(spark, sf_dir).table("embeddings")
-    centroids = emb.filter(F.col("vec_id") % _IVF_CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("vec")
-    )
-    corpus = emb.select(F.col("vec_id").alias("nbr_id"), "embedding")
-    tombs = corpus.filter(
-        F.col("nbr_id") % _IVF_DEL_MOD == _IVF_DEL_REM
-    ).select("nbr_id")
-    qs = emb.filter(
-        (F.col("vec_id") % 17 == 3)
-        & (F.col("vec_id") % _IVF_DEL_MOD != _IVF_DEL_REM)
-    ).select(F.col("vec_id").alias("tgt_id"), "embedding")
-    base = tempfile.mkdtemp(prefix="spark_graft_ivf_cr_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    path = f"{base}/ivf_index"
-    ivf_index(corpus, "nbr_id", "embedding", centroids).repartition(
-        "ivf_list"
-    ).write.mode("overwrite").partitionBy("ivf_list").parquet(path)
-    ivf_compact_rewrite(spark, path, tombs, "nbr_id")
-    artifact = spark.read.parquet(path)
-    out = ivf_probe(
-        qs, artifact, "tgt_id", "nbr_id", centroids,
-        vec_col="embedding", k=_IVF_K, n_probe=_IVF_NPROBE,
-    )
-    return out.select(
-        "tgt_id", "nbr_id", F.round("score", 4).alias("score")
-    ).orderBy("tgt_id", "nbr_id")
-
-
-_IVF_UPD_MOD, _IVF_UPD_REM = 19, 6
+    return _ivf_finished(_ivf_probed(qs, artifact, centroids))
 
 
 @register(
     "ann_ivf_update_e2e",
-    sql=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e
-             WHERE vec_id % {_IVF_CENTROID_MOD} = 0),
+    sql=_ivf_oracle(
+        _IVF_BATCH,
+        cent=_IVF_CENT_SQL + f""",
     e2 AS (SELECT vec_id,
                   CASE WHEN vec_id % {_IVF_UPD_MOD} = {_IVF_UPD_REM}
                        THEN list_reverse(v) ELSE v END AS v
-           FROM e),
-    c_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e2.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e2.vec_id
-                       ORDER BY list_cosine_similarity(e2.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e2 CROSS JOIN cent)
-        WHERE rn <= 1),
-    q_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e2.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e2.vec_id
-                       ORDER BY list_cosine_similarity(e2.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e2 CROSS JOIN cent WHERE e2.vec_id % 17 = 3)
-        WHERE rn <= {_IVF_NPROBE}),
-    cand AS (
-        SELECT DISTINCT q.vec_id AS tgt_id, c.vec_id AS nbr_id
-        FROM q_assign q JOIN c_assign c ON q.centroid_id = c.centroid_id
-        WHERE q.vec_id <> c.vec_id),
-    scored AS (
-        SELECT tgt_id, nbr_id, list_cosine_similarity(a.v, b.v) AS score
-        FROM cand JOIN e2 a ON cand.tgt_id = a.vec_id
-                  JOIN e2 b ON cand.nbr_id = b.vec_id),
-    ranked AS (
-        SELECT tgt_id, nbr_id, score,
-               row_number() OVER (PARTITION BY tgt_id ORDER BY score DESC, nbr_id) AS rn
-        FROM scored)
-    SELECT tgt_id, nbr_id, round(score, 4) AS score
-    FROM ranked WHERE rn <= {_IVF_K}
-    ORDER BY tgt_id, nbr_id
-    """,
+           FROM e)""",
+        src="e2",
+    ),
 )
 def ann_ivf_update_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UPDATE on the ANN artifact — the last cell of the CRUD matrix
@@ -956,34 +763,15 @@ def ann_ivf_update_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     document queries as its new self.  Scale: the update touches
     |updated| rows on both halves (broadcast anti-join + a
     |updated|-row assignment); nothing rides the corpus."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_compact,
-        ivf_index,
-        ivf_probe,
-    )
-
-    emb = Catalog(spark, sf_dir).table("embeddings")
-    centroids = emb.filter(F.col("vec_id") % _IVF_CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("vec")
-    )
-    corpus = emb.select(F.col("vec_id").alias("nbr_id"), "embedding")
+    centroids, corpus, _ = _ivf_sides(spark, sf_dir)
     updated = corpus.filter(
         F.col("nbr_id") % _IVF_UPD_MOD == _IVF_UPD_REM
     ).select("nbr_id", F.reverse("embedding").alias("embedding"))
-    base = tempfile.mkdtemp(prefix="spark_graft_ivf_upd_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    ivf_index(corpus, "nbr_id", "embedding", centroids).repartition(
-        "ivf_list"
-    ).write.mode("overwrite").partitionBy("ivf_list").parquet(
-        f"{base}/ivf_index"
+    artifact = _ivf_written(
+        spark, corpus, centroids, scratch_dir("spark_graft_ivf_upd_")
     )
-    artifact = spark.read.parquet(f"{base}/ivf_index")
     # UPDATE = tombstone the stale rows + frozen-centroid reinsert
-    grown = ivf_compact(
+    grown = drop_tombstoned(
         artifact, updated.select("nbr_id"), "nbr_id"
     ).unionByName(ivf_index(updated, "nbr_id", "embedding", centroids))
     post = corpus.join(
@@ -994,13 +782,7 @@ def ann_ivf_update_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = post.filter(F.col("nbr_id") % 17 == 3).select(
         F.col("nbr_id").alias("tgt_id"), "embedding"
     )
-    out = ivf_probe(
-        qs, grown, "tgt_id", "nbr_id", centroids,
-        vec_col="embedding", k=_IVF_K, n_probe=_IVF_NPROBE,
-    )
-    return out.select(
-        "tgt_id", "nbr_id", F.round("score", 4).alias("score")
-    ).orderBy("tgt_id", "nbr_id")
+    return _ivf_finished(_ivf_probed(qs, grown, centroids))
 
 
 # ---------------------------------------------------------------------------
@@ -1024,9 +806,6 @@ from prod_recommendation_pyspark_spark.operators.hybrid import (  # noqa: E402
 )
 from prod_recommendation_pyspark_spark.streaming.joins import (  # noqa: E402
     streaming_peer_serving,
-)
-from prod_recommendation_pyspark_spark.streaming.pipeline import (  # noqa: E402
-    replay_stream,
 )
 
 _PRUNE_QBUCKETS, _PRUNE_PREFIX = 64, 4
@@ -1246,7 +1025,7 @@ def _delete_e2e(fam: _Family, spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet): three probe references + the __w resolve read it
     compacted = rank_window_compact(index, tombs).localCheckpoint()
     cand = fam.probe(prospects, compacted)
-    kept = clients.join(F.broadcast(tombs), "src_custkey", "left_anti")
+    kept = drop_tombstoned(clients, tombs, "src_custkey")
     return _finished(_scored(prospects, kept, cand, fam.dim, broadcast_sides=True))
 
 
@@ -1681,10 +1460,6 @@ def rank_window_versioned_publish_e2e(
     also proves the companion round-trips bit-exactly: the scores are
     computed from the published features, against an oracle that
     derives them from the raw tables."""
-    import atexit
-    import shutil
-    import tempfile
-
     from prod_recommendation_pyspark_spark.sources.readers import (
         latest_published_version,
         read_published,
@@ -1694,8 +1469,7 @@ def rank_window_versioned_publish_e2e(
     )
 
     prospects, clients = _rank_sides(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="rank_window_versions_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = scratch_dir("rank_window_versions_")
     stale = clients.filter(F.col("src_custkey") % 6 != 5)
     for corpus in (stale, clients):
         publish_versioned(
@@ -1870,47 +1644,11 @@ def streaming_peer_serving_replay(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "ann_ivf_incremental_insert",
-    sql=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    nightly AS (SELECT * FROM e WHERE vec_id % 10 <> 7),
-    md AS (SELECT greatest(1, count(*) // greatest(1,
-                   CAST(ceil(sqrt(count(*))) AS BIGINT))) AS m FROM nightly),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM nightly
-             WHERE vec_id % (SELECT m FROM md) = 0),
-    c_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent)
-        WHERE rn <= 1),
-    q_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent WHERE e.vec_id % 17 = 3)
-        WHERE rn <= {_IVF_NPROBE}),
-    cand AS (
-        SELECT DISTINCT q.vec_id AS tgt_id, c.vec_id AS nbr_id
-        FROM q_assign q JOIN c_assign c ON q.centroid_id = c.centroid_id
-        WHERE q.vec_id <> c.vec_id),
-    scored AS (
-        SELECT tgt_id, nbr_id, list_cosine_similarity(a.v, b.v) AS score
-        FROM cand JOIN e a ON cand.tgt_id = a.vec_id
-                  JOIN e b ON cand.nbr_id = b.vec_id),
-    ranked AS (
-        SELECT tgt_id, nbr_id, score,
-               row_number() OVER (PARTITION BY tgt_id ORDER BY score DESC, nbr_id) AS rn
-        FROM scored)
-    SELECT tgt_id, nbr_id, round(score, 4) AS score
-    FROM ranked WHERE rn <= {_IVF_K}
-    ORDER BY tgt_id, nbr_id
-    """,
+    sql=_ivf_oracle(
+        _IVF_BATCH,
+        cent="nightly AS (SELECT * FROM e WHERE vec_id % 10 <> 7),\n    "
+        + _ivf_derived_cent_sql("nightly"),
+    ),
 )
 def ann_ivf_incremental_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTRADAY INSERTS between nightly index builds — the missing
@@ -1938,73 +1676,18 @@ def ann_ivf_incremental_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the insert path is one broadcast join + append of the
     arrival slice's list-partitioned files — no touch of the
     existing artifact's files."""
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_auto_centroids,
-        ivf_index,
-        ivf_probe,
-    )
-
-    emb = Catalog(spark, sf_dir).table("embeddings")
-    corpus = emb.select(F.col("vec_id").alias("nbr_id"), "embedding")
+    _, corpus, qs = _ivf_sides(spark, sf_dir)
     nightly = corpus.filter(F.col("nbr_id") % 10 != 7)
     arrivals = corpus.filter(F.col("nbr_id") % 10 == 7)
     centroids = ivf_auto_centroids(nightly, "nbr_id", "embedding")
     index = ivf_index(nightly, "nbr_id", "embedding", centroids)
     inserted = ivf_index(arrivals, "nbr_id", "embedding", centroids)
-    grown = index.unionByName(inserted)
-    qs = emb.filter(F.col("vec_id") % 17 == 3).select(
-        F.col("vec_id").alias("tgt_id"), "embedding"
+    return _ivf_finished(
+        _ivf_probed(qs, index.unionByName(inserted), centroids)
     )
-    out = ivf_probe(
-        qs, grown, "tgt_id", "nbr_id", centroids,
-        vec_col="embedding", k=_IVF_K, n_probe=_IVF_NPROBE,
-    )
-    return out.select(
-        "tgt_id", "nbr_id", F.round("score", 4).alias("score")
-    ).orderBy("tgt_id", "nbr_id")
 
 
-@register(
-    "streaming_ann_serving_replay",
-    sql=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cent AS (SELECT vec_id AS centroid_id, v AS cv FROM e
-             WHERE vec_id % {_IVF_CENTROID_MOD} = 0),
-    c_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent)
-        WHERE rn <= 1),
-    q_assign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT e.vec_id, cent.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY list_cosine_similarity(e.v, cent.cv) DESC,
-                                cent.centroid_id) AS rn
-            FROM e CROSS JOIN cent WHERE e.vec_id % 17 = 3)
-        WHERE rn <= {_IVF_NPROBE}),
-    cand AS (
-        SELECT DISTINCT q.vec_id AS tgt_id, c.vec_id AS nbr_id
-        FROM q_assign q JOIN c_assign c ON q.centroid_id = c.centroid_id
-        WHERE q.vec_id <> c.vec_id),
-    scored AS (
-        SELECT tgt_id, nbr_id, list_cosine_similarity(a.v, b.v) AS score
-        FROM cand JOIN e a ON cand.tgt_id = a.vec_id
-                  JOIN e b ON cand.nbr_id = b.vec_id),
-    ranked AS (
-        SELECT tgt_id, nbr_id, score,
-               row_number() OVER (PARTITION BY tgt_id ORDER BY score DESC, nbr_id) AS rn
-        FROM scored)
-    SELECT tgt_id, nbr_id, round(score, 4) AS score
-    FROM ranked WHERE rn <= {_IVF_K}
-    ORDER BY tgt_id, nbr_id
-    """,
-)
+@register("streaming_ann_serving_replay", sql=_ivf_oracle(_IVF_BATCH))
 def streaming_ann_serving_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming ANN serving loop REGISTERED under the full IVF
     value oracle — the vector twin of ``streaming_peer_serving_replay``:
@@ -2026,29 +1709,14 @@ def streaming_ann_serving_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of the corpus outside those lists."""
     import shutil
 
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_index,
-    )
     from prod_recommendation_pyspark_spark.streaming.joins import (
         streaming_ann_serving,
     )
 
-    emb = Catalog(spark, sf_dir).table("embeddings")
-    centroids = emb.filter(F.col("vec_id") % _IVF_CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("vec")
-    )
-    corpus = emb.select(F.col("vec_id").alias("nbr_id"), "embedding")
-    qs = emb.filter(F.col("vec_id") % 17 == 3).select(
-        F.col("vec_id").alias("tgt_id"), "embedding"
-    )
+    centroids, corpus, qs = _ivf_sides(spark, sf_dir)
 
     def start(stream: DataFrame, base: str):
-        ivf_index(corpus, "nbr_id", "embedding", centroids).repartition(
-            "ivf_list"
-        ).write.mode("overwrite").partitionBy("ivf_list").parquet(
-            f"{base}/ivf_index"
-        )
-        artifact = spark.read.parquet(f"{base}/ivf_index")
+        artifact = _ivf_written(spark, corpus, centroids, base)
 
         def emit(df: DataFrame, batch_id: int) -> None:
             df.write.mode("append").parquet(f"{base}/out")
@@ -2066,13 +1734,7 @@ def streaming_ann_serving_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "tgt_id long, nbr_id long, score double"
         )
-    return (
-        spark.read.parquet(out)
-        .select(
-            "tgt_id", "nbr_id", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_id", "nbr_id")
-    )
+    return _ivf_finished(spark.read.parquet(out))
 
 
 @register(

@@ -34,6 +34,21 @@ from prod_recommendation_pyspark_spark.operators.hybrid import (
     DEFAULT_W_HAVS,
     DEFAULT_W_HOPS,
 )
+from prod_recommendation_pyspark_spark.operators.relational import (
+    drop_tombstoned,
+)
+
+
+def _start_foreach(stream: DataFrame, per_batch, checkpoint_dir: str | None):
+    """Start ``per_batch(df, batch_id)`` on every micro-batch of
+    ``stream`` (``foreachBatch``, update mode), restartable from
+    ``checkpoint_dir`` when one is given; returns the started
+    ``StreamingQuery``.  Each loop's ``per_batch`` keeps its own
+    empty-batch policy."""
+    writer = stream.writeStream.foreachBatch(per_batch).outputMode("update")
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
 
 
 def split_clicks_views(events: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -138,18 +153,15 @@ def streaming_incremental_dedup(
     before banding, identically to the batch operator
     (``incremental_lsh_candidates(tombstones=...)``) — a takedown
     stops matching new arrivals from the batch after it lands,
-    without restarting the loop or rewriting the store (that is
-    ``dedup_store_compact``'s nightly job)."""
+    without restarting the loop or rewriting the store (that is the
+    nightly compaction, ``drop_tombstoned`` over the whole store)."""
     from prod_recommendation_pyspark_spark.operators.dedup import (
         band_key_structs,
         minhash_signature,
         word_shingles,
     )
 
-    if tombstones is not None:
-        corpus_keys = corpus_keys.join(
-            F.broadcast(tombstones.select(id_col)), id_col, "left_anti"
-        )
+    corpus_keys = drop_tombstoned(corpus_keys, tombstones, id_col)
 
     # Spread the arriving side BEFORE hashing: a micro-batch from a
     # file source is typically ONE split, and the 64-hash signature is
@@ -242,12 +254,7 @@ def streaming_dedup_serving_full(
         )
         emit(cross.unionByName(within).distinct(), batch_id)
 
-    writer = docs_stream.writeStream.foreachBatch(per_batch).outputMode(
-        "update"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start_foreach(docs_stream, per_batch, checkpoint_dir)
 
 
 def streaming_peer_serving(
@@ -340,12 +347,7 @@ def streaming_peer_serving(
             return
         emit(serve(batch_df), batch_id)
 
-    writer = prospects_stream.writeStream.foreachBatch(_serve).outputMode(
-        "update"
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start_foreach(prospects_stream, _serve, checkpoint_dir)
 
 
 def _serving_fn(
@@ -514,12 +516,7 @@ def streaming_peer_serving_published(
             state["version"] = v
         emit(state["serve"](batch_df), batch_id)
 
-    writer = prospects_stream.writeStream.foreachBatch(_serve).outputMode(
-        "update"
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start_foreach(prospects_stream, _serve, checkpoint_dir)
 
 
 def streaming_ann_serving(
@@ -582,9 +579,4 @@ def streaming_ann_serving(
         )
         emit(topk, batch_id)
 
-    writer = queries_stream.writeStream.foreachBatch(_serve).outputMode(
-        "update"
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start_foreach(queries_stream, _serve, checkpoint_dir)

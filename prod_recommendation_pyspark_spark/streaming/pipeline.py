@@ -73,6 +73,15 @@ def stage_landing_dir(src_path: str, landing_dir: str) -> str:
     return landing_dir
 
 
+def scratch_dir(prefix: str) -> str:
+    """A fresh ``tempfile.mkdtemp(prefix=prefix)`` dir, removed at
+    interpreter exit — for artifacts that a lazily read result still
+    needs after the call that wrote them returns."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    return base
+
+
 def replay_stream(frame: DataFrame, key_col: str, start, prefix: str) -> str:
     """Replay a static ``frame`` through a real file stream — the
     harness of the registered streaming replays.  ``frame`` is staged
@@ -83,13 +92,12 @@ def replay_stream(frame: DataFrame, key_col: str, start, prefix: str) -> str:
     is drained (``processAllAvailable``) and stopped even when that
     raises, the landing dir is dropped, and the sink path is returned.
 
-    ``base`` is a ``tempfile.mkdtemp(prefix=prefix)`` dir removed at
-    interpreter exit: the sink must outlive the call, because the
-    caller's read-back is lazy, and the loop may keep a checkpoint or a
-    static artifact there too.  A loop that emits no batch leaves no
-    sink dir, so the caller handles ``not os.path.isdir(out)``."""
-    base = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    ``base`` is a :func:`scratch_dir`: the sink must outlive the call,
+    because the caller's read-back is lazy, and the loop may keep a
+    checkpoint or a static artifact there too.  A loop that emits no
+    batch leaves no sink dir, so the caller handles ``not
+    os.path.isdir(out)``."""
+    base = scratch_dir(prefix)
     landing = f"{base}/landing"
     for i in range(3):  # three part files -> three micro-batches
         frame.filter(F.col(key_col) % 3 == i).coalesce(1).write.mode(

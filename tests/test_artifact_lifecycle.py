@@ -49,17 +49,20 @@ def _ivf_parts(spark):
 
 
 def test_ivf_compact_equals_frozen_rebuild(spark):
-    """``ivf_compact`` (the tombstone anti-join as a rewrite job) must
-    equal ``ivf_index`` over the surviving corpus with the SAME
-    centroids, row for row — assignment is per-row under frozen
-    centroids, so no re-assignment pass is ever needed."""
+    """``drop_tombstoned`` over an IVF artifact (the tombstone
+    anti-join as a rewrite job) must equal ``ivf_index`` over the
+    surviving corpus with the SAME centroids, row for row — assignment
+    is per-row under frozen centroids, so no re-assignment pass is ever
+    needed."""
+    from prod_recommendation_pyspark_spark.operators.relational import (
+        drop_tombstoned,
+    )
     from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_compact,
         ivf_index,
     )
 
     corpus, centroids, index, tombs, _ = _ivf_parts(spark)
-    compacted = ivf_compact(index, tombs, "nbr_id")
+    compacted = drop_tombstoned(index, tombs, "nbr_id")
     kept = corpus.join(F.broadcast(tombs), "nbr_id", "left_anti")
     rebuilt = ivf_index(kept, "nbr_id", "embedding", centroids)
     key = lambda df: {  # noqa: E731
@@ -76,8 +79,10 @@ def test_ivf_tombstone_probe_equals_compacted_probe(spark):
     return exactly what serving off the compacted artifact returns —
     same lists, same scores, same tie order — and no deleted id may
     surface."""
+    from prod_recommendation_pyspark_spark.operators.relational import (
+        drop_tombstoned,
+    )
     from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_compact,
         ivf_probe,
     )
 
@@ -90,7 +95,7 @@ def test_ivf_tombstone_probe_equals_compacted_probe(spark):
         ).collect()
     }
     tomb_served = serve(index, tombs)
-    compact_served = serve(ivf_compact(index, tombs, "nbr_id"), None)
+    compact_served = serve(drop_tombstoned(index, tombs, "nbr_id"), None)
     assert tomb_served == compact_served and len(tomb_served) > 0
     deleted = {r["nbr_id"] for r in tombs.collect()}
     assert not {t[1] for t in tomb_served} & deleted
@@ -102,14 +107,16 @@ def test_ivf_tombstone_probe_equals_compacted_probe(spark):
 
 
 def test_dedup_store_compact_equals_rebuild_and_probe_parity(spark):
-    """``dedup_store_compact`` must equal ``minhash_band_keys`` over
-    the surviving corpus (band keys are per-document), and the
-    tombstone probe must equal the probe of the compacted store —
-    with no deleted id among the candidates."""
+    """``drop_tombstoned`` over a band-key store (its compaction) must
+    equal ``minhash_band_keys`` over the surviving corpus (band keys
+    are per-document), and the tombstone probe must equal the probe of
+    the compacted store — with no deleted id among the candidates."""
     from prod_recommendation_pyspark_spark.operators.dedup import (
-        dedup_store_compact,
         incremental_lsh_candidates,
         minhash_band_keys,
+    )
+    from prod_recommendation_pyspark_spark.operators.relational import (
+        drop_tombstoned,
     )
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -118,7 +125,7 @@ def test_dedup_store_compact_equals_rebuild_and_probe_parity(spark):
     tombs = corpus.filter(F.col("doc_id") % 7 == 2).select("doc_id")
 
     store = minhash_band_keys(corpus, "doc_id", "text")
-    compacted = dedup_store_compact(store, tombs, "doc_id")
+    compacted = drop_tombstoned(store, tombs, "doc_id")
     kept = corpus.join(F.broadcast(tombs), "doc_id", "left_anti")
     rebuilt = minhash_band_keys(kept, "doc_id", "text")
     key = lambda df: {  # noqa: E731
@@ -548,14 +555,16 @@ def test_rank_window_compact_equals_rebuild_property(spark, mod, rem):
 def test_ivf_compact_equals_rebuild_property(spark, mod, rem):
     """The IVF anti-join-is-the-rebuild equality under any modulus
     deletion set (frozen centroids), empty sets included."""
+    from prod_recommendation_pyspark_spark.operators.relational import (
+        drop_tombstoned,
+    )
     from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_compact,
         ivf_index,
     )
 
     corpus, centroids, index, _, _ = _ivf_parts(spark)
     tombs = corpus.filter(F.col("nbr_id") % mod == rem).select("nbr_id")
-    compacted = ivf_compact(index, tombs, "nbr_id")
+    compacted = drop_tombstoned(index, tombs, "nbr_id")
     kept = corpus.join(F.broadcast(tombs), "nbr_id", "left_anti")
     rebuilt = ivf_index(kept, "nbr_id", "embedding", centroids)
     key = lambda df: {  # noqa: E731

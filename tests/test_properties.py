@@ -5,7 +5,7 @@ the value is edge-case generation, not volume)."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -183,36 +183,44 @@ def test_wav_decode_normalization_roundtrip(samples):
         max_size=6,
     )
 )
-def test_minhash_signatures_matches_hof_form(spark, texts):
-    """The aggregate-form ``minhash_signatures`` must be bit-identical
-    to the HOF column form ``minhash_signature`` for any corpus — same
-    hash family, same min semantics (duplicate shingles idempotent)."""
+@example(texts=["ab", "ab cd", "ab cd ab", "cd ab cd ab a"])
+def test_minhash_band_keys_match_streaming_row_path(spark, texts):
+    """The two paths that must produce COLLIDING band keys in
+    production: the stored index (``minhash_band_keys`` — posexplode
+    shingles, then ``min(xxhash64(h, i))`` aggregates) and the
+    streaming per-row path (``band_key_structs`` over the HOF
+    ``minhash_signature`` of ``xxhash64(word_shingles)``, as
+    ``streaming_incremental_dedup`` bands an arriving doc).  Any
+    corpus, docs shorter than the shingle width included, must give
+    identical ``(doc, band, key)`` rows — else a streamed doc never
+    meets its stored near-duplicate."""
     from prod_recommendation_pyspark_spark.operators.dedup import (
+        band_key_structs,
+        minhash_band_keys,
         minhash_signature,
-        minhash_signatures,
         word_shingles,
     )
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    hashed = df.select(
-        "doc_id",
-        F.transform(
-            word_shingles(F.col("text"), 3), lambda s: F.xxhash64(s)
-        ).alias("__hs"),
-    )
-    hof = {
-        r["doc_id"]: r["sig"]
-        for r in hashed.select(
-            "doc_id", minhash_signature(F.col("__hs"), 16).alias("sig")
+    stored = {
+        (r["doc_id"], r["band"], r["key"])
+        for r in minhash_band_keys(
+            df, "doc_id", "text", max_bucket=None
         ).collect()
     }
-    agg = {
-        r["doc_id"]: r["__sig"]
-        for r in minhash_signatures(hashed, "doc_id", "__hs", 16).collect()
+    hashed = F.transform(
+        word_shingles(F.col("text"), 3), lambda s: F.xxhash64(s)
+    )
+    streamed = {
+        (r["doc_id"], r["bk"]["band"], r["bk"]["key"])
+        for r in df.withColumn("__sig", minhash_signature(hashed, 64))
+        .select("doc_id", F.explode(band_key_structs("__sig", 16, 4)).alias("bk"))
+        .collect()
     }
-    assert hof == agg
+    assert stored == streamed
+    assert len(stored) == 16 * len(texts)
 
 
 @EXAMPLES

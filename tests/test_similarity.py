@@ -138,16 +138,12 @@ def test_ann_ivf_recall_vs_brute_force(spark):
 def test_auto_blocking_matches_single_block(spark):
     """Auto-sized blocking (forced small cap => multiple blocks) must
     return exactly the single-block kernel result."""
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        cosine_topk_auto,
-    )
-
     norm = _normalized(spark)
     left = norm.select(F.col("vec_id").alias("tgt_id"), "vec")
     right = norm.select(F.col("vec_id").alias("nbr_id"), "vec")
     single = cosine_topk(left, right, "tgt_id", "nbr_id", "vec", k=5, exclude_self=True)
     # tiny cap: 64-dim doubles = 512 B/row; cap at 8 KiB => ~16 rows/block
-    auto = cosine_topk_auto(
+    auto = cosine_topk(
         left, right, "tgt_id", "nbr_id", "vec", k=5, exclude_self=True,
         max_block_bytes=8 * 1024,
     )
