@@ -25,7 +25,6 @@ def pagerank(
     dst_col: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    checkpoint_every: int = 0,
     round_each: int | None = 10,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list; returns
@@ -55,11 +54,10 @@ def pagerank(
     Scale shape at 100 TB: the edge list shuffles ONCE onto src
     (re-used every iteration via the join key), ranks are |V| rows —
     broadcastable until the graph is billions of nodes, after which
-    AQE switches to shuffle-hash on the same keys.  For deep
-    iteration counts pass ``checkpoint_every`` (e.g. 5) to
-    ``localCheckpoint`` the rank table and cut the growing lineage —
-    the same guard ``connected_components`` uses; at 3 unrollable
-    iterations it is unnecessary.
+    AQE switches to shuffle-hash on the same keys.  The result is
+    ``localCheckpoint``ed once, after the last iteration; at the 3
+    unrollable iterations the callers run, the lineage needs no
+    mid-loop cut.
     """
     from pyspark import StorageLevel
 
@@ -84,7 +82,7 @@ def pagerank(
     ranks = nodes.crossJoin(F.broadcast(n_df)).select(
         "node", (F.lit(1.0) / F.col("__n")).alias("rank")
     )
-    for i in range(iterations):
+    for _ in range(iterations):
         contribs = (
             e.join(ranks, e["src"] == ranks["node"])
             .join(deg, "src")
@@ -108,8 +106,6 @@ def pagerank(
             .join(contribs, "node", "left")
             .select("node", new_rank.alias("rank"))
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
     # Materialize the result (|V| rows of (node, rank) — bounded), then
     # release the loop-invariant caches: without this, every pagerank
     # call in a long-lived session (bench sweeps, 147-query oracle
@@ -126,7 +122,6 @@ def label_propagation(
     src_col: str = "src",
     dst_col: str = "dst",
     iterations: int = 3,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007) over a directed edge list; returns ``(node, label)`` for
@@ -148,8 +143,8 @@ def label_propagation(
     round) + ONE keyed aggregation — the argmax label is
     ``max(struct(cnt, -label))``, a partial-aggregatable expression,
     so there is no per-node window and no second shuffle.  Labels are
-    |V| rows.  For deep iteration counts, ``checkpoint_every`` cuts
-    the growing lineage exactly as in ``pagerank``."""
+    |V| rows, ``localCheckpoint``ed once at the end as in
+    ``pagerank``."""
     from pyspark import StorageLevel
 
     e = edges.select(
@@ -162,7 +157,7 @@ def label_propagation(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     labels = nodes.select("node", F.col("node").alias("label"))
-    for i in range(iterations):
+    for _ in range(iterations):
         best = (
             e.join(labels, e["src"] == labels["node"])
             .groupBy(F.col("dst").alias("node"), "label")
@@ -185,8 +180,6 @@ def label_propagation(
                 F.coalesce("new_label", "label").alias("label"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=False)
     labels = labels.localCheckpoint(eager=True)
     for cached in (e, nodes):
         cached.unpersist()

@@ -18,7 +18,9 @@ Two exact scorers and one candidate family, with identical semantics:
   left id leave the worker.  This is the 100 TB path: two bounded
   shuffles, zero driver transit — neither the reference's
   driver-collected closure lists (:538-549) nor a driver-relayed
-  broadcast of the right side.
+  broadcast of the right side.  Grid planner and cogroup body are
+  ``similarity.plan_grid`` / ``similarity._blocked_topk``, shared with
+  ``cosine_topk``; only the per-chunk hybrid scorer lives here.
 * the WINDOW-INDEX family + ``hybrid_topk_pruned(candidates=...)`` —
   the LINEAR-candidate production path (round 9): per-NAICS-level
   sorted-neighborhood candidates, exact scoring on candidates only.
@@ -54,10 +56,7 @@ from prod_recommendation_pyspark_spark.operators.relational import (
 )
 from prod_recommendation_pyspark_spark.operators.similarity import (
     DEFAULT_MAX_BLOCK_BYTES,
-    _chunks_for,
-    _grid_shape,
-    _probe_geometry,
-    _replicate_grid,
+    _blocked_topk,
     hyperplane_signature,
     probe_dim,
     random_hyperplane_tables,
@@ -150,6 +149,10 @@ def hybrid_topk_crossjoin(
 #: (chunk × m) grids (cosine, prefix depth, haversine) a worker holds.
 LEFT_CHUNK = 512
 
+#: Aux bytes per row riding on each vector (naics bytes + 2 doubles +
+#: id) in the kernel's grid sizing.
+AUX_ROW_BYTES = 40
+
 
 def hybrid_topk(
     left: DataFrame,
@@ -165,29 +168,28 @@ def hybrid_topk(
     w_hops: float = DEFAULT_W_HOPS,
     w_havs: float = DEFAULT_W_HAVS,
     n_blocks: int | None = None,
-    block_mod_col: str | None = None,
     max_block_bytes: int = DEFAULT_MAX_BLOCK_BYTES,
     n_left_chunks: int | None = None,
 ) -> DataFrame:
-    """Blocked-broadcast hybrid top-K.  :data:`LEFT_CHUNK` bounds the
-    per-chunk (chunk × m) score grids so worker memory stays flat
-    regardless of Arrow batch size.
+    """Blocked hybrid top-K: ``similarity._blocked_topk`` (the
+    cogrouped block product ``cosine_topk`` runs too) with the hybrid
+    per-chunk scorer.  :data:`LEFT_CHUNK` bounds the per-chunk
+    (chunk × m) score grids so worker memory stays flat regardless of
+    Arrow batch size.
 
     ``n_blocks=None`` / ``n_left_chunks=None`` (default) pick the grid
-    shape from both sides' memory geometry + cluster parallelism
-    (``similarity._grid_shape``: bounded per-task memory,
-    ~parallelism cells, approx-minimal shuffle volume; probed with
-    two tiny uncached jobs per side).  The grid is realized as a cogrouped block
-    product (``similarity._replicate_grid``): left rows hash into
-    ``n_left_chunks`` chunks replicated across right blocks, right
-    rows pmod into ``n_blocks`` blocks (on ``block_mod_col``, default
-    ``right_id``; pmod so signed xxhash64-style keys are not dropped)
-    replicated across left chunks — the reference's MIN_BATCH loop
+    shape from the sides' memory geometry + cluster parallelism
+    (``similarity.plan_grid``: bounded per-task memory, ~parallelism
+    cells, approx-minimal shuffle volume; each side it needs is probed
+    with two tiny uncached jobs — a pinned ``n_left_chunks`` probes
+    only the right side, a pinned ``n_blocks`` only the left).  Left
+    rows hash into ``n_left_chunks`` chunks replicated across right
+    blocks, right rows pmod into ``n_blocks`` blocks on ``right_id``
+    (pmod so signed xxhash64-style keys are not dropped) replicated
+    across left chunks — the reference's MIN_BATCH loop
     (search_ranking_peers.py:489-494,606) re-expressed as one
     shuffle-native job with NO driver collect/broadcast; exact for
     any grid shape (blocks > 1 re-ranked by one windowed top-K)."""
-    spark = left.sparkSession
-    mod_col = block_mod_col or right_id
     w_cos = 1.0 - w_hops - w_havs
     # fresh side-specific aliases: see _replicate_grid's contract
     lhs = left.select(
@@ -203,53 +205,9 @@ def hybrid_topk(
         F.col(naics_col).alias("__rnaics"),
         F.col(lat_col).alias("__rlat"),
         F.col(lon_col).alias("__rlon"),
-        F.col(mod_col).alias("__rmod"),
     )
-    if n_blocks is None and n_left_chunks is not None:
-        # caller pinned the chunk count (e.g. the window-derivation
-        # calibration, whose sample is one chunk by construction):
-        # only the RIGHT side's geometry is needed — memory floor
-        # b_min plus enough blocks to fill the cluster at the pinned
-        # chunk count, capped at the row count (same utilization rule
-        # as _grid_shape, minus the left probe's two jobs)
-        r_rows, r_bytes = _probe_geometry(rhs, "__rvec", row_overhead=40)
-        par = spark.sparkContext.defaultParallelism
-        b_min = max(1, -(-r_bytes // max_block_bytes))
-        n_blocks = max(b_min, -(-par // max(1, n_left_chunks)))
-        n_blocks = min(n_blocks, max(b_min, r_rows or 1))
-    elif n_blocks is None or n_left_chunks is None:
-        # ~40 B/row of aux (naics bytes + 2 doubles + id) rides on
-        # each vector; probe jobs are tiny (count + limit-1 dim) and
-        # cache nothing — see similarity._probe_geometry
-        l_rows, l_bytes = _probe_geometry(lhs, "__lvec", row_overhead=40)
-        r_rows, r_bytes = _probe_geometry(rhs, "__rvec", row_overhead=40)
-        par = spark.sparkContext.defaultParallelism
-        auto_b, auto_c = _grid_shape(
-            l_rows, l_bytes, r_rows, r_bytes, par, max_block_bytes
-        )
-        if n_blocks is None:
-            n_blocks = auto_b
-        if n_left_chunks is None:
-            if n_blocks == auto_b:
-                n_left_chunks = auto_c
-            else:
-                n_left_chunks = _chunks_for(
-                    n_blocks, l_rows, l_bytes, par, max_block_bytes
-                )
-    lrep, rrep = _replicate_grid(lhs, rhs, "__lid", "__rmod", n_blocks, n_left_chunks)
 
-    def kernel(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                left_id: pd.Series(dtype="int64"),
-                right_id: pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
-        if l.empty or r.empty:
-            return empty
-        ids = r["__rid"].to_numpy(dtype=np.int64)
-        mat_t = np.array(r["__rvec"].tolist(), dtype=np.float64).T  # (d, m)
+    def block_scorer(r: pd.DataFrame, ids: np.ndarray):
         rn_str = [(x or "") for x in r["__rnaics"].tolist()]
         # 6-byte-truncated codes packed into big-endian uint64 (first
         # byte most significant, zero-padded): prefix-p equality is
@@ -260,23 +218,12 @@ def hybrid_topk(
         rn64 = (
             np.array(rn_str, dtype="S6").astype("S8").view(">u8").reshape(-1)
         )
-        rnlen = np.array([len(x) for x in rn_str])
-        rlat = r["__rlat"].to_numpy(dtype=np.float64)
-        rlon = r["__rlon"].to_numpy(dtype=np.float64)
+        r_bad = np.array([len(x) for x in rn_str]) != 6
+        rlat_r = np.radians(r["__rlat"].to_numpy(dtype=np.float64))
+        rlon_r = np.radians(r["__rlon"].to_numpy(dtype=np.float64))
         m = ids.shape[0]
-        kk = min(k, m)
-        rlat_r, rlon_r = np.radians(rlat), np.radians(rlon)
-        r_bad = rnlen != 6
-        lids_all = l["__lid"].to_numpy()
-        outs = []
-        for s in range(0, len(l), LEFT_CHUNK):
-            chunk = l.iloc[s : s + LEFT_CHUNK]
-            lids = lids_all[s : s + LEFT_CHUNK]
-            # densify per chunk, not whole-group: peak extra memory is
-            # one (LEFT_CHUNK × d) float64 block + the prefix tensor
-            lvec = np.array(chunk["__lvec"].tolist(), dtype=np.float64)
-            cos = lvec @ mat_t  # (b, m)
 
+        def score(chunk, lids, cos):
             # NAICS hops: shared-prefix depth as Σ_p 1[first p bytes
             # equal] over p = 1..6 (prefix-p equality implies every
             # shorter prefix, so the sum IS the depth) — 6 flat (b, m)
@@ -317,40 +264,14 @@ def hybrid_topk(
             dist = 2 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(a))
             havs = 1.0 - dist / HALF_EARTH_KM
             havs = np.where(np.isnan(havs), 0.5, havs)
+            return w_cos * cos + w_hops * hops + w_havs * havs
 
-            score = w_cos * cos + w_hops * hops + w_havs * havs
-            if kk < m:
-                part = np.argpartition(-score, kk - 1, axis=1)[:, :kk]
-            else:
-                part = np.broadcast_to(np.arange(m), (score.shape[0], m)).copy()
-            # vectorized emit (no per-row Python loop): order each
-            # row by (score desc, right_id asc), then one mask
-            sc = np.take_along_axis(score, part, axis=1)  # (b, kk)
-            cid = ids[part]
-            order = np.lexsort((cid, -sc), axis=-1)
-            sc = np.take_along_axis(sc, order, axis=1)
-            cid = np.take_along_axis(cid, order, axis=1)
-            keep = sc >= threshold  # NaN fails, dropped
-            lrows = np.broadcast_to(lids[:, None], sc.shape)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        left_id: lrows[keep].astype("int64"),
-                        right_id: cid[keep].astype("int64"),
-                        "score": sc[keep].astype("float64"),
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True) if outs else empty
+        return score
 
-    out = (
-        lrep.groupBy("__lc", "__rb")
-        .cogroup(rrep.groupBy("__lc", "__rb"))
-        .applyInPandas(kernel, schema=f"{left_id} long, {right_id} long, score double")
+    return _blocked_topk(
+        lhs, rhs, left_id, right_id, k, threshold, n_blocks, n_left_chunks,
+        max_block_bytes, AUX_ROW_BYTES, LEFT_CHUNK, block_scorer,
     )
-    if n_blocks <= 1:
-        return out
-    return windowed_topk(out, left_id, [F.col("score").desc(), F.col(right_id)], k)
 
 
 #: NAICS-arm skew guard: right rows per (prefix-block × sub-block) task

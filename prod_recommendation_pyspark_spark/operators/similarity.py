@@ -16,13 +16,19 @@ Spark-first re-design:
   hash into chunks, right rows pmod into blocks, both sides replicate
   onto the (chunk × block) grid through ordinary shuffles, and each
   cogroup task runs one BLAS matmul + exact ``argpartition`` top-K —
-  only ``k`` candidates per left row ever leave the Python worker;
+  only ``k`` candidates per left row ever leave the Python worker.
+  One body (``_blocked_topk``) serves both exact kernels: plain cosine
+  here (``cosine_topk``) and the hybrid blend in ``operators/hybrid.py``
+  (``hybrid_topk``) differ only in their side projections and a
+  per-chunk scorer;
 * nothing transits the driver: no ``collect()``, no
   ``sc.broadcast`` — on a 1000-executor cluster blocks move
   executor→executor through the shuffle service; total shuffle
   volume is left×n_blocks + right×n_chunks bytes, and the grid
   shape is chosen to (approximately) minimize that subject to
-  per-task memory caps and cluster parallelism (``_grid_shape``);
+  per-task memory caps and cluster parallelism — one planner,
+  ``plan_grid``, for both kernels and for ``run_peer_search``, which
+  feeds it the row counts it already holds;
 * per-block top-K unions are re-ranked with one windowed top-K —
   the reference's MIN_BATCH loop (:489-494,606) generalized.
 
@@ -334,33 +340,26 @@ def probe_dim(
     )
 
 
-def _auto_n_blocks(
-    right: DataFrame,
-    vec_col: str,
-    max_block_bytes: int,
-    bytes_per_elem: int = 8,
-    row_overhead: int = 0,
-) -> int:
-    """Block count from the right side's memory geometry: one tiny
-    aggregate (count + dim) sizes the blocks so each stays under
-    ``max_block_bytes`` regardless of input size — the reference's
-    manual MIN_BATCH knob (search_ranking_peers.py:606) made
-    automatic."""
-    _, block_bytes = _probe_geometry(right, vec_col, bytes_per_elem, row_overhead)
-    return int(max(1, -(-block_bytes // max_block_bytes)))
-
-
-def _grid_shape(
-    l_rows: int,
-    l_bytes: int,
-    r_rows: int,
-    r_bytes: int,
+def plan_grid(
+    left: tuple[int, int] | None,
+    right: tuple[int, int] | None,
     parallelism: int,
-    max_block_bytes: int,
+    max_block_bytes: int = DEFAULT_MAX_BLOCK_BYTES,
+    n_blocks: int | None = None,
+    n_left_chunks: int | None = None,
 ) -> tuple[int, int]:
-    """Pick (n_blocks, n_left_chunks) for the cogrouped block product.
+    """The grid shape ``(n_blocks, n_left_chunks)`` of the cogrouped
+    block product, from each side's ``(rows, bytes)`` geometry —
+    probed (``_probe_geometry``) or already known to the caller — and
+    whatever the caller pinned.
 
-    Constraints, in priority order:
+    A side's geometry is read only when its own count is free: the
+    left geometry sizes the left chunks, the right geometry the right
+    blocks.  So a pinned ``n_left_chunks`` needs only ``right``, a
+    pinned ``n_blocks`` only ``left``, both pinned neither; pass None
+    for a side that is not needed (and skip its probe jobs).
+
+    With both counts free, the constraints are, in priority order:
 
     1. memory — each right block ≤ ``max_block_bytes`` and each left
        chunk ≤ ``max_block_bytes`` (one cogroup task materializes one
@@ -376,70 +375,76 @@ def _grid_shape(
        replicating the whole right side once per *core* on a large
        cluster).
 
-    Chunk counts are additionally capped at the side's row count —
-    more chunks than rows only makes empty groups."""
-    b_min = max(1, -(-r_bytes // max_block_bytes))
-    if l_bytes > 0 and r_bytes > 0:
-        b_opt = math.sqrt(parallelism * r_bytes / l_bytes)
-    else:
-        b_opt = 1.0
-    n_blocks = max(b_min, math.ceil(b_opt))
-    # B > P buys no utilization (n_chunks ≥ 1 already fills the grid)
-    # and only over-replicates the left side — clamp at parallelism
-    n_blocks = min(n_blocks, max(b_min, parallelism))
-    n_blocks = min(n_blocks, max(b_min, r_rows or 1))
-    return n_blocks, _chunks_for(n_blocks, l_rows, l_bytes, parallelism, max_block_bytes)
+    With one count pinned, the other follows ``_chunks_for``: memory
+    floor, enough cells to fill the cluster, capped at its side's row
+    count (more chunks than rows only makes empty groups)."""
+    if n_blocks is None and n_left_chunks is None:
+        (l_rows, l_bytes), (r_rows, r_bytes) = left, right
+        b_min = max(1, -(-r_bytes // max_block_bytes))
+        if l_bytes > 0 and r_bytes > 0:
+            b_opt = math.sqrt(parallelism * r_bytes / l_bytes)
+        else:
+            b_opt = 1.0
+        n_blocks = max(b_min, math.ceil(b_opt))
+        # B > P buys no utilization (n_chunks ≥ 1 already fills the
+        # grid) and only over-replicates the left side — clamp at P
+        n_blocks = min(n_blocks, max(b_min, parallelism))
+        n_blocks = min(n_blocks, max(b_min, r_rows or 1))
+    elif n_blocks is None:
+        # the left count is pinned (e.g. the window-derivation
+        # calibration, whose sample is one chunk by construction):
+        # blocks follow the chunk rule with the sides swapped
+        n_blocks = _chunks_for(n_left_chunks, *right, parallelism, max_block_bytes)
+    if n_left_chunks is None:
+        n_left_chunks = _chunks_for(n_blocks, *left, parallelism, max_block_bytes)
+    return n_blocks, n_left_chunks
 
 
 def _chunks_for(
-    n_blocks: int,
-    l_rows: int,
-    l_bytes: int,
+    other: int,
+    rows: int,
+    nbytes: int,
     parallelism: int,
     max_block_bytes: int,
 ) -> int:
-    """Left-chunk count for a FIXED ``n_blocks`` (also the tail of
-    ``_grid_shape``): memory floor, enough grid cells to fill the
-    cluster, capped at the left row count (more chunks than rows only
-    makes empty groups)."""
-    c_min = max(1, -(-l_bytes // max_block_bytes))
-    n_chunks = max(c_min, -(-parallelism // n_blocks))
-    return min(n_chunks, max(c_min, l_rows or 1))
+    """One side's split count when the other side's count is ``other``:
+    memory floor, enough grid cells to fill the cluster, capped at the
+    side's row count (more splits than rows only makes empty groups)."""
+    c_min = max(1, -(-nbytes // max_block_bytes))
+    n = max(c_min, -(-parallelism // other))
+    return min(n, max(c_min, rows or 1))
 
 
 def _replicate_grid(
     left: DataFrame,
     right: DataFrame,
-    chunk_key: str,
-    block_key: str,
     n_blocks: int,
     n_left_chunks: int,
 ) -> tuple[DataFrame, DataFrame]:
     """Tag + replicate both sides onto the (left-chunk × right-block)
     grid for a cogrouped block matmul: each left row goes to its hash
-    chunk ``__lc`` (xxhash64 of ``chunk_key``) replicated across all
+    chunk ``__lc`` (xxhash64 of ``__lid``) replicated across all
     ``n_blocks`` right blocks; each right row goes to its pmod block
-    ``__rb`` (of ``block_key``) replicated across all
-    ``n_left_chunks`` left chunks.  Shuffle volume is
-    left×n_blocks + right×n_left_chunks bytes (minimal for a dense
-    blocked product only when the grid shape is chosen well — see
-    ``_grid_shape``) and NOTHING ever transits the driver — the
-    round-2 kernels collected every right block to the driver and
-    re-broadcast it from there, serializing the whole right side
-    through one NIC.
+    ``__rb`` (of ``__rid``) replicated across all ``n_left_chunks``
+    left chunks.  Shuffle volume is left×n_blocks +
+    right×n_left_chunks bytes (minimal for a dense blocked product
+    only when the grid shape is chosen well — see ``plan_grid``) and
+    NOTHING ever transits the driver — the round-2 kernels collected
+    every right block to the driver and re-broadcast it from there,
+    serializing the whole right side through one NIC.
 
     Callers must project the two sides onto DISJOINT column names
     first (fresh aliases): a self-cogroup where both children share
     an attribute silently drops the duplicated column from the right
     group (Spark dedups the conflicting exprId)."""
-    chunk_of = F.pmod(F.xxhash64(F.col(chunk_key)), F.lit(n_left_chunks)).cast("int")
+    chunk_of = F.pmod(F.xxhash64(F.col("__lid")), F.lit(n_left_chunks)).cast("int")
     # pmod (not %): Spark's % keeps the dividend's sign, so signed
     # block keys (e.g. xxhash64 ids) would match NO block in
     # 0..n_blocks-1 and be silently dropped.  Null keys land in
     # block 0 (pmod(null) is null, which would likewise vanish).
     block_of = (
         F.coalesce(
-            F.pmod(F.col(block_key).cast("long"), F.lit(n_blocks)), F.lit(0)
+            F.pmod(F.col("__rid").cast("long"), F.lit(n_blocks)), F.lit(0)
         ).cast("int")
     )
     lrep = left.withColumn("__lc", chunk_of).withColumn(
@@ -451,76 +456,45 @@ def _replicate_grid(
     return lrep, rrep
 
 
-#: rows per in-kernel left slice — bounds the (slice × m) score tensor
-KERNEL_CHUNK_ROWS = 4096
-
-
-def cosine_topk(
-    left: DataFrame,
-    right: DataFrame,
+def _blocked_topk(
+    lhs: DataFrame,
+    rhs: DataFrame,
     left_id: str,
     right_id: str,
-    vec_col: str = "vec",
-    k: int = 10,
-    threshold: float | None = None,
-    exclude_self: bool = False,
-    n_blocks: int | None = None,
-    block_mod_col: str | None = None,
-    max_block_bytes: int = DEFAULT_MAX_BLOCK_BYTES,
-    n_left_chunks: int | None = None,
+    k: int,
+    threshold: float,
+    n_blocks: int | None,
+    n_left_chunks: int | None,
+    max_block_bytes: int,
+    row_overhead: int,
+    chunk_rows: int,
+    block_scorer,
 ) -> DataFrame:
-    """Blocked cosine top-K (the scale path) as a cogrouped block
-    matrix product — fully executor-side.
+    """The blocked top-K body ``cosine_topk`` and ``hybrid_topk`` share.
 
-    The (left-chunk × right-block) grid is realized with two shuffles
-    (left replicated ``n_blocks``×, right replicated
-    ``n_left_chunks``×); each cogroup task runs one BLAS matmul per
-    ≤``KERNEL_CHUNK_ROWS`` left slice and emits exact per-row top-k
-    within its block; blocks > 1 are re-ranked with one windowed
-    top-K.  No ``collect()``/driver broadcast anywhere — at 1000
-    executors every block moves executor→executor through the
-    shuffle, never through the driver's NIC.
-
-    ``n_blocks=None`` / ``n_left_chunks=None`` (default) pick the grid
-    shape from BOTH sides' memory geometry (two tiny jobs per side —
-    a column-pruned count and a limit-1 dim scan; nothing persisted,
-    so callers with expensive upstream plans should cache their
-    inputs): each cogroup task holds ≤ ``max_block_bytes`` per side,
-    the grid has ~cluster parallelism cells, and the shuffle volume
-    ``L·n_blocks + R·n_left_chunks`` is approximately minimized
-    (``_grid_shape``).
-    Inputs must be L2-normalized ``array<float|double>``; results are
-    exact for any grid shape.
-    """
-    spark = left.sparkSession
-    mod_col = block_mod_col or right_id
-    thr = -math.inf if threshold is None else threshold
-    # fresh side-specific aliases: see _replicate_grid's contract
-    lhs = left.select(
-        F.col(left_id).alias("__lid"), F.col(vec_col).alias("__lvec")
+    ``lhs``/``rhs`` are the side projections: ``__lid``/``__lvec`` and
+    ``__rid``/``__rvec`` plus whatever the scorer reads.  The grid is
+    sized by ``plan_grid`` (probing only the sides it needs, with
+    ``row_overhead`` aux bytes per row), both sides are replicated
+    onto it, and each cogroup task densifies its right block once and
+    runs ``block_scorer(r, ids)`` — the per-block right-side
+    precompute — which returns ``score(chunk, lids, cos)``: the
+    per-chunk (chunk × m) score grid from the ≤``chunk_rows`` left
+    slice and its BLAS cosine.  Exact per-row top-k (``argpartition``
+    then a (score desc, right id asc) sort) is emitted where
+    ``score >= threshold`` (NaN fails, dropped); blocks > 1 are
+    re-ranked by one windowed top-K."""
+    n_blocks, n_left_chunks = plan_grid(
+        None if n_left_chunks is not None
+        else _probe_geometry(lhs, "__lvec", row_overhead=row_overhead),
+        None if n_blocks is not None
+        else _probe_geometry(rhs, "__rvec", row_overhead=row_overhead),
+        lhs.sparkSession.sparkContext.defaultParallelism,
+        max_block_bytes,
+        n_blocks,
+        n_left_chunks,
     )
-    rhs = right.select(
-        F.col(right_id).alias("__rid"),
-        F.col(vec_col).alias("__rvec"),
-        F.col(mod_col).alias("__rmod"),
-    )
-    if n_blocks is None or n_left_chunks is None:
-        l_rows, l_bytes = _probe_geometry(lhs, "__lvec")
-        r_rows, r_bytes = _probe_geometry(rhs, "__rvec")
-        par = spark.sparkContext.defaultParallelism
-        auto_b, auto_c = _grid_shape(
-            l_rows, l_bytes, r_rows, r_bytes, par, max_block_bytes
-        )
-        if n_blocks is None:
-            n_blocks = auto_b
-        if n_left_chunks is None:
-            if n_blocks == auto_b:
-                n_left_chunks = auto_c
-            else:  # caller pinned n_blocks: chunks adapt to it
-                n_left_chunks = _chunks_for(
-                    n_blocks, l_rows, l_bytes, par, max_block_bytes
-                )
-    lrep, rrep = _replicate_grid(lhs, rhs, "__lid", "__rmod", n_blocks, n_left_chunks)
+    lrep, rrep = _replicate_grid(lhs, rhs, n_blocks, n_left_chunks)
 
     def kernel(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -534,21 +508,18 @@ def cosine_topk(
             return empty
         ids = r["__rid"].to_numpy(dtype=np.int64)
         mat_t = np.array(r["__rvec"].tolist(), dtype=np.float64).T  # (d, m)
+        score = block_scorer(r, ids)
         m = ids.shape[0]
         kk = min(k, m)
         lids_all = l["__lid"].to_numpy()
         outs = []
-        for s in range(0, len(l), KERNEL_CHUNK_ROWS):
-            lids = lids_all[s : s + KERNEL_CHUNK_ROWS]
+        for s in range(0, len(l), chunk_rows):
+            chunk = l.iloc[s : s + chunk_rows]
+            lids = lids_all[s : s + chunk_rows]
             # densify per slice, not whole-group: peak extra memory is
-            # one (KERNEL_CHUNK_ROWS × d) float64 block
-            lvec = np.array(
-                l["__lvec"].iloc[s : s + KERNEL_CHUNK_ROWS].tolist(),
-                dtype=np.float64,
-            )
-            scores = lvec @ mat_t  # one BLAS call
-            if exclude_self:
-                scores[lids[:, None] == ids[None, :]] = -np.inf
+            # one (chunk_rows × d) float64 block + the scorer's grids
+            lvec = np.array(chunk["__lvec"].tolist(), dtype=np.float64)
+            scores = score(chunk, lids, lvec @ mat_t)  # one BLAS call
             # exact top-k per row: argpartition O(m), then sort k items
             if kk < m:
                 part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
@@ -561,7 +532,7 @@ def cosine_topk(
             order = np.lexsort((cid, -sc), axis=-1)
             sc = np.take_along_axis(sc, order, axis=1)
             cid = np.take_along_axis(cid, order, axis=1)
-            keep = (sc >= thr) & (sc != -np.inf)  # NaN fails >=, dropped
+            keep = sc >= threshold  # NaN fails >=, dropped
             lrows = np.broadcast_to(lids[:, None], sc.shape)
             outs.append(
                 pd.DataFrame(
@@ -584,6 +555,74 @@ def cosine_topk(
         # the kernel's per-row top-k is already global
         return out
     return windowed_topk(out, left_id, [F.col("score").desc(), F.col(right_id)], k)
+
+
+#: rows per in-kernel left slice — bounds the (slice × m) score tensor
+KERNEL_CHUNK_ROWS = 4096
+
+#: the smallest finite double: ``cosine_topk``'s score floor, below
+#: which only the -inf of an excluded self-pair (and NaN) falls
+_FINITE_FLOOR = -np.finfo(np.float64).max
+
+
+def cosine_topk(
+    left: DataFrame,
+    right: DataFrame,
+    left_id: str,
+    right_id: str,
+    vec_col: str = "vec",
+    k: int = 10,
+    threshold: float | None = None,
+    exclude_self: bool = False,
+    n_blocks: int | None = None,
+    max_block_bytes: int = DEFAULT_MAX_BLOCK_BYTES,
+) -> DataFrame:
+    """Blocked cosine top-K (the scale path) as a cogrouped block
+    matrix product — fully executor-side (``_blocked_topk``).
+
+    The (left-chunk × right-block) grid is realized with two shuffles
+    (left replicated ``n_blocks``×, right replicated
+    ``n_left_chunks``×); each cogroup task runs one BLAS matmul per
+    ≤``KERNEL_CHUNK_ROWS`` left slice and emits exact per-row top-k
+    within its block; blocks > 1 are re-ranked with one windowed
+    top-K.  No ``collect()``/driver broadcast anywhere — at 1000
+    executors every block moves executor→executor through the
+    shuffle, never through the driver's NIC.
+
+    ``n_blocks=None`` (default) picks the grid shape from BOTH sides'
+    memory geometry (two tiny jobs per side — a column-pruned count
+    and a limit-1 dim scan; nothing persisted, so callers with
+    expensive upstream plans should cache their inputs); a pinned
+    ``n_blocks`` probes only the left side (``plan_grid``).  Each
+    cogroup task holds ≤ ``max_block_bytes`` per side, the grid has
+    ~cluster parallelism cells, and the shuffle volume
+    ``L·n_blocks + R·n_left_chunks`` is approximately minimized.
+    Inputs must be L2-normalized ``array<float|double>``; results are
+    exact for any grid shape.
+    """
+    # fresh side-specific aliases: see _replicate_grid's contract
+    lhs = left.select(
+        F.col(left_id).alias("__lid"), F.col(vec_col).alias("__lvec")
+    )
+    rhs = right.select(
+        F.col(right_id).alias("__rid"),
+        F.col(vec_col).alias("__rvec"),
+    )
+
+    def block_scorer(r: pd.DataFrame, ids: np.ndarray):
+        def score(chunk, lids, cos):
+            if exclude_self:
+                cos[lids[:, None] == ids[None, :]] = -np.inf
+            return cos
+
+        return score
+
+    return _blocked_topk(
+        lhs, rhs, left_id, right_id, k,
+        # -inf (an excluded self-pair) is dropped at any threshold
+        _FINITE_FLOOR if threshold is None else max(threshold, _FINITE_FLOOR),
+        n_blocks, None, max_block_bytes, 0, KERNEL_CHUNK_ROWS, block_scorer,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1113,7 +1152,7 @@ def ivf_compact_rewrite(
     Mechanics: one semi-join finds the affected list ids (broadcast
     tombstones against the artifact — partition-pruned to nothing on
     the unaffected side by the later filter), the surviving rows of
-    those lists are rewritten under
+    those lists (``drop_tombstoned``) are rewritten under
     ``spark.sql.sources.partitionOverwriteMode=dynamic`` (only
     partitions present in the written data are replaced), and lists
     whose EVERY row was deleted — which dynamic overwrite cannot
@@ -1142,10 +1181,11 @@ def ivf_compact_rewrite(
     rewrite is never resolvable) at the cost of rewriting every list,
     not just the affected ones."""
     artifact = spark.read.parquet(path)
-    tomb = F.broadcast(tombstones.select(corpus_id))
     affected = [
         r[0]
-        for r in artifact.join(tomb, corpus_id, "left_semi")
+        for r in artifact.join(
+            F.broadcast(tombstones.select(corpus_id)), corpus_id, "left_semi"
+        )
         .select(list_col)
         .distinct()
         .collect()
@@ -1157,11 +1197,9 @@ def ivf_compact_rewrite(
     # materializing the surviving rows of the affected lists first
     # severs the lineage, and the materialized size is bounded by the
     # affected lists, not the artifact.
-    kept = (
-        artifact.filter(F.col(list_col).isin(affected))
-        .join(tomb, corpus_id, "left_anti")
-        .localCheckpoint()
-    )
+    kept = drop_tombstoned(
+        artifact.filter(F.col(list_col).isin(affected)), tombstones, corpus_id
+    ).localCheckpoint()
     survivors = {
         r[0]
         for r in kept.select(list_col).distinct().collect()

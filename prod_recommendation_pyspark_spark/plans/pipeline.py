@@ -28,12 +28,18 @@ from prod_recommendation_pyspark_spark.features.scaling import (
     log10_floor,
     min_max_scale,
 )
-from prod_recommendation_pyspark_spark.operators.hybrid import hybrid_topk
+from prod_recommendation_pyspark_spark.operators.hybrid import (
+    AUX_ROW_BYTES,
+    hybrid_topk,
+)
 from prod_recommendation_pyspark_spark.operators.relational import (
     dedup_first_by_key,
     rename_with_prefix,
 )
-from prod_recommendation_pyspark_spark.operators.similarity import l2_normalize
+from prod_recommendation_pyspark_spark.operators.similarity import (
+    l2_normalize,
+    plan_grid,
+)
 from prod_recommendation_pyspark_spark.recommender.als import (
     ALSConfig,
     recommend_topn,
@@ -134,12 +140,6 @@ def run_peer_search(
     left = feats.filter(F.col("__side") == "t")
     right = feats.filter(F.col("__side") == "s")
 
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        DEFAULT_MAX_BLOCK_BYTES,
-        _chunks_for,
-        _grid_shape,
-    )
-
     # One cheap grouped count sizes the whole grid — run it whether or
     # not n_blocks is pinned, so hybrid_topk never falls back to its
     # own geometry probe (which would re-execute the 4-branch feature
@@ -151,22 +151,13 @@ def run_peer_search(
         .collect()
     }
     l_rows, r_rows = counts.get("t", 0), counts.get("s", 0)
-    row_bytes = dim * 8 + 40  # vector + naics/lat/lon/id aux
-    par = spark.sparkContext.defaultParallelism
-    if cfg.n_blocks is None:
-        n_blocks, n_left_chunks = _grid_shape(
-            l_rows,
-            l_rows * row_bytes,
-            r_rows,
-            r_rows * row_bytes,
-            par,
-            DEFAULT_MAX_BLOCK_BYTES,
-        )
-    else:
-        n_blocks = cfg.n_blocks
-        n_left_chunks = _chunks_for(
-            n_blocks, l_rows, l_rows * row_bytes, par, DEFAULT_MAX_BLOCK_BYTES
-        )
+    row_bytes = dim * 8 + AUX_ROW_BYTES
+    n_blocks, n_left_chunks = plan_grid(
+        (l_rows, l_rows * row_bytes),
+        (r_rows, r_rows * row_bytes),
+        spark.sparkContext.defaultParallelism,
+        n_blocks=cfg.n_blocks,
+    )
 
     def pair_id():
         if cfg.id_col is not None:

@@ -1101,6 +1101,46 @@ def q15_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- The customer↔supplier trade graph the three graph queries walk ----------
+def _trade_graph_sql(min_lines: int | None = None) -> str:
+    """Oracle twin of :func:`_trade_edges`: the ``pairs``, ``edges``
+    and ``nodes`` CTEs (no leading ``WITH``, no trailing comma)."""
+    distinct, having = ("DISTINCT ", "") if min_lines is None else (
+        "", f" GROUP BY 1, 2 HAVING count(*) >= {min_lines}"
+    )
+    return f"""pairs AS (
+        SELECT {distinct}o_custkey AS c, l_suppkey + 1000000 AS s
+        FROM orders JOIN lineitem ON o_orderkey = l_orderkey{having}),
+    edges AS (SELECT c AS src, s AS dst FROM pairs
+              UNION ALL SELECT s AS src, c AS dst FROM pairs),
+    nodes AS (SELECT DISTINCT src AS node FROM edges
+              UNION SELECT DISTINCT dst FROM edges)"""
+
+
+def _trade_edges(cat: Catalog, min_lines: int | None = None) -> DataFrame:
+    """The bidirectional customer↔supplier trade graph: an edge each
+    way per distinct (customer, supplier) pair that ever traded —
+    only pairs with ≥ ``min_lines`` line items when given — supplier
+    ids offset by 1,000,000 into their own key space."""
+    trades = cat.table("orders").join(
+        cat.table("lineitem"), F.col("o_orderkey") == F.col("l_orderkey")
+    )
+    c = F.col("o_custkey").alias("c")
+    s = (F.col("l_suppkey") + F.lit(1000000)).alias("s")
+    if min_lines is None:
+        pairs = trades.select(c, s).distinct()
+    else:
+        pairs = (
+            trades.groupBy(c, s)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") >= min_lines)
+            .select("c", "s")
+        )
+    return pairs.select(
+        F.col("c").alias("src"), F.col("s").alias("dst")
+    ).union(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
+
+
 # --- Iterative graph: PageRank over the customer↔supplier trade graph -------
 def _pr_iter_sql(k: int) -> str:
     """One unrolled PageRank step (mirrors operators/graph.py::pagerank
@@ -1124,13 +1164,7 @@ def _pr_iter_sql(k: int) -> str:
 @register(
     "pagerank_trade_graph",
     sql=f"""
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000 AS s
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-    edges AS (SELECT c AS src, s AS dst FROM pairs
-              UNION ALL SELECT s AS src, c AS dst FROM pairs),
-    nodes AS (SELECT DISTINCT src AS node FROM edges
-              UNION SELECT DISTINCT dst FROM edges),
+    WITH {_trade_graph_sql()},
     nn AS (SELECT count(*) AS n FROM nodes),
     deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
     r0 AS (SELECT node, 1.0 / nn.n AS rank FROM nodes CROSS JOIN nn),
@@ -1153,25 +1187,10 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection.
 
     Scale: each iteration is one shuffle of the edge list keyed by
-    src + one by dst; ranks stay broadcastable until |V| ~ billions;
-    ``checkpoint_every`` caps lineage for deep iteration counts."""
+    src + one by dst; ranks stay broadcastable until |V| ~ billions."""
     from prod_recommendation_pyspark_spark.operators.graph import pagerank
 
-    cat = Catalog(spark, sf_dir)
-    pairs = (
-        cat.table("orders")
-        .join(
-            cat.table("lineitem"), F.col("o_orderkey") == F.col("l_orderkey")
-        )
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + F.lit(1000000)).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(
-        F.col("c").alias("src"), F.col("s").alias("dst")
-    ).union(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
+    edges = _trade_edges(Catalog(spark, sf_dir))
     pr = pagerank(edges, iterations=3, damping=0.5, round_each=10)
     return pr.orderBy(F.col("rank").desc(), "node").limit(50)
 
@@ -2286,15 +2305,7 @@ def _lpa_iter_sql(k: int) -> str:
 @register(
     "label_propagation_communities",
     sql=f"""
-    WITH pairs AS (
-        SELECT o_custkey AS c, l_suppkey + 1000000 AS s
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        GROUP BY 1, 2
-        HAVING count(*) >= 2),
-    edges AS (SELECT c AS src, s AS dst FROM pairs
-              UNION ALL SELECT s AS src, c AS dst FROM pairs),
-    nodes AS (SELECT DISTINCT src AS node FROM edges
-              UNION SELECT DISTINCT dst FROM edges),
+    WITH {_trade_graph_sql(min_lines=2)},
     l0 AS (SELECT node, node AS label FROM nodes),
     {_lpa_iter_sql(1)},
     {_lpa_iter_sql(2)},
@@ -2331,23 +2342,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
         label_propagation,
     )
 
-    cat = Catalog(spark, sf_dir)
-    pairs = (
-        cat.table("orders")
-        .join(
-            cat.table("lineitem"), F.col("o_orderkey") == F.col("l_orderkey")
-        )
-        .groupBy(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + F.lit(1000000)).alias("s"),
-        )
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("c", "s")
-    )
-    edges = pairs.select(
-        F.col("c").alias("src"), F.col("s").alias("dst")
-    ).union(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
+    edges = _trade_edges(Catalog(spark, sf_dir), min_lines=2)
     labels = label_propagation(edges, iterations=3)
     return (
         labels.groupBy(F.col("label").alias("community"))
@@ -2731,13 +2726,7 @@ def _ppr_iter_sql(k: int) -> str:
 @register(
     "personalized_pagerank_trade",
     sql=f"""
-    WITH pairs AS (
-        SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000 AS s
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-    edges AS (SELECT c AS src, s AS dst FROM pairs
-              UNION ALL SELECT s AS src, c AS dst FROM pairs),
-    nodes AS (SELECT DISTINCT src AS node FROM edges
-              UNION SELECT DISTINCT dst FROM edges),
+    WITH {_trade_graph_sql()},
     base AS (SELECT node, node <= 10 AS is_seed FROM nodes),
     ns AS (SELECT count(*) AS n FROM base WHERE is_seed),
     deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
@@ -2770,21 +2759,7 @@ def personalized_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         personalized_pagerank,
     )
 
-    cat = Catalog(spark, sf_dir)
-    pairs = (
-        cat.table("orders")
-        .join(
-            cat.table("lineitem"), F.col("o_orderkey") == F.col("l_orderkey")
-        )
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + F.lit(1000000)).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(
-        F.col("c").alias("src"), F.col("s").alias("dst")
-    ).union(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
+    edges = _trade_edges(Catalog(spark, sf_dir))
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
