@@ -36,7 +36,10 @@ def haversine_score(
 ) -> Column:
     """D5 — ``1 - distance/20020``; any null coordinate → 0.5
     (the reference's missing-geo neutral score,
-    search_ranking_peers.py:249-250)."""
+    search_ranking_peers.py:249-250).  A NaN score (a NaN coordinate)
+    is missing geo too, as in the blocked kernel
+    (``np.where(np.isnan(havs), 0.5, havs)``), so every route scores a
+    pair alike."""
     score = 1.0 - haversine_km(lat1, lon1, lat2, lon2) / HALF_EARTH_KM
     any_null = lat1.isNull() | lon1.isNull() | lat2.isNull() | lon2.isNull()
-    return F.when(any_null, F.lit(0.5)).otherwise(score)
+    return F.when(any_null, F.lit(0.5)).otherwise(F.nanvl(score, F.lit(0.5)))

@@ -190,6 +190,12 @@ def hybrid_topk(
     (search_ranking_peers.py:489-494,606) re-expressed as one
     shuffle-native job with NO driver collect/broadcast; exact for
     any grid shape (blocks > 1 re-ranked by one windowed top-K)."""
+    if left_id == right_id:
+        # the output carries both ids as columns
+        raise ValueError(
+            f"hybrid_topk: left_id {left_id!r} and right_id {right_id!r} "
+            "must differ; rename one side's id column"
+        )
     w_cos = 1.0 - w_hops - w_havs
     # fresh side-specific aliases: see _replicate_grid's contract
     lhs = left.select(

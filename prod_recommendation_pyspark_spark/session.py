@@ -23,6 +23,13 @@ Scale notes
   joins (application side ≥ ~10 GB), cutting shuffle input before the
   join.  It never fires at local test sizes — dimension joins there
   are broadcast anyway — so no local override is needed or useful.
+* Spark's generated-code cache (``spark.sql.codegen.cache.maxEntries``,
+  default 100) is sized to the engine's working set
+  (:data:`CODEGEN_CACHE_ENTRIES`).  A warm server re-runs the same
+  plans cycle after cycle; one intraday cycle alone needs more than
+  100 generated classes, so at the default every cycle evicts and
+  recompiles its own classes with Janino, then runs them interpreted
+  until the JIT catches up again.
 """
 
 from __future__ import annotations
@@ -30,6 +37,23 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Entries of Spark's generated-code cache (a static conf: it sizes the
+#: JVM-wide cache at its first use, so it is set before getOrCreate).  Rule:
+#: at least 2x the largest working set measured, so that a warm session
+#: never recompiles a plan it has run before.  Working sets, counted as
+#: Janino compiles (``CodegenMetrics``) in perfbench on 4 cores:
+#:
+#: * intraday serving cycle (insert, compact, delete, batch and trickle
+#:   probe): 128-134 classes, every one recompiled in every warm cycle
+#:   at Spark's default of 100 (0.86-1.01 s of Janino per cycle); 0 once
+#:   the cache holds them;
+#: * intraday set-up (build, publish, one warm run of each op): 179-201;
+#: * nightly pass (its eight ops): 495 distinct classes (an unbounded
+#:   cache), in 583-586 compiles at the default.
+#:
+#: 2 x 495 rounds up to 1000.  Override through ``extra_conf``.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -68,6 +92,7 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Measured (bench.py A/B, sf0.1): a 32g heap makes the ALS
         # query 2.6x SLOWER in-bench than 8g (10.7s vs 28s — bigger
         # heap => rarer but massive GC pauses landing on MLlib's

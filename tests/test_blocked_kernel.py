@@ -7,7 +7,8 @@ test) on the edges of its scorer: malformed and NULL NAICS codes, NULL
 coordinates, a NaN vector component, ties cut by the top-k boundary and
 a threshold that drops pairs.  The vectors are dyadic (components 0,
 ±0.5, 1), so every dot product is exact and tied rows tie bit for bit
-in both paths.
+in both paths.  A NaN coordinate is missing geo on the kernel, the
+crossjoin and the probe route's scorer alike.
 
 Second half: the plan-build jobs of the grid planner.  A side is probed
 only when its own split count is free, so each pinned count saves
@@ -19,6 +20,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from prod_recommendation_pyspark_spark.operators.hybrid import (
+    DEFAULT_W_HAVS,
+    DEFAULT_W_HOPS,
+    _score_topk,
     hybrid_topk,
     hybrid_topk_crossjoin,
 )
@@ -99,6 +103,35 @@ def test_hybrid_kernel_equals_crossjoin(spark, n_blocks):
     base = hybrid_topk_crossjoin(left, right, "tgt", "src", **kw)
     got = _scored(kern)
     assert got and got == _scored(base)
+
+
+def test_nan_coordinate_is_missing_geo_on_every_route(spark):
+    """A NaN latitude scores as missing geo (haversine 0.5) on the
+    kernel, on the crossjoin and on the probe route's scorer, so all
+    three keep both pairs."""
+    left = spark.createDataFrame(
+        [(1, "521110", E1, NAN, -70.0)], SCHEMA
+    ).withColumnRenamed("id", "tgt")
+    right = spark.createDataFrame(
+        [(101, "521110", E1, 40.0, -70.0), (102, "521199", E2, None, None)],
+        SCHEMA,
+    ).withColumnRenamed("id", "src")
+    pairs = left.select("tgt").crossJoin(right.select("src"))
+    kern = _scored(hybrid_topk(left, right, "tgt", "src"))
+    cross = _scored(hybrid_topk_crossjoin(left, right, "tgt", "src"))
+    probe = _scored(_score_topk(
+        left, right, pairs, "tgt", "src", "vec", "naics", "lat", "lon",
+        k=15, threshold=0.0, w_hops=DEFAULT_W_HOPS, w_havs=DEFAULT_W_HAVS,
+        dim=4, broadcast_sides=False,
+    ))
+    assert kern == cross == probe == [(1, 101, 0.9995), (1, 102, 0.2399)]
+
+
+def test_hybrid_topk_rejects_a_shared_id_column(spark):
+    left, right = _sides(spark)
+    with pytest.raises(ValueError, match="'id' and right_id 'id'"):
+        hybrid_topk(left.withColumnRenamed("tgt", "id"),
+                    right.withColumnRenamed("src", "id"), "id", "id")
 
 
 # ---------------------------------------------------------------------

@@ -217,6 +217,24 @@ def test_projection_window_dispatch_rule(spark):
     assert stats["window"] >= max(64, 2 * (stats["max_needed"] or 0))
 
 
+def test_fulldim_topk_routes_without_deriving(spark, sf_dir, duck, monkeypatch):
+    """The window floor already loses to the kernel at this corpus
+    size, so the production full-dim query answers (equal to its
+    oracle) without deriving a window."""
+    from prod_recommendation_pyspark_spark.operators import hybrid
+    from prod_recommendation_pyspark_spark.queries import ORACLES, QUERIES
+    from prod_recommendation_pyspark_spark.queries import similarity
+    from tests.oracle_util import assert_matches_oracle
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("derived a window")
+
+    monkeypatch.setattr(hybrid, "derive_projection_window_stats", refuse)
+    monkeypatch.setattr(similarity, "_DERIVED_WINDOW_CACHE", {})
+    name = "peer_search_fulldim_topk"
+    assert_matches_oracle(QUERIES[name](spark, sf_dir), duck, ORACLES[name])
+
+
 def test_emptied_projection_artifact_compact_insert_graceful(spark):
     """Round-15 advice pin: an EMPTIED __dir artifact (every client
     tombstoned) must not brick the CRUD cells.  (a) compact degrades
